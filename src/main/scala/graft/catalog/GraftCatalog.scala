@@ -5,7 +5,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
@@ -111,6 +111,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     require(wh != null && wh.nonEmpty,
       s"spark.sql.catalog.$name.warehouse must be set to the warehouse root path")
     warehouse = new Path(wh)
+    GraftSqlBridge.registerOptimization(spark, graft.sources.GraftScanInlining)
   }
 
   override def name(): String = catalogName
@@ -576,9 +577,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // table INSIDE another table (same hazard as createTable's guard)
     if (namespaceInsideTable(newIdent.namespace()))
       throw new NoSuchNamespaceException(newIdent.namespace())
+    val oldKey = tablePath(oldIdent).toString
     // safe for Delta tables: add.path entries are table-root-relative, and
     // an external slot carries only its pointer file
     require(fs.rename(from, to), s"rename $from -> $to failed")
+    // both paths leave the cache, as in dropTable: fs.rename keeps the
+    // moved log's mtimes, so an entry left at `to` would pass the freshness
+    // guard and could serve the table that used to live there
+    cacheDrop(oldKey)
+    cacheDrop(to.toString)
   }
 
   // ---- namespaces ----

@@ -5,18 +5,19 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{And => CAnd, EqualNullSafe => CEqualNullSafe, EqualTo => CEqualTo, Expression, GreaterThan => CGreaterThan, GreaterThanOrEqual => CGreaterThanOrEqual, In => CIn, IsNotNull => CIsNotNull, IsNull => CIsNull, LessThan => CLessThan, LessThanOrEqual => CLessThanOrEqual, Literal, Not => CNot, Or => COr}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.read.{Scan => V2Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan => V2Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsOverwrite, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.sources.{AlwaysFalse, AlwaysTrue, BaseRelation, Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.kernel.Snapshot
-import graft.sources.GraftDeltaRelation
+import graft.sources.GraftScan
 import graft.table.DeltaTable
 
 /**
@@ -25,11 +26,12 @@ import graft.table.DeltaTable
  * `DELETE FROM`/`TRUNCATE`/CTAS/time travel) works through `spark.sql`
  * with no library API calls.
  *
- * Reads and writes bridge to the v1 relation code path via the public
- * `V1Scan`/`V1Write` connector interfaces (the same bridge Spark's own
- * JDBC v2 source uses): pruning, stats skipping, DV masks and the commit
- * protocol all run through the exact code the `format("graft-delta")`
- * path already exercises — one implementation, two front doors.
+ * Reads are planned by the library's own scan: `newScanBuilder` yields a
+ * [[GraftScan]] of the pushed-down columns, and the `GraftScanInlining`
+ * optimizer rule (registered by [[GraftCatalog]]) replaces it with the
+ * pruned `Scan.readFiles` plan, so Spark plans its native parquet file scan
+ * with the query's filters and real file-size statistics. Writes bridge to
+ * `DeltaTable.write` through the public `V1Write` connector interface.
  */
 class GraftTable(
     spark: SparkSession,
@@ -69,52 +71,22 @@ class GraftTable(
       TableCapability.TRUNCATE,
       TableCapability.OVERWRITE_BY_FILTER)
 
-  // ---- read: DSv2 pushdown → v1 pruned scan ----
+  // ---- read: column pruning here, the scan itself is GraftScanInlining's ----
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(snapshot)
-
-  private class GraftScanBuilder(snap: Snapshot) extends ScanBuilder
-      with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-    private var required: StructType = snap.schema
-    private var pushed: Array[Filter] = Array.empty
-
-    /** All filters are kept as post-scan residuals (we prune with them but
-      * never claim exact handling — same contract as GraftDeltaRelation). */
-    override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-      pushed = filters
-      filters
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val snap = snapshot
+    new ScanBuilder with SupportsPushDownRequiredColumns {
+      private var required: StructType = snap.schema
+      override def pruneColumns(requiredSchema: StructType): Unit = {
+        // keep the requested top-level set but restore each column's full
+        // table type: Spark's nested schema pruning may request s:struct<y>
+        // only, while the library scan produces the whole struct — field
+        // ordinals bound against the pruned type would read the wrong field
+        required = StructType(
+          requiredSchema.fieldNames.flatMap(n => snap.schema.find(_.name == n)))
+      }
+      override def build(): V2Scan = GraftScan(snap, required)
     }
-    override def pushedFilters(): Array[Filter] = pushed
-
-    override def pruneColumns(requiredSchema: StructType): Unit = {
-      // the V1 bridge reads whole TOP-LEVEL columns: keep the requested
-      // top-level set but restore each column's full table type — Spark's
-      // nested schema pruning may request s:struct<y> only, and declaring
-      // that schema over a scan that produces the full struct fails row
-      // encoding (EXPRESSION_ENCODING_FAILED) on every struct-field query
-      required = StructType(
-        requiredSchema.fieldNames.flatMap(n => snap.schema.find(_.name == n)))
-    }
-
-    override def build(): V2Scan = new V1Scan {
-      override def readSchema(): StructType = required
-      override def toV1TableScan[T <: BaseRelation with TableScan](
-          context: SQLContext): T =
-        new PrunedRelation(context, snap, required, pushed).asInstanceOf[T]
-    }
-  }
-
-  private class PrunedRelation(
-      ctx: SQLContext,
-      snap: Snapshot,
-      required: StructType,
-      filters: Array[Filter]) extends BaseRelation with TableScan {
-    private val inner = new GraftDeltaRelation(ctx, snap)
-    override def sqlContext: SQLContext = ctx
-    override val schema: StructType = required
-    override def buildScan(): RDD[Row] =
-      inner.buildScan(required.fieldNames, filters)
   }
 
   // ---- write: INSERT INTO (append) / INSERT OVERWRITE (replaceWhere) ----
@@ -172,26 +144,37 @@ class GraftTable(
 
 object GraftTable {
 
-  /** v1 `Filter` conjunction → SQL predicate text, via the shared leaf
-    * translation (Expression.sql renders standard literals: quoted
-    * strings, DATE '...', TIMESTAMP '...'). STRICT, unlike the pruning
-    * translator: `GraftDeltaRelation.toCatalyst` may drop an
-    * untranslatable half of an And (safe when only skipping files, but
-    * predicate-widening — and therefore data-destroying — for DELETE /
-    * replaceWhere), so connectives are handled here and any
-    * untranslatable node fails the whole conversion. */
+  /** v1 `Filter` conjunction → SQL predicate text (Expression.sql renders
+    * standard literals: quoted strings, DATE '...', TIMESTAMP '...').
+    * STRICT: any untranslatable node fails the whole conversion, because
+    * dropping half of an And widens the predicate — data-destroying for
+    * DELETE / replaceWhere. */
   def filtersToSql(filters: Array[Filter]): Option[String] = {
-    import org.apache.spark.sql.sources.{And => FAnd, Not => FNot, Or => FOr}
-    def strict(f: Filter): Option[String] = f match {
-      case AlwaysTrue() => Some("true")
-      case AlwaysFalse() => Some("false")
-      case FAnd(l, r) => for { a <- strict(l); b <- strict(r) } yield s"($a AND $b)"
-      case FOr(l, r) => for { a <- strict(l); b <- strict(r) } yield s"($a OR $b)"
-      case FNot(c) => strict(c).map(p => s"(NOT $p)")
-      case leaf => GraftDeltaRelation.toCatalyst(leaf).map(_.sql)
+    // filter attribute strings are MULTI-PART when nested pushdown is on:
+    // `s.x = 1` on a struct arrives as "s.x" and a top-level column
+    // literally named a.b arrives backtick-quoted as "`a.b`";
+    // parseAttributeName handles both
+    def attr(name: String): Expression =
+      UnresolvedAttribute(UnresolvedAttribute.parseAttributeName(name))
+    def strict(f: Filter): Option[Expression] = f match {
+      case AlwaysTrue() => Some(Literal(true))
+      case AlwaysFalse() => Some(Literal(false))
+      case And(l, r) => for { a <- strict(l); b <- strict(r) } yield CAnd(a, b)
+      case Or(l, r) => for { a <- strict(l); b <- strict(r) } yield COr(a, b)
+      case Not(c) => strict(c).map(CNot)
+      case EqualTo(a, v) => Some(CEqualTo(attr(a), Literal(v)))
+      case EqualNullSafe(a, v) => Some(CEqualNullSafe(attr(a), Literal(v)))
+      case GreaterThan(a, v) => Some(CGreaterThan(attr(a), Literal(v)))
+      case GreaterThanOrEqual(a, v) => Some(CGreaterThanOrEqual(attr(a), Literal(v)))
+      case LessThan(a, v) => Some(CLessThan(attr(a), Literal(v)))
+      case LessThanOrEqual(a, v) => Some(CLessThanOrEqual(attr(a), Literal(v)))
+      case In(a, vs) => Some(CIn(attr(a), vs.toSeq.map(Literal(_))))
+      case IsNull(a) => Some(CIsNull(attr(a)))
+      case IsNotNull(a) => Some(CIsNotNull(attr(a)))
+      case _ => None
     }
     val parts = filters.toSeq.map(strict)
     if (parts.exists(_.isEmpty) || parts.isEmpty) None
-    else Some(parts.flatten.map(p => s"($p)").mkString(" AND "))
+    else Some(parts.flatten.map(p => s"(${p.sql})").mkString(" AND "))
   }
 }

@@ -1,12 +1,15 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SQLContext, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And => CAnd, EqualNullSafe => CEqualNullSafe, EqualTo => CEqualTo, Expression, GreaterThan => CGreaterThan, GreaterThanOrEqual => CGreaterThanOrEqual, In => CIn, IsNotNull => CIsNotNull, IsNull => CIsNull, LessThan => CLessThan, LessThanOrEqual => CLessThanOrEqual, Literal, Not => CNot, Or => COr}
-import org.apache.spark.sql.execution.datasources.DataSourceUtils
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.planning.ScanOperation
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.connector.read.{Batch, Scan => V2Scan}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.StructType
 
 import graft.kernel.{DeltaLog, Snapshot}
@@ -19,99 +22,85 @@ import graft.table.{DeltaTable, Scan}
  * work without touching the library API (python/src/lib.rs exposes the same
  * convenience around open_table/write_deltalake).
  *
- * Reads translate the pushed `sources.Filter`s to Catalyst predicates and
- * run them through the SAME stats/partition file skipping as the library
- * scan (`StatsPruning`), then re-apply them on the pruned parquet read so
- * row-group pushdown still happens; Spark evaluates the originals once more
- * on top (all filters are declared unhandled), which keeps correctness
- * independent of our translation coverage.
+ * The relation has no scan of its own: [[GraftScanInlining]] replaces it,
+ * like the catalog's [[GraftScan]], with the library scan before physical
+ * planning.
  */
 class GraftDeltaRelation(
     override val sqlContext: SQLContext,
-    snapshot: Snapshot) extends BaseRelation with PrunedFilteredScan {
-
-  private def spark: SparkSession = sqlContext.sparkSession
-
+    val snapshot: Snapshot) extends BaseRelation {
   override def schema: StructType = snapshot.schema
+}
 
-  // real table size from the log's per-file sizes: BaseRelation's default
-  // is spark.sql.defaultSizeInBytes (≈ Long.MaxValue), which makes every
-  // graft-delta side of a join "too big to broadcast" — a 2 MB dimension
-  // table would shuffle-join instead of broadcast (delta-spark overrides
-  // this the same way)
-  // cached: on lazy-index snapshots Snapshot.sizeInBytes runs a
-  // distributed stats summary, and the planner asks for relation stats
-  // repeatedly per query (per plan-node copy) — one job, not one per ask.
-  // A truly empty table floors to 1 byte (0 would fall back to the
-  // un-broadcastable default — the exact regression this override fixes);
-  // per-file sizes are required by the protocol, so 0 means empty, not
-  // unknown. Snapshot.sizeInBytes is lazy-index-aware (no driver
-  // materialization at planning time).
-  override lazy val sizeInBytes: Long = math.max(snapshot.sizeInBytes, 1L)
+/** Catalog read of one snapshot's `requiredSchema` columns. It is never
+  * executed: [[GraftScanInlining]] substitutes the library scan for it
+  * during optimization, so a plan that reaches `toBatch` missed the rule —
+  * and fails here instead of reading through a second code path. */
+case class GraftScan(snapshot: Snapshot, requiredSchema: StructType) extends V2Scan {
+  override def readSchema(): StructType = requiredSchema
+  override def toBatch: Batch = throw new IllegalStateException(
+    s"graft scan of ${snapshot.tablePath} reached physical planning: " +
+      "GraftScanInlining is not registered in this session's optimizer")
+}
 
-  // we prune with the filters but never claim them handled
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
+/**
+ * The one read path for SQL over graft tables (delta-rs's
+ * `DeltaTableProvider` shape, `table_provider/next/mod.rs:728-768`): each
+ * catalog scan ([[GraftScan]]) and `format("graft-delta")` relation is
+ * replaced by the analyzed plan of `Scan.readFiles` over the files that
+ * survive stats/partition pruning with the query's own resolved filters.
+ * The outer query then plans Spark's file scan directly — columnar parquet
+ * reads, data-filter pushdown, real file-size statistics for join
+ * selection, one codegen pass — while DV masks, log-sourced partition
+ * values and column mapping keep coming from `Scan.readFiles`.
+ *
+ * Registered once per session (`GraftSqlBridge.registerOptimization`) by
+ * `GraftCatalog.initialize` and `GraftDeltaDataSource`'s batch read; it runs
+ * in the optimizer's last batch, after Spark has pushed the filters and
+ * pruned the columns of the scan it replaces.
+ */
+object GraftScanInlining extends Rule[LogicalPlan] {
 
-  override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    val preds = filters.flatMap(GraftDeltaRelation.toCatalyst)
-    val files = Scan.prunedFiles(snapshot, preds.toSeq, Some(spark))
-    val df0 = Scan.readFiles(spark, snapshot, files)
-    val df1 = preds.foldLeft(df0)((d, p) => d.filter(GraftSqlBridge.column(p)))
-    // single-part attribute resolution: df.col(name) dot-parses, which
-    // breaks top-level columns whose (column-mapped) logical names contain
-    // dots — same construction the filter path uses
-    df1.select(requiredColumns.toSeq.map(c =>
-      GraftSqlBridge.column(UnresolvedAttribute(Seq(c)))): _*).rdd
+  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+    case _: DeleteFromTable => plan // its relation names the target, not a read
+    case _ => plan.transformWithSubqueries {
+      case op @ ScanOperation(_, _, filters, leaf @ GraftLeaf(snap)) =>
+        val read = inline(leaf, snap, filters)
+        op.transformUp { case l if l eq leaf => read }
+    }
+  }
+
+  private object GraftLeaf {
+    def unapply(leaf: LogicalPlan): Option[Snapshot] = leaf match {
+      case r: DataSourceV2ScanRelation => r.scan match {
+        case s: GraftScan => Some(s.snapshot)
+        case _ => None
+      }
+      case r: LogicalRelation => r.relation match {
+        case g: GraftDeltaRelation => Some(g.snapshot)
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
+  /** The pruned library scan, projected to `leaf`'s columns under `leaf`'s
+    * expression ids so the plan above binds to it unchanged. */
+  private def inline(leaf: LogicalPlan, snap: Snapshot, filters: Seq[Expression]): LogicalPlan = {
+    val spark = SparkSession.active
+    // ScanOperation hands over only deterministic filters, and the pruner
+    // fails open on shapes it cannot evaluate; subquery plans stay out of
+    // the predicates the distributed pruner broadcasts
+    val preds = filters.filterNot(SubqueryExpression.hasSubquery)
+    val files = Scan.prunedFiles(snap, preds, Some(spark))
+    if (files.isEmpty) return LocalRelation(leaf.output)
+    val read = Scan.readFiles(spark, snap, files).queryExecution.analyzed
+    val byName = read.output.map(a => a.name -> a).toMap
+    Project(leaf.output.map(a => Alias(byName(a.name), a.name)(a.exprId, a.qualifier)), read)
   }
 }
 
 object GraftDeltaRelation {
-
-  /** sources.Filter → Catalyst, for the stats pruner. Unsupported shapes
-    * return None (they are still evaluated by Spark above the scan). */
-  def toCatalyst(f: Filter): Option[Expression] = translate(f, partialAnd = true)
-
-  /** `partialAnd`: whether a half-translated And may prune alone. TRUE only
-    * outside any Not — Not(And(l, r)) over just one translated conjunct
-    * widens the negation and prunes files the original predicate keeps
-    * (Spark's own translateFilter has the same canPartialPushDownConjuncts
-    * guard). */
-  private def translate(f: Filter, partialAnd: Boolean): Option[Expression] = {
-    // DSv2 filter attribute strings are MULTI-PART when nested pushdown is
-    // on: `s.x = 1` on a struct arrives as the name "s.x" and a top-level
-    // column literally named a.b arrives backtick-quoted as "`a.b`".
-    // parseAttributeName handles both ("s.x" -> Seq(s, x); "`a.b`" ->
-    // Seq(a.b)); a bare Seq(name) made every nested-field predicate an
-    // unresolvable single-part identifier (AnalysisException on SELECT,
-    // broken DELETE WHERE)
-    def attr(name: String): Expression =
-      UnresolvedAttribute(UnresolvedAttribute.parseAttributeName(name))
-    f match {
-      case EqualTo(a, v) => Some(CEqualTo(attr(a), Literal(v)))
-      case EqualNullSafe(a, v) => Some(CEqualNullSafe(attr(a), Literal(v)))
-      case GreaterThan(a, v) => Some(CGreaterThan(attr(a), Literal(v)))
-      case GreaterThanOrEqual(a, v) => Some(CGreaterThanOrEqual(attr(a), Literal(v)))
-      case LessThan(a, v) => Some(CLessThan(attr(a), Literal(v)))
-      case LessThanOrEqual(a, v) => Some(CLessThanOrEqual(attr(a), Literal(v)))
-      case In(a, vs) => Some(CIn(attr(a), vs.toSeq.map(Literal(_))))
-      case IsNull(a) => Some(CIsNull(attr(a)))
-      case IsNotNull(a) => Some(CIsNotNull(attr(a)))
-      case And(l, r) =>
-        (translate(l, partialAnd), translate(r, partialAnd)) match {
-          case (Some(cl), Some(cr)) => Some(CAnd(cl, cr))
-          case (one, other) if partialAnd => one.orElse(other) // halves prune alone
-          case _ => None
-        }
-      case Or(l, r) =>
-        // a partial And inside Or only WIDENS the predicate — safe for
-        // pruning — so the flag passes through (it is already false when
-        // this Or sits under a Not)
-        for { cl <- translate(l, partialAnd); cr <- translate(r, partialAnd) }
-          yield COr(cl, cr)
-      case Not(c) => translate(c, partialAnd = false).map(CNot) // 3VL-safe negation
-      case _ => None
-    }
-  }
 
   /** Case-insensitive option lookup — ONE implementation for the read,
     * write, and streaming paths (local copies had already diverged in name

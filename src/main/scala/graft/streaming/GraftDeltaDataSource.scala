@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SQLContext, SaveMode}
 import org.apache.spark.sql.execution.streaming.{Sink, Source}
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.GraftDeltaRelation
+import graft.sources.{GraftDeltaRelation, GraftScanInlining}
 import graft.table.DeltaTable
 
 /**
@@ -38,10 +38,12 @@ class GraftDeltaDataSource extends DataSourceRegister
     * versionAsOf / timestampAsOf time travel. */
   override def createRelation(
       sqlContext: SQLContext,
-      parameters: Map[String, String]): BaseRelation =
+      parameters: Map[String, String]): BaseRelation = {
+    GraftSqlBridge.registerOptimization(sqlContext.sparkSession, GraftScanInlining)
     new GraftDeltaRelation(sqlContext,
       GraftDeltaRelation.snapshotFor(sqlContext.sparkSession,
         pathOf(parameters), parameters))
+  }
 
   /** Batch write: `df.write.format("graft-delta").mode(...).save(path)`;
     * honors partitionBy, replaceWhere, mergeSchema, overwriteSchema. */

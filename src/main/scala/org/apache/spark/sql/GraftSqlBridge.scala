@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /**
@@ -36,6 +38,16 @@ object GraftSqlBridge {
   def pinnedBatchDataFrame(df: DataFrame): DataFrame = {
     val cs = df.sparkSession.asInstanceOf[classic.SparkSession]
     cs.internalCreateDataFrame(df.queryExecution.toRdd, df.schema, isStreaming = false)
+  }
+
+  /** Adds `rule` to the session's optimizer unless it is already there.
+    * `newSession()` starts from an empty list, so callers register per
+    * session rather than per JVM. */
+  def registerOptimization(spark: SparkSession, rule: Rule[LogicalPlan]): Unit = {
+    val x = spark.asInstanceOf[classic.SparkSession].experimental
+    x.synchronized {
+      if (!x.extraOptimizations.contains(rule)) x.extraOptimizations :+= rule
+    }
   }
 
 }

@@ -97,10 +97,11 @@ class CatalogSpec extends AnyFunSuite {
       sql(s"INSERT INTO graft.bench.parts VALUES ($i, 'v$i')"))
     val pruned = sql("SELECT v FROM graft.bench.parts WHERE p = 2")
     assert(pruned.collect().map(_.getString(0)).toSeq == Seq("v2"))
-    // partition pruning happened before Spark saw the files: only one
-    // parquet file feeds the v1 scan
-    val scans = pruned.queryExecution.executedPlan.collectLeaves()
-    assert(scans.nonEmpty)
+    // partition pruning happened before Spark saw the files: the executed
+    // file scan read one parquet file of the four partitions
+    val scans = CatalogReadSpec.executedNodes(pruned.queryExecution.executedPlan)
+      .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+    assert(scans.map(_.metrics("numFiles").value) == Seq(1L))
   }
 
   test("external LOCATION table: reachable, droppable without data loss") {

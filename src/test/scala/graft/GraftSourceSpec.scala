@@ -325,23 +325,6 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(e.getCause.getMessage.contains("maxFilesPerTrigger must be positive"))
   }
 
-  test("filter translation: partial And is refused under Not, allowed elsewhere") {
-    import org.apache.spark.sql.sources._
-    import graft.sources.GraftDeltaRelation.toCatalyst
-    // supported ∧ unsupported: partial translation fine at top level
-    assert(toCatalyst(And(EqualTo("a", 1), StringStartsWith("b", "x"))).isDefined)
-    // under Not a partial And would WIDEN the negation → must refuse
-    assert(toCatalyst(Not(And(EqualTo("a", 1), StringStartsWith("b", "x")))).isEmpty)
-    // fully-translatable Not(And) still prunes
-    assert(toCatalyst(Not(And(EqualTo("a", 1), EqualTo("b", 2)))).isDefined)
-    // partial And inside a top-level Or only widens → allowed
-    assert(toCatalyst(Or(And(EqualTo("a", 1), StringStartsWith("b", "x")),
-      EqualTo("c", 3))).isDefined)
-    // ...but not when that Or sits under a Not
-    assert(toCatalyst(Not(Or(And(EqualTo("a", 1), StringStartsWith("b", "x")),
-      EqualTo("c", 3)))).isEmpty)
-  }
-
   test("startingVersion tails from a given commit; latest skips history") {
     import spark.implicits._
     val dir = tmpDir()
