@@ -12,6 +12,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.kernel.{DeltaLog, DeltaTableNotFoundException}
 import graft.table.DeltaTable
 
 /**
@@ -232,106 +233,25 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   override def tableExists(ident: Identifier): Boolean =
     slotOccupied(slotPath(ident))
 
-  // ---- snapshot cache (the SELECT-path hot spot) ----
-  // loadTable previously resolved a FRESH DeltaTable per statement: one
-  // Hadoop-conf clone (DeltaLog construction) plus a full log replay
-  // (read + JSON-parse of every commit) per SELECT — ~50-85 ms/table of
-  // pure metadata work on the bench's catalog.load_100 row. Entries are
-  // keyed on the resolved table path and validated per lookup against the
-  // _delta_log LISTING SIGNATURE (name, mtime, length of every log file):
-  // one listing — which any snapshot load must pay anyway — instead of the
-  // whole replay. Staleness rules (each changes the listing, so each
-  // invalidates): a new commit (new %020d.json), a checkpoint publication
-  // (new checkpoint file + _last_checkpoint rewrite), log compaction, log
-  // cleanup (files disappear), DROP + re-CREATE (fresh files with fresh
-  // mtimes). VACUUM is NOT a staleness event by design: it deletes only
-  // unreferenced data files, never a live file a cached snapshot could
-  // serve. On any signature mismatch the entry is REBUILT from scratch
-  // (full replay) rather than incrementally refreshed: DeltaLog.update()
-  // assumes monotonically growing versions, which a DROP + re-CREATE of
-  // the same identifier violates.
-  //
-  // Timestamp-granularity hazard, closed by the FRESHNESS GUARD below: a
-  // scripted DROP + re-CREATE with identical DDL can produce a version-0
-  // commit with the SAME name, SAME byte length (fixed-width GUID +
-  // timestamps) and — within the store's mtime granularity (ms locally,
-  // seconds on some object stores) — the SAME mtime as the file the
-  // entry was cached against, and the signature alone would serve the
-  // dead table's snapshot. An entry is therefore SERVED only when its
-  // newest log mtime is at least SigGraceMs older than the entry's
-  // creation: any later recreate gets mtime >= entry-creation time, so a
-  // colliding signature can only exist inside that window. Entries cached
-  // inside the window act as misses and are re-cached on each load until
-  // the table is old enough — the cost is rebuilds for the first ~2s of a
-  // brand-new table's life, nothing else.
-  //
-  // Bounds: LRU, capped by spark.graft.catalog.snapshotCacheSize (default
-  // 256 tables; <= 0 disables caching), and the DeltaTable is held through
-  // a SoftReference — a snapshot of a large (but under the lazy-index
-  // threshold) table can pin up to ~hundreds of MB of AddFile metadata,
-  // and under heap pressure the GC reclaims entries, degrading to a
-  // rebuild instead of an OOM. (Tables above spark.graft.
-  // lazySnapshotThreshold keep their file index parquet-backed and pin
-  // almost nothing.)
-  private case class CachedTable(
-      sig: Vector[(String, Long, Long)],
-      newestMtime: Long,
-      cachedAtMs: Long,
-      ref: java.lang.ref.SoftReference[DeltaTable]) {
-    def servable: Boolean = newestMtime <= cachedAtMs - GraftCatalog.SigGraceMs
+  // Snapshots are cached by the kernel (see the DeltaLog companion). The
+  // catalog keeps one DeltaLog per table path, so a warm statement does not
+  // clone the Hadoop conf again.
+  private val logs = new java.util.LinkedHashMap[Path, DeltaLog](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Path, DeltaLog]): Boolean =
+      size() > 256
   }
-  private lazy val cacheCap: Int = scala.util.Try(
-    spark.conf.get("spark.graft.catalog.snapshotCacheSize").toInt).getOrElse(256)
-  private val snapshotCache =
-    new java.util.LinkedHashMap[String, CachedTable](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, CachedTable]): Boolean = size() > cacheCap
-    }
-  private def cacheGet(key: String): Option[CachedTable] =
-    snapshotCache.synchronized(Option(snapshotCache.get(key)))
-  private def cachePut(key: String, v: CachedTable): Unit =
-    if (cacheCap > 0) snapshotCache.synchronized(snapshotCache.put(key, v))
-  private def cacheDrop(key: String): Unit =
-    snapshotCache.synchronized(snapshotCache.remove(key))
+  private def logFor(p: Path): DeltaLog =
+    logs.synchronized(logs.computeIfAbsent(p, new DeltaLog(spark, _)))
 
   override def loadTable(ident: Identifier): Table = {
     val p = tablePath(ident)
-    val key = p.toString
-    val cached = cacheGet(key)
-    // freshness listing: reuse the cached DeltaLog when present (its
-    // construction cloned the Hadoop conf once) — a stale entry still
-    // lists through it fine, the table path is identical
-    val cachedTable = cached.flatMap(c => Option(c.ref.get))
-    val log = cachedTable.map(_.deltaLog)
-      .getOrElse(new graft.kernel.DeltaLog(spark, p))
-    val listing = log.store.list(log.logPath)
-    val hasLog = listing.exists(f =>
-      graft.kernel.LogStore.isLogEntry(f.getPath.getName))
-    if (!hasLog) {
-      // not a loadable table (anymore): drop any stale entry, then keep the
-      // pre-cache semantics exactly — missing _delta_log dir fails HERE,
-      // an existing-but-unusable log dir fails on first snapshot use
-      cacheDrop(key)
-      if (!isTableDir(p)) throw new NoSuchTableException(ident)
-      return new GraftTable(spark, ident.toString, p)
-    }
-    val table = if (cacheCap <= 0) {
-      // caching disabled: no signature bookkeeping, one DeltaLog total
-      new DeltaTable(spark, p, log)
-    } else {
-      val sig = listing.iterator
-        .map(f => (f.getPath.getName, f.getModificationTime, f.getLen)).toVector
-      val now = System.currentTimeMillis()
-      cached match {
-        case Some(c) if c.sig == sig && c.servable && cachedTable.isDefined =>
-          cachedTable.get
-        case _ =>
-          val t = new DeltaTable(spark, p, log)
-          val newest = if (sig.isEmpty) Long.MaxValue else sig.map(_._2).max
-          cachePut(key, CachedTable(sig, newest, now,
-            new java.lang.ref.SoftReference(t)))
-          t
-      }
+    val table = new DeltaTable(spark, p, logFor(p))
+    try table.snapshot
+    catch {
+      case _: DeltaTableNotFoundException =>
+        // a missing _delta_log dir fails here, an unusable one on first use
+        if (!isTableDir(p)) throw new NoSuchTableException(ident)
+        return new GraftTable(spark, ident.toString, p)
     }
     new GraftTable(spark, ident.toString, p, preloaded = Some(table))
   }
@@ -557,10 +477,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   override def dropTable(ident: Identifier): Boolean = {
     val slot = slotPath(ident)
     if (!slotOccupied(slot)) false
-    else {
-      cacheDrop(tablePath(ident).toString) // don't pin a dead snapshot
-      fs.delete(slot, true)
-    }
+    else fs.delete(slot, true)
   }
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
@@ -577,15 +494,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // table INSIDE another table (same hazard as createTable's guard)
     if (namespaceInsideTable(newIdent.namespace()))
       throw new NoSuchNamespaceException(newIdent.namespace())
-    val oldKey = tablePath(oldIdent).toString
     // safe for Delta tables: add.path entries are table-root-relative, and
     // an external slot carries only its pointer file
     require(fs.rename(from, to), s"rename $from -> $to failed")
-    // both paths leave the cache, as in dropTable: fs.rename keeps the
-    // moved log's mtimes, so an entry left at `to` would pass the freshness
-    // guard and could serve the table that used to live there
-    cacheDrop(oldKey)
-    cacheDrop(to.toString)
   }
 
   // ---- namespaces ----
@@ -665,13 +576,4 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       fs.delete(dir, true)
     }
   }
-}
-
-object GraftCatalog {
-  /** Snapshot-cache freshness guard (ms): an entry is SERVED only when its
-    * newest log-file mtime is at least this much older than the entry's
-    * creation time, closing the same-tick DROP + re-CREATE signature
-    * collision (see the cache comment in [[GraftCatalog]]). 2s covers
-    * second-granularity object-store timestamps. */
-  private[catalog] val SigGraceMs: Long = 2000L
 }

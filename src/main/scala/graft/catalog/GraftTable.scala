@@ -41,9 +41,8 @@ class GraftTable(
     preloaded: Option[DeltaTable] = None)
   extends Table with SupportsRead with SupportsWrite with SupportsDelete {
 
-  // `preloaded`: the catalog's snapshot cache hands back the DeltaTable it
-  // already validated against the current log listing — re-resolving here
-  // would pay the full log replay the cache exists to skip.
+  // `preloaded`: the DeltaTable the catalog already loaded a snapshot into
+  // for this statement — re-resolving here would pay another log listing.
   private[catalog] lazy val delta: DeltaTable =
     preloaded.getOrElse(DeltaTable.forPath(spark, path.toString))
 

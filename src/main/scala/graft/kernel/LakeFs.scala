@@ -307,7 +307,7 @@ class LakeFsLogStore(val conf: Configuration,
       // logstore.rs:225 "Always delete the transaction branch when done")
       try client.deleteBranch(repo, txn)
       catch { case e: java.io.IOException =>
-        System.err.println(s"[graft-lakefs] leaked transaction branch $txn: $e") }
+        DeltaLog.logger.warn(s"lakeFS: leaked transaction branch $txn", e) }
     }
   }
 

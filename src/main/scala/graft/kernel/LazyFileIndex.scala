@@ -189,10 +189,6 @@ class LazyFileIndex(
         .flatMap(r => rels(r, new Path(tablePathStr))).toDF("rel"))
   }
 
-  /** Back-compat alias: tombstoned DATA+DV rels with ts >= cutoff. */
-  def recentTombstoneRelsDf(cutoffMs: Long, tablePathStr: String): org.apache.spark.sql.DataFrame =
-    tombstoneRelsDf(cutoffMs, recent = true, tablePathStr)
-
   /** Only the Adds below `maxSize` bytes (OPTIMIZE compaction candidates):
     * the size filter runs on executors over the checkpoint parquet, so a
     * mostly-compacted 10M-file table reduces just its small-file minority to

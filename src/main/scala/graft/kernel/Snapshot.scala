@@ -2,7 +2,7 @@ package graft.kernel
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -19,12 +19,14 @@ import org.json4s.jackson.JsonMethods
  * vector (the DV-rewrite shape). Tombstones are retained for VACUUM.
  *
  * Scale note: the file index lives on the driver (same as delta-rs, whose
- * snapshot caches log data in Arrow batches in-process). Checkpoint parquet
- * is read through Spark, so the heavy part of replay on a 100 TB table
- * (millions of Add entries compacted into the checkpoint) is a distributed
- * scan that reduces to the driver index; the JSON tail after the checkpoint
- * is bounded by `delta.checkpointInterval` commits. `addsDF` exposes the
- * index back as a DataFrame so pruning itself can run distributed.
+ * snapshot caches log data in Arrow batches in-process). A full replay reads
+ * the checkpoint through Spark, a distributed scan that reduces to the
+ * driver index, plus a JSON tail bounded by `delta.checkpointInterval`
+ * commits. It runs once per table: [[DeltaLog]] keeps each table's latest
+ * snapshot in a process-wide cache and moves it forward by reading only the
+ * commits written since, as delta-rs moves its `EagerSnapshot`. Above
+ * `spark.graft.lazySnapshotThreshold` checkpoint actions the Add index stays
+ * parquet-backed ([[LazyFileIndex]]) and pruning runs distributed.
  */
 case class Snapshot(
     tablePath: String,
@@ -130,16 +132,26 @@ private[kernel] class ReplayState {
     case _: CheckpointMetadata | _: Sidecar => // checkpoint plumbing only
   }
 
-  def toSnapshot(tablePath: String, version: Long, ts: Long): Snapshot =
-    Snapshot(tablePath, version, protocol, metadata,
+  /** With `lazyParts`, the state holds only the post-checkpoint TAIL and
+    * the checkpoint's file rows stay parquet-backed behind a [[LazyFileIndex]]. */
+  def toSnapshot(tablePath: String, version: Long, ts: Long,
+      lazyParts: Option[(SparkSession, Seq[Path])] = None): Snapshot = lazyParts match {
+    case Some((spark, parts)) =>
+      Snapshot(tablePath, version, protocol, metadata, Vector.empty, Vector.empty,
+        txns.toMap, domains.toMap, ts, Some(new LazyFileIndex(spark, parts,
+          adds.values.toVector, removes.values.toVector)))
+    case None => Snapshot(tablePath, version, protocol, metadata,
       adds.values.toVector, removes.values.toVector, txns.toMap, domains.toMap, ts)
+  }
 }
 
 private[kernel] object ReplayState {
+  /** `prev`'s state; a lazy index contributes only its tail overlay. */
   def from(prev: Snapshot): ReplayState = {
     val s = new ReplayState
-    prev.allFiles.foreach(f => s.adds(f.reconcileKey) = f)
-    prev.tombstones.foreach(r => s.removes(r.reconcileKey) = r)
+    val lazyIdx = prev.lazyIndex.filter(!_.isMaterialized)
+    lazyIdx.fold(prev.allFiles)(_.tailAdds).foreach(f => s.adds(f.reconcileKey) = f)
+    lazyIdx.fold(prev.tombstones)(_.tailRemoves).foreach(r => s.removes(r.reconcileKey) = r)
     s.txns ++= prev.txns
     s.domains ++= prev.domains
     s.protocol = prev.protocol
@@ -189,43 +201,100 @@ class DeltaLog(val spark: SparkSession, val tablePath: Path) {
   }
 
   def readCommit(version: Long): Seq[Action] =
-    store.read(new Path(logPath, LogStore.commitFileName(version)))
-      .flatMap(ActionCodec.fromJson)
+    readCommitLines(version).flatMap(ActionCodec.fromJson)
 
-  /** The `_last_checkpoint` hint, if present. */
+  private def readCommitLines(version: Long): Seq[String] =
+    store.read(new Path(logPath, LogStore.commitFileName(version)))
+
   /** Both hint fields from ONE read of `_delta_log/_last_checkpoint` —
     * separate per-field reads doubled the billable round-trips on object
     * stores for every snapshot load (one per streaming micro-batch). */
   def lastCheckpointVersionAndSize(): (Option[Long], Option[Long]) =
     DeltaLog.lastCheckpointHintOf(store, logPath)
 
-  def lastCheckpointHint(): Option[Long] = lastCheckpointVersionAndSize()._1
+  /** The latest snapshot, from the kernel snapshot cache (companion object). */
+  def snapshot(): Snapshot = cachedSnapshot(None)
 
-  /** The hint's declared action count — decides eager vs lazy file index. */
-  def lastCheckpointSize(): Option[Long] = lastCheckpointVersionAndSize()._2
-
-  def snapshot(): Snapshot = snapshotAt(None)
-
-  def snapshotAt(version: Long): Snapshot = snapshotAt(Some(version))
+  /** The snapshot at `version`: through the cache when `version` is at or
+    * above the cached one, else a full replay that leaves the cache alone. */
+  def snapshotAt(version: Long): Snapshot = cachedSnapshot(Some(version))
 
   /** Metadata-only snapshot: protocol/metadata/txns without materializing
     * the Add index — the BlindDeltaTable fast path (table/blind.rs:1).
     * The checkpoint read prunes to the metaData/protocol/txn columns, so on
     * a million-file table this touches a few KB instead of the full state. */
-  def metadataSnapshot(): Snapshot = snapshotAt(None, withFiles = false)
+  def metadataSnapshot(): Snapshot = replay(store.list(logPath), None, withFiles = false)._1
 
   /** Metadata-only snapshot pinned at `version` — for gates that need the
     * protocol/metadata in effect at a historical version without
     * materializing its Add index (e.g. CDF's enablement-at-range-start
     * check, which was paying a full file-index replay per poll). */
   def metadataSnapshotAt(version: Long): Snapshot =
-    snapshotAt(Some(version), withFiles = false)
+    replay(store.list(logPath), Some(version), withFiles = false)._1
 
-  private def snapshotAt(target: Option[Long], withFiles: Boolean = true): Snapshot = {
-    // ONE listing feeds commit discovery, checkpoint discovery and
-    // compaction discovery — on an object store each extra list is a
-    // billable round-trip, and snapshots are materialized per micro-batch
+  // above this many checkpoint actions the Add index stays a distributed
+  // parquet-backed view (LazyFileIndex) instead of a driver Vector; part of
+  // the cache key, since it decides what a replay builds
+  private def lazyThreshold: Long = spark.conf.getOption("spark.graft.lazySnapshotThreshold")
+    .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(500000L)
+
+  private def cacheKey = DeltaLog.CacheKey(
+    spark.sparkContext.applicationId, tablePath.toString, lazyThreshold)
+
+  private def cachedSnapshot(target: Option[Long]): Snapshot = {
     val listing = store.list(logPath)
+    val key = cacheKey
+    val entry = DeltaLog.cacheGet(key)
+    if (entry.exists(e => target.exists(_ < e.id.version)))
+      return replay(listing, target)._1 // time travel below the cached version
+    val (snap, id, _) = entry.flatMap(validated(_, listing)).map(extend(_, listing, target))
+      .getOrElse(fullReplay(listing, target,
+        if (entry.exists(_.ref.get != null)) "failed check" else "first use"))
+    DeltaLog.install(key, snap, id, entry)
+    snap
+  }
+
+  /** The entry's snapshot when it still describes this log: every log file
+    * a replay to its version could read (commits, checkpoints, compactions)
+    * is listed with the same names, mtimes and lengths, and the commit file
+    * at its version hashes to the stored digest. Store state only, no
+    * clocks: every commit carries a random `txnId`, so a re-created table's
+    * same-named, same-sized commit cannot match. */
+  private def validated(e: DeltaLog.Entry, listing: Seq[FileStatus]): Option[Snapshot] =
+    Option(e.ref.get).filter(_ => signature(listing, e.id.version) == e.id.listed &&
+      scala.util.Try(DeltaLog.digest(readCommitLines(e.id.version))).toOption.contains(e.id.digest))
+
+  private def signature(listing: Seq[FileStatus], v: Long): String =
+    DeltaLog.digest(listing.map(f => (f.getPath.getName, f)).collect {
+      case (n, f) if LogCompaction.info(n).exists(_._2 <= v) || (LogStore.isCommitFile(n) ||
+          LogStore.isCheckpointFile(n)) && LogStore.fileVersion(n) <= v =>
+        s"$n ${f.getModificationTime} ${f.getLen}"
+    })
+
+  private def logId(listing: Seq[FileStatus], v: Long, commitLines: Seq[String]) =
+    DeltaLog.LogId(v, signature(listing, v), DeltaLog.digest(commitLines))
+
+  /** Writes a checkpoint of `snap` and re-signs its cache entry for it. */
+  private[graft] def checkpoint(snap: Snapshot): Unit = {
+    Checkpoints.write(spark, logPath, snap, store)
+    val key = cacheKey
+    DeltaLog.cacheGet(key).filter(_.ref.get eq snap).foreach(e => DeltaLog.install(key, snap,
+      Some(e.id.copy(listed = signature(store.list(logPath), snap.version))), Some(e)))
+  }
+
+  private def fullReplay(listing: Seq[FileStatus], target: Option[Long], reason: String) = {
+    DeltaLog.logger.debug(s"full replay of $tablePath: $reason")
+    val (s, id) = replay(listing, target)
+    (s, id, false)
+  }
+
+  /** Full replay of `listing` up to `target` (default: latest), uncached.
+    * With files, it also returns the log's identity at the target. The
+    * target's commit file is read BEFORE the checkpoint and the tail: a
+    * table swapped mid-replay then leaves a digest its later listings cannot
+    * match, never a stale match. */
+  private def replay(listing: Seq[FileStatus], target: Option[Long],
+      withFiles: Boolean = true): (Snapshot, Option[DeltaLog.LogId]) = {
     val versions = listing.collect {
       case f if LogStore.isCommitFile(f.getPath.getName) =>
         (LogStore.fileVersion(f.getPath.getName), f.getModificationTime)
@@ -246,11 +315,8 @@ class DeltaLog(val spark: SparkSession, val tablePath: Path) {
     val maxV = (versions.map(_._1) ++ latestCp ++ compacted.map(_._2)).max
     val v = target.getOrElse(maxV)
     require(v <= maxV, s"Version $v does not exist yet (latest: $maxV)")
-
-    // above this many checkpoint actions the Add index stays a distributed
-    // parquet-backed view (LazyFileIndex) instead of a driver Vector
-    val lazyThreshold = scala.util.Try(
-      spark.conf.get("spark.graft.lazySnapshotThreshold").toLong).getOrElse(500000L)
+    val idLines =
+      if (withFiles && versions.exists(_._1 == v)) Some(readCommitLines(v)) else None
     var lazyParts: Option[Seq[Path]] = None
 
     /** One USABLE checkpoint instance at `cv`, or None when only an
@@ -349,7 +415,9 @@ class DeltaLog(val spark: SparkSession, val tablePath: Path) {
     }
     base.foreach(applyMaybe)
     replayPlan.foreach {
-      case Left(cv) => readCommit(cv).foreach(applyMaybe)
+      case Left(cv) =>
+        idLines.filter(_ => cv == v).getOrElse(readCommitLines(cv))
+          .flatMap(ActionCodec.fromJson).foreach(applyMaybe)
       case Right(p) =>
         store.read(p).flatMap(ActionCodec.fromJson).foreach(applyMaybe)
     }
@@ -359,17 +427,8 @@ class DeltaLog(val spark: SparkSession, val tablePath: Path) {
     // (delta-rs ProtocolChecker::can_read_from, transaction/protocol.rs:187)
     ProtocolGate.checkRead(state.protocol, state.metadata)
     val ts = versions.find(_._1 == v).map(_._2).getOrElse(0L)
-    lazyParts match {
-      case Some(parts) =>
-        // the replayed state holds only the post-checkpoint TAIL; the
-        // checkpoint's file rows stay parquet-backed behind the index
-        val idx = new LazyFileIndex(spark, parts,
-          state.adds.values.toVector, state.removes.values.toVector)
-        Snapshot(tablePath.toString, v, state.protocol, state.metadata,
-          Vector.empty, Vector.empty, state.txns.toMap, state.domains.toMap,
-          ts, Some(idx))
-      case None => state.toSnapshot(tablePath.toString, v, ts)
-    }
+    val snap = state.toSnapshot(tablePath.toString, v, ts, lazyParts.map((spark, _)))
+    (snap, idLines.map(logId(listing, v, _)))
   }
 
   /** Diagnostic: whether the last [[update]] EXTENDED the cached state
@@ -381,27 +440,47 @@ class DeltaLog(val spark: SparkSession, val tablePath: Path) {
 
   /** Incremental refresh (update_incremental, table/mod.rs:206): replay only
     * the commits after `prev.version` on top of the cached state — O(new
-    * commits), not a full log re-replay, the shape that keeps refresh cheap
-    * on a table with thousands of commits. */
-  def update(prev: Snapshot): Snapshot = {
-    lastUpdateIncremental = false
-    // one listing; `latest` must see compaction-file end versions too, or
-    // a cached handle goes permanently stale once log cleanup removes the
-    // commits a compaction file covers
+    * commits), not a full log re-replay. */
+  def update(prev: Snapshot): Snapshot = update(prev, ownCommit = false)
+
+  /** `ownCommit`: the caller just committed on top of `prev`. If `prev` is
+    * the cached snapshot and the log up to it lists unchanged, the result
+    * moves the cache forward without re-reading `prev`'s commit (a colliding
+    * DROP + re-CREATE under a committing writer already took that commit).
+    * Any other `prev` reaches the cache only through a full replay. */
+  private[graft] def update(prev: Snapshot, ownCommit: Boolean): Snapshot = {
     val listing = store.list(logPath)
+    val key = cacheKey
+    val entry = DeltaLog.cacheGet(key).filter(e => ownCommit && (e.ref.get eq prev))
+    val (next, id, incremental) =
+      if (entry.exists(_.id.listed != signature(listing, prev.version)))
+        fullReplay(listing, None, "failed check")
+      else extend(prev, listing, None)
+    lastUpdateIncremental = incremental
+    if (entry.isDefined || !incremental) DeltaLog.install(key, next, id, entry)
+    next
+  }
+
+  /** `prev` moved forward to `target` (default: the latest version in
+    * `listing`) by replaying only the commits after it; the flag is false
+    * when it fell back to a full replay. No identity when nothing was new. */
+  private def extend(prev: Snapshot, listing: Seq[FileStatus], target: Option[Long])
+      : (Snapshot, Option[DeltaLog.LogId], Boolean) = {
     val versions = listing.collect {
       case f if LogStore.isCommitFile(f.getPath.getName) =>
         (LogStore.fileVersion(f.getPath.getName), f.getModificationTime)
     }
+    // `latest` must see compaction-file end versions too, or a cached
+    // handle goes permanently stale once log cleanup removes the commits a
+    // compaction file covers
     val compEnds = listing.flatMap(f => LogCompaction.info(f.getPath.getName).map(_._2))
-    val latest = (versions.map(_._1) ++ compEnds ++ Seq(-1L)).max
-    if (latest <= prev.version) { lastUpdateIncremental = true; return prev }
-    val newVs = versions.map(_._1).filter(_ > prev.version).sorted
-    val expected = (prev.version + 1) to latest
+    val latest = target.getOrElse((versions.map(_._1) ++ compEnds ++ Seq(-1L)).max)
+    if (latest <= prev.version) return (prev, None, true)
+    val newVs = versions.map(_._1).filter(v => v > prev.version && v <= latest).sorted
     // gap (vacuumed log, or tail only reachable via a compaction file) →
     // full replay, which knows how to substitute compaction files
-    if (newVs != expected) return snapshot()
-
+    if (newVs != ((prev.version + 1) to latest))
+      return fullReplay(listing, Some(latest), "gap")
     // a checkpoint written after prev supersedes the lazy index's parquet
     // backing (and resets the tail) — full reload rebinds to it
     if (prev.lazyIndex.isDefined && listing.exists { f =>
@@ -409,34 +488,19 @@ class DeltaLog(val spark: SparkSession, val tablePath: Path) {
           LogStore.isCheckpointFile(n) && LogStore.fileVersion(n) > prev.version &&
             LogStore.fileVersion(n) <= latest
         })
-      return snapshotAt(latest)
+      return fullReplay(listing, Some(latest), "checkpoint behind a lazy index")
 
-    lastUpdateIncremental = true
-    prev.lazyIndex match {
-      case Some(idx) if !idx.isMaterialized =>
-        // extend the TAIL overlay only — the checkpoint rows stay parquet
-        val state = new ReplayState
-        idx.tailAdds.foreach(f => state.adds(f.reconcileKey) = f)
-        idx.tailRemoves.foreach(r => state.removes(r.reconcileKey) = r)
-        state.txns ++= prev.txns
-        state.domains ++= prev.domains
-        state.protocol = prev.protocol
-        state.metadata = prev.metadata
-        newVs.foreach(cv => readCommit(cv).foreach(state.apply))
-        ProtocolGate.checkRead(state.protocol, state.metadata)
-        val ts = versions.find(_._1 == latest).map(_._2).getOrElse(0L)
-        val newIdx = new LazyFileIndex(spark, idx.checkpointParts,
-          state.adds.values.toVector, state.removes.values.toVector)
-        Snapshot(tablePath.toString, latest, state.protocol, state.metadata,
-          Vector.empty, Vector.empty, state.txns.toMap, state.domains.toMap,
-          ts, Some(newIdx))
-      case _ =>
-        val state = ReplayState.from(prev)
-        newVs.foreach(cv => readCommit(cv).foreach(state.apply))
-        ProtocolGate.checkRead(state.protocol, state.metadata)
-        val ts = versions.find(_._1 == latest).map(_._2).getOrElse(0L)
-        state.toSnapshot(tablePath.toString, latest, ts)
+    val state = ReplayState.from(prev)
+    var lastLines: Seq[String] = Nil
+    newVs.foreach { cv =>
+      lastLines = readCommitLines(cv)
+      lastLines.flatMap(ActionCodec.fromJson).foreach(state.apply)
     }
+    ProtocolGate.checkRead(state.protocol, state.metadata)
+    val ts = versions.find(_._1 == latest).map(_._2).getOrElse(0L)
+    val lazyParts = prev.lazyIndex.filter(!_.isMaterialized).map(i => (spark, i.checkpointParts))
+    (state.toSnapshot(tablePath.toString, latest, ts, lazyParts),
+      Some(logId(listing, latest, lastLines)), true)
   }
 
   /** Time travel by timestamp: last commit with ts ≤ target
@@ -610,7 +674,46 @@ class DeltaLog(val spark: SparkSession, val tablePath: Path) {
   }
 }
 
+/** Holds the kernel snapshot cache: each table's latest snapshot, shared by
+  * every [[DeltaLog]] of the process (catalog statements, `DeltaTable`
+  * handles, writes, streaming sources, post-commit checkpoints). A lookup
+  * lists the log once, validates the entry against that listing, and
+  * extends it with the new commits only; a full replay happens on first use,
+  * across a log gap, on a failed check, or below the cached version.
+  * Entries are LRU-bounded and held through SoftReferences, so heap
+  * pressure degrades an entry to a replay, not an OOM. */
 object DeltaLog {
+  private[kernel] val logger = org.slf4j.LoggerFactory.getLogger("graft.kernel")
+
+  private[kernel] case class CacheKey(appId: String, path: String, lazyThreshold: Long)
+  /** A log as of `version`: the digest of its listing up to that version
+    * and the digest of that version's commit file. */
+  private[kernel] case class LogId(version: Long, listed: String, digest: String)
+  private[kernel] class Entry(val ref: java.lang.ref.SoftReference[Snapshot], val id: LogId)
+
+  private val cache = new java.util.LinkedHashMap[CacheKey, Entry](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[CacheKey, Entry]): Boolean =
+      size() > 256
+  }
+
+  private[kernel] def cacheGet(key: CacheKey): Option[Entry] =
+    cache.synchronized(Option(cache.get(key)))
+
+  /** Installs `snap` unless a racing load installed a newer version; `seen`,
+    * the entry the caller validated or found invalid, may always be replaced. */
+  private[kernel] def install(key: CacheKey, snap: Snapshot, id: Option[LogId],
+      seen: Option[Entry]): Unit = id.foreach { i =>
+    cache.synchronized {
+      val cur = Option(cache.get(key))
+      if (cur.forall(c => seen.exists(_ eq c) || c.ref.get == null || c.id.version < i.version))
+        cache.put(key, new Entry(new java.lang.ref.SoftReference(snap), i))
+    }
+  }
+
+  private[kernel] def digest(lines: Seq[String]): String = java.util.HexFormat.of().formatHex(
+    java.security.MessageDigest.getInstance("SHA-256").digest(
+      lines.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+
   /** THE `_last_checkpoint` parse — one definition for every consumer
     * (snapshot loads, checkpoint-size estimation): ONE read, with absence
     * surfacing as FileNotFoundException into the Try (an exists() probe on

@@ -412,8 +412,7 @@ class OptimisticTransaction(
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption).getOrElse(10)
     if (interval > 0 && version > 0 && version % interval == 0) {
       try {
-        val snap = log.snapshotAt(version)
-        Checkpoints.write(log.spark, log.logPath, snap, log.store)
+        log.checkpoint(log.snapshotAt(version))
         cleanupExpiredLogs(version, meta)
       } catch {
         case _: InterruptedException =>
@@ -421,10 +420,10 @@ class OptimisticTransaction(
           // contract as the commit loop's three interrupt handlers); the
           // commit itself already succeeded
           Thread.currentThread().interrupt()
-          System.err.println(s"[graft] checkpoint at $version interrupted")
+          DeltaLog.logger.warn(s"checkpoint at $version interrupted")
         case e: Exception =>
           // checkpointing is an optimization; never fail the commit
-          System.err.println(s"[graft] checkpoint at $version failed: ${e.getMessage}")
+          DeltaLog.logger.warn(s"checkpoint at $version failed", e)
       }
     }
   }

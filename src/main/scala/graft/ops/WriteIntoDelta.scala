@@ -63,10 +63,10 @@ object WriteIntoDelta {
           s"replaceWhere: written data contains rows violating predicate '$pred'")
         case None => df
       }
-      return createAndWrite(spark, guarded, tablePath, partitionBy, configuration, appTxn)
+      return createAndWrite(spark, guarded, log, partitionBy, configuration, appTxn)
     }
 
-    val table = DeltaTable.forPath(spark, path)
+    val table = new DeltaTable(spark, tablePath, log)
     // run-level idempotent-replay skip, same contract as DELETE/UPDATE/
     // MERGE (reference CommitProperties app_transactions apply to every
     // operation — kernel/transaction/mod.rs:1-117; delta-spark txnAppId/
@@ -295,11 +295,11 @@ object WriteIntoDelta {
   private def createAndWrite(
       spark: SparkSession,
       df: DataFrame,
-      tablePath: Path,
+      log: DeltaLog,
       partitionBy: Seq[String],
       configuration: Map[String, String],
       appTxn: Option[(String, Long)] = None): DeltaTable = {
-    val log = new DeltaLog(spark, tablePath)
+    val tablePath = log.tablePath
     validatePartitionColumns(df.schema, partitionBy)
     val (schema, conf, protocol) =
       prepareCreateSchema(df.schema, configuration)
@@ -324,6 +324,6 @@ object WriteIntoDelta {
         Map("numFiles" -> adds.size.toString,
             "numOutputBytes" -> adds.map(_.size).sum.toString)))
     catch { case _: TransactionAlreadyAppliedException => () }
-    new DeltaTable(spark, tablePath)
+    new DeltaTable(spark, tablePath, log)
   }
 }

@@ -16,10 +16,9 @@ import graft.ops._
 class DeltaTable private[graft] (
     val spark: SparkSession,
     val tablePath: Path,
-    // an already-constructed DeltaLog for this path (the catalog's
-    // loadTable holds one from its freshness listing — constructing a
-    // second would pay another full Hadoop-conf clone per statement);
-    // null = construct our own, the default for every other caller
+    // an already-constructed DeltaLog for this path (the catalog keeps one
+    // per table, and a write has one from its existence check — each new
+    // one clones the Hadoop conf); null = construct our own
     log0: DeltaLog = null) {
 
   require(log0 == null || log0.tablePath == tablePath,
@@ -38,9 +37,11 @@ class DeltaTable private[graft] (
   }
 
   /** Re-read the log — incremental when a snapshot is cached
-    * (update_incremental, table/mod.rs:206). */
-  def refresh(): Snapshot = synchronized {
-    val next = if (cached == null) deltaLog.snapshot() else deltaLog.update(cached)
+    * (update_incremental, table/mod.rs:206). The first load of a handle goes
+    * through the kernel snapshot cache (`DeltaLog.snapshot`). */
+  def refresh(): Snapshot = refresh(ownCommit = false)
+  private def refresh(ownCommit: Boolean): Snapshot = synchronized {
+    val next = if (cached == null) deltaLog.snapshot() else deltaLog.update(cached, ownCommit)
     // never regress: a concurrent commitAndRefresh may have installed a
     // newer snapshot while this listing ran
     if (cached == null || next.version >= cached.version) cached = next
@@ -216,7 +217,7 @@ class DeltaTable private[graft] (
   private[graft] def commitAndRefresh(
       txn: OptimisticTransaction, actions: Seq[Action], op: Operation): Long = {
     val v = txn.commit(actions, op)
-    refresh()
+    refresh(ownCommit = true)
     v
   }
 
@@ -306,10 +307,7 @@ class DeltaTable private[graft] (
     * `create_checkpoint`, table.py:1141; `protocol/checkpoints.rs`).
     * Auto-checkpointing (`delta.checkpointInterval`, post-commit) uses the
     * same writer; this is the explicit maintenance surface. */
-  def createCheckpoint(): Unit = {
-    val snap = refresh()
-    Checkpoints.write(spark, deltaLog.logPath, snap, deltaLog.store)
-  }
+  def createCheckpoint(): Unit = deltaLog.checkpoint(refresh())
 
   /** Delete expired log files (commits/checkpoints/compactions older than
     * `delta.logRetentionDuration` and behind the newest checkpoint) —
@@ -369,6 +367,7 @@ class DeltaTable private[graft] (
 }
 
 object DeltaTable {
+  private[table] val logger = org.slf4j.LoggerFactory.getLogger("graft.table")
 
   def forPath(spark: SparkSession, path: String): DeltaTable = {
     val t = new DeltaTable(spark, new Path(path))

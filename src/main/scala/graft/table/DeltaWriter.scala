@@ -89,7 +89,7 @@ object DeltaWriter {
             Thread.currentThread().interrupt()
             e.addSuppressed(ie)
           case scala.util.control.NonFatal(e2) =>
-            System.err.println(s"[graft] staging cleanup failed for $staging: $e2")
+            DeltaTable.logger.warn(s"staging cleanup failed for $staging", e2)
             // attached to the thrown exception like the post-write twin
             // below: callers capturing it see the leaked path too
             e.addSuppressed(e2)
@@ -250,8 +250,7 @@ object DeltaWriter {
           case ce: Exception =>
             // same outage usually kills the delete too: report the leaked
             // staging dir (VACUUM skips hidden dirs, nothing else will)
-            System.err.println(
-              s"[graft-write] failed to clean staging dir $staging: $ce")
+            DeltaTable.logger.warn(s"failed to clean staging dir $staging", ce)
             e.addSuppressed(ce)
         }
         throw e

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
  * Micro-profile of the catalog SQL path (the bench's `catalog` key):
  * where does load_100's per-SELECT time go — Spark planning, loadTable
  * resolution (DeltaLog + replay), or execution? Also measures the
- * r17 snapshot cache: pass 2 over the same tables should pay one log
- * LISTING per table instead of a full DeltaLog + replay.
+ * kernel snapshot cache: pass 2 over the same tables should pay one log
+ * listing and one commit read per table instead of a full replay.
  *
  * Usage: sbt "runMain graft.tools.CatalogProbe [nTables]"
  */
