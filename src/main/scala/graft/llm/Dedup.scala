@@ -344,7 +344,7 @@ object Dedup {
 
   /** Band keys (step 3) + skew guard: each signature row → `bands` rows
     * keyed by a hash of its r-wide slice, with pathologically wide buckets
-    * discarded by [[dropOverCap]] (default: window count — the r16 A/B
+    * discarded by [[dropOverCap]] (a window count — the r16 A/B
     * measured a groupBy + anti-join ~20% slower here because the second
     * consumer recomputes the signature aggregation; re-A/B'd r17 with the
     * broadcast-heavy-keys shape, see OPTIMIZATION_r17.md). */
@@ -499,41 +499,19 @@ object Dedup {
       threshold: Double): DataFrame =
     jaccardVerified(candidates, "id_a", sets, "id_b", sets, threshold)
 
-  /** True when spark.graft.dedup.capStrategy=agg selects the heavy-keys
-    * aggregation shape for the group-size caps below (A/B'd r17). */
-  private def capStrategyAgg(df: DataFrame): Boolean =
-    df.sparkSession.conf.getOption("spark.graft.dedup.capStrategy").contains("agg")
-
   /** The df/bucket skew guard shared by the inverted-index joins: rows
-    * whose `keys` group holds more than `cap` rows are DROPPED. Two
-    * plan shapes (spark.graft.dedup.capStrategy):
-    *  - "window" (default): count(*) over Window.partitionBy(keys) — ONE
-    *    exchange + sort of the full input, whose output stays exchanged
-    *    AND sorted on the keys, so a downstream sort-merge self-join on
-    *    the same keys reuses both for free.
-    *  - "agg": groupBy(keys).count → only the OVER-cap keys (a bounded,
-    *    typically near-empty set — they are the pathological heavy
-    *    hitters) broadcast into a LEFT ANTI join. The count shuffle is
-    *    partial-aggregated map-side (tiny vs the full-row exchange), and
-    *    the input is never sorted — pair generation must then pick a
-    *    hash join, and the cap's own subtree is evaluated a second time
-    *    (ReuseExchange shares only exchanges, not aggregation work).
-    * Group keys here are never NULL (hashes/fingerprints); under NULL
-    * keys the two shapes would differ (anti-join keeps unmatched NULLs).
-    */
-  private def dropOverCap(df: DataFrame, keys: Seq[String], cap: Int): DataFrame =
-    if (capStrategyAgg(df)) {
-      val kc = keys.map(col)
-      val heavy = df.groupBy(kc: _*).agg(count(lit(1)).as("__df"))
-        .filter(col("__df") > cap)
-        .select(kc: _*)
-      df.join(broadcast(heavy), keys, "left_anti")
-    } else {
-      val w = Window.partitionBy(keys.map(col): _*)
-      df.withColumn("__df", count(lit(1)).over(w))
-        .filter(col("__df") <= cap)
-        .drop("__df")
-    }
+    * whose `keys` group holds more than `cap` rows are DROPPED, counted
+    * with count(*) over Window.partitionBy(keys) — ONE exchange + sort of
+    * the full input, whose output stays exchanged AND sorted on the keys,
+    * so a downstream sort-merge self-join on the same keys reuses both
+    * for free. (A groupBy + broadcast anti-join of the over-cap keys
+    * measured 25–35% slower at sf0.1 and sf1: OPTIMIZATION_r17.md.) */
+  private def dropOverCap(df: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+    df.withColumn("__df", count(lit(1)).over(w))
+      .filter(col("__df") <= cap)
+      .drop("__df")
+  }
 
   /** Default posting-list cap for the inverted-index near-dup joins:
     * 1% of the corpus, floored at 1000 (small corpora keep effectively
@@ -652,15 +630,12 @@ object Dedup {
 
     val rare = dropOverCap(posting, Seq("__h"), cap)
 
-    // Join strategy tracks the cap strategy: under the WINDOW cap both
-    // sides are the SAME window output, already exchanged AND sorted on
-    // __h — SMJ costs zero extra exchanges (ReuseExchange) and no
-    // broadcast build. Under the AGG cap the input is unsorted, so SMJ
-    // would pay the very sort the agg shape exists to skip — pin
-    // shuffled-hash instead. Either way the hint keeps the 8-byte key's
-    // low size estimate from baiting AQE into broadcasting a whole
-    // posting list (measured slower at bench scale, and a posting list
-    // is exactly what must never broadcast at corpus scale).
+    // Sort-merge join: both sides are the SAME window-cap output, already
+    // exchanged AND sorted on __h — SMJ costs zero extra exchanges
+    // (ReuseExchange) and no broadcast build. The hint also keeps the
+    // 8-byte key's low size estimate from baiting AQE into broadcasting a
+    // whole posting list (measured slower at bench scale, and a posting
+    // list is exactly what must never broadcast at corpus scale).
     //
     // COUNT-BOUNDED PREFILTER (r17, guide §1.2 "don't compute what you
     // throw away"): the old shape array-verified EVERY distinct candidate
@@ -685,7 +660,7 @@ object Dedup {
     // capped ≡ 0 and ubnd IS the exact jaccard, leaving only true
     // near-dups for the array pass.
     val pairCounts = rare.select(col("__id").as("id_a"), col("__h"))
-      .hint(if (capStrategyAgg(rare)) "shuffle_hash" else "merge")
+      .hint("merge")
       .join(rare.select(col("__id").as("id_b"), col("__h").as("__h2")),
         col("__h") === col("__h2") && col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("__c"))

@@ -9,6 +9,8 @@ import graft.table.{DeltaTable, DeltaWriter, Scan}
 /** Shared DML plumbing: matched-file discovery and CDC emission. */
 object Dml {
 
+  private[ops] val logger = org.slf4j.LoggerFactory.getLogger("graft.ops")
+
   /** Map `input_file_name()` / `_metadata.file_path` URIs back to AddFiles.
     * Keyed by AUTHORITY + decoded absolute filesystem path:
     * - part-file NAMES are not unique across partition directories (one
@@ -79,60 +81,14 @@ object Dml {
 
   /** Above this size a file-membership IN-list becomes a broadcast join —
     * an isin over 100k paths is a megabyte-scale expression the planner
-    * chokes on. ONE constant for every membership site (fileSubset,
-    * MERGE's changed-file membership and distinct-partition early filter). */
+    * chokes on. ONE constant for every membership site (MERGE's
+    * changed-file membership and distinct-partition early filter). */
   private[graft] val MaxInListSize = 1000
 
-  /** True when the schema carries a data column colliding with the scan's
-    * reserved identity names — such tables can't take any path that needs
-    * withFileIdentity (Scan.readRaw refuses the collision loudly). */
-  private[graft] def hasReservedIdCols(schema: org.apache.spark.sql.types.StructType): Boolean =
-    schema.fieldNames.exists(n =>
-      n.equalsIgnoreCase("__file") || n.equalsIgnoreCase("__pos"))
-
-  /** Restrict a with-identity scan to the given `__file` URIs — literal
-    * IN-list for small sets, broadcast semi-join above the threshold
-    * (same discipline as MERGE's changed-file membership). */
-  private[graft] def fileSubset(df: DataFrame, uris: Seq[String]): DataFrame =
-    if (uris.isEmpty) df.filter(lit(false))
-    else if (uris.size <= MaxInListSize) df.filter(col("__file").isin(uris: _*))
-    else {
-      val spark = df.sparkSession
-      import spark.implicits._
-      // qualified refs on both sides: a table with a data column literally
-      // named __hit_file must not make the bare reference ambiguous (only
-      // __file/__pos are reserved by the scan)
-      df.alias("__graft_scan")
-        .join(broadcast(uris.toDF("__hit_file").alias("__graft_hits")),
-          col("__graft_scan.__file") === col("__graft_hits.__hit_file"),
-          "left_semi")
-    }
-
-  /** singleScan discovery: matched `__file` URIs collected from the
-    * persisted full-width candidate scan, mapped back to AddFiles, plus
-    * the scan restricted to those files — ONE definition shared by
-    * DELETE/UPDATE (the URI-keying edge cases have a history; fixes must
-    * not need to land twice). */
-  private[graft] def discoverFromScan(
-      sc: DataFrame,
-      snapshot: Snapshot,
-      candidates: Seq[AddFile],
-      predCol: Column,
-      op: String): (Seq[AddFile], DataFrame) = {
-    val idx = filePathIndex(snapshot, candidates)
-    val uris = sc.filter(predCol).select(col("__file")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    (uris.map(u => mapBack(idx, u, op)), fileSubset(sc, uris))
-  }
-
   /** Persist level for the shared DML hit-file scan (read back 1-4 times:
-    * discovery, rewrite/mask, CDC pre/post). Serialized bytes like MERGE's
-    * rewrite leg (r11 A/B: compact cache = less heap to scan per GC);
-    * overridable via spark.graft.dml.persistLevel. */
-  private[graft] def dmlPersistLevel(spark: SparkSession): org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.fromString(
-      spark.conf.getOption("spark.graft.dml.persistLevel")
-        .getOrElse("MEMORY_AND_DISK_SER"))
+    * rewrite/mask, CDC pre/post). Serialized bytes like MERGE's rewrite
+    * leg (r11 A/B: compact cache = less heap to scan per GC). */
+  private[graft] val dmlPersistLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
 
   /** Whether this table wants CDC rows (operations/cdc.rs should_write_cdc). */
   def cdcEnabled(snapshot: Snapshot): Boolean =
@@ -194,10 +150,9 @@ object Dml {
  */
 object DeleteOp {
 
-  /** Per-phase wall times of the most recent predicate DELETE on this JVM
-    * (seconds) — the single-scan contract's observability surface: the
-    * no-CDC path records ONE `find_files` pass with the rewrite/mask
-    * reading the cache, never a second storage scan of the hit files. */
+  /** Per-phase wall times of the most recent DELETE on this JVM (seconds):
+    * `find_files` (column-pruned discovery), then `rewrite_write` or
+    * `dv_mask`, `cdc` and `commit`. */
   @volatile var lastPhases: Map[String, Double] = Map.empty
 
   /** Zeroed DELETE metrics with the replay marker (MergeOp's
@@ -290,49 +245,35 @@ object DeleteOp {
         val predCol = coalesce(expr(pred), lit(false))
         // Hit-file data pages are read from storage at most once: when a
         // second pass over them exists (CDC delete images after the
-        // rewrite/mask), it reads a persisted hit-file scan. Discovery
-        // stays a column-pruned candidate scan by default;
-        // spark.graft.dml.singleScan=true folds discovery into one
-        // full-width persisted scan instead (wide-predicate / object-store
-        // shape) — same trade as UPDATE, measured on the bench delete row.
-        val singleScan =
-          spark.conf.getOption("spark.graft.dml.singleScan").exists(_.toBoolean) &&
-            !Dml.hasReservedIdCols(snapshot.schema) // same fallback as UPDATE
-        // identity columns only when a consumer exists (__pos for the DV
-        // mask, __file for singleScan discovery/membership)
-        val needId = useDv || singleScan
+        // rewrite/mask), it reads a persisted hit-file scan. Discovery is a
+        // column-pruned candidate scan (interleaved A/B on the bench delete
+        // row: a full-width persisted discovery scan was ~20% slower).
         var cached: Option[DataFrame] = None
         try {
-        val (partialFiles, partialHit): (Seq[AddFile], Option[DataFrame]) =
-          if (partialCandidates.isEmpty) (Nil, None)
-          else if (singleScan) {
-            val sc = Scan.readFiles(spark, snapshot, partialCandidates,
-              withFileIdentity = true).persist(Dml.dmlPersistLevel(spark))
-            cached = Some(sc)
-            val (fs, hit) = phases("find_files")(
-              Dml.discoverFromScan(sc, snapshot, partialCandidates, predCol, "DELETE"))
-            (fs, Some(hit))
-          } else {
-            val fs = phases("find_files")(
-              Dml.matchedFiles(spark, snapshot, partialCandidates, pred, "DELETE"))
-            if (fs.isEmpty) (fs, None)
-            else {
-              val sc0 = Scan.readFiles(spark, snapshot, fs, withFileIdentity = needId)
-              // the DV-mask or keep-rewrite is the ONLY pass without CDC —
-              // persist only buys something when the CDC images re-read
-              // (the rare DV-over-cap fallback re-scans, matching the old
-              // shape rather than taxing every common-path delete)
-              val sc = if (cdcOn) { cached = Some(sc0.persist(Dml.dmlPersistLevel(spark))); sc0 }
-                else sc0
-              (fs, Some(sc))
-            }
+        val partialFiles =
+          if (partialCandidates.isEmpty) Nil
+          else phases("find_files")(
+            Dml.matchedFiles(spark, snapshot, partialCandidates, pred, "DELETE"))
+        // identity columns only for the DV mask's __file/__pos consumer —
+        // without DVs a data column may itself be named __pos or __file
+        val partialHit: Option[DataFrame] =
+          if (partialFiles.isEmpty) None
+          else {
+            val sc = Scan.readFiles(spark, snapshot, partialFiles, withFileIdentity = useDv)
+            // the DV-mask or keep-rewrite is the ONLY pass without CDC —
+            // persist only buys something when the CDC images re-read
+            // (the rare DV-over-cap fallback re-scans, matching the old
+            // shape rather than taxing every common-path delete)
+            if (cdcOn) cached = Some(sc.persist(Dml.dmlPersistLevel))
+            Some(sc)
           }
+        val partialData = partialHit.map(h => if (useDv) h.drop("__file", "__pos") else h)
 
         // With delta.enableDeletionVectors, partially-matching files keep
         // their data and gain a row-index mask instead of being rewritten —
         // deleting 0.1% of rows from a 100 TB table touches KBs, not TBs.
         def rewriteKept(): Seq[AddFile] = phases("rewrite_write") {
-          val keep = partialHit.get.filter(not(predCol)).drop("__file", "__pos")
+          val keep = partialData.get.filter(not(predCol))
           DeltaWriter.writeFiles(spark, table.tablePath, keep,
             snapshot.partitionColumns, nIdx, meta = Some(snapshot.metadata))
         }
@@ -357,8 +298,7 @@ object DeleteOp {
             val legs =
               (if (fullFiles.isEmpty) Nil
                else Seq(Scan.readFiles(spark, snapshot, fullFiles).filter(predCol))) ++
-              partialHit.filter(_ => partialFiles.nonEmpty)
-                .map(_.filter(predCol).drop("__file", "__pos"))
+              partialData.map(_.filter(predCol))
             val deleted = legs.reduce(_ unionByName _)
               .withColumn(Dml.CDC_COL, lit("delete"))
             Dml.writeCdc(spark, table, deleted, nIdx)
@@ -590,11 +530,10 @@ object DvWriter {
  */
 object UpdateOp {
 
-  /** Per-phase wall times of the most recent UPDATE on this JVM (seconds)
-    * — the single-scan contract's observability surface: the rewrite path
-    * records ONE `find_files` pass with every later pass (rewrite, DV
-    * mask, CDC images) reading the cache, never a second storage scan of
-    * the hit files. */
+  /** Per-phase wall times of the most recent UPDATE on this JVM (seconds):
+    * `find_files` (column-pruned discovery; skipped for partition-only
+    * predicates), then `dv_mask` and/or `rewrite_write`, `cdc` and
+    * `commit`. */
   @volatile var lastPhases: Map[String, Double] = Map.empty
 
   /** Zeroed UPDATE metrics with the replay marker (MergeOp's
@@ -678,55 +617,26 @@ object UpdateOp {
     // images) reads a persisted hit-file scan instead of re-scanning
     // storage (the old shape re-read the hit files once per pass — 2x+
     // read amplification on exactly the large-DML workloads DV/CDC
-    // target). Discovery stays a COLUMN-PRUNED scan of the candidates by
-    // default — predicates are typically narrow (keys, dates, flags), so
-    // reading just their columns beats caching the full candidate width
+    // target). Discovery is a COLUMN-PRUNED scan of the candidates —
+    // predicates are typically narrow (keys, dates, flags), so reading
+    // just their columns beats caching the full candidate width
     // (interleaved A/B on the bench delete row: full-scan persist was
-    // ~20% slower on local storage). spark.graft.dml.singleScan=true
-    // flips to ONE full-width candidate scan feeding discovery AND all
-    // later passes from cache — the shape for wide predicates or remote
-    // object stores where a second storage pass costs more than the
-    // cache write.
-    // singleScan is skipped (not failed) when a data column collides with
-    // the scan's reserved identity names: the perf conf must never turn a
-    // working DELETE/UPDATE into a reserved-name refusal (DV mode still
-    // requires identity and keeps its loud error — masks are impossible
-    // without row positions)
-    val singleScan = !partitionOnly &&
-      spark.conf.getOption("spark.graft.dml.singleScan").exists(_.toBoolean) &&
-      !Dml.hasReservedIdCols(snapshot.schema)
-    // file/row identity columns are only materialized when a consumer
-    // exists (__pos feeds the DV mask; __file feeds singleScan discovery
-    // and membership) — the plain-rewrite scan stays byte-identical to a
-    // bare read
-    val needId = useDv || singleScan
+    // ~20% slower on local storage).
+    // File/row identity columns are only materialized for the DV mask
+    // (__file/__pos) — the plain-rewrite scan stays byte-identical to a
+    // bare read, so a data column named __pos never blocks a non-DV UPDATE.
     val predCol = coalesce(expr(pred), lit(false))
     var cached: Option[DataFrame] = None
-    def persisted(df: DataFrame): DataFrame = {
-      val p = df.persist(Dml.dmlPersistLevel(spark))
-      cached = Some(p)
-      p
-    }
     try {
-    val (files, srcHit) =
-      if (partitionOnly) {
-        // partition-only stats pruning is exact: every candidate matches
-        val sc0 = Scan.readFiles(spark, snapshot, candidates, withFileIdentity = needId)
-        (candidates, if (useDv || cdcOn) persisted(sc0) else sc0)
-      } else if (singleScan) {
-        val sc = persisted(
-          Scan.readFiles(spark, snapshot, candidates, withFileIdentity = true))
-        phases("find_files")(
-          Dml.discoverFromScan(sc, snapshot, candidates, predCol, "UPDATE"))
-      } else {
-        val fs = phases("find_files")(
-          Dml.matchedFiles(spark, snapshot, candidates, pred, "UPDATE"))
-        val sc0 = Scan.readFiles(spark, snapshot, fs, withFileIdentity = needId)
-        (fs, if (useDv || cdcOn) persisted(sc0) else sc0)
-      }
+    val files =
+      if (partitionOnly) candidates // partition-only stats pruning is exact
+      else phases("find_files")(
+        Dml.matchedFiles(spark, snapshot, candidates, pred, "UPDATE"))
     txn.readFile(files.map(_.path))
     if (files.isEmpty) return emptyCommit()
-    val src = if (needId) srcHit.drop("__file", "__pos") else srcHit
+    val srcHit = Scan.readFiles(spark, snapshot, files, withFileIdentity = useDv)
+    if (useDv || cdcOn) cached = Some(srcHit.persist(Dml.dmlPersistLevel))
+    val src = if (useDv) srcHit.drop("__file", "__pos") else srcHit
     val updatedCols = snapshot.schema.map { f =>
       set.get(f.name) match {
         case Some(newExpr) =>

@@ -234,7 +234,7 @@ object VacuumOp {
             // NEVER a silent cap: the exact total always lands in
             // VacuumResult.count, so a truncated sample can't masquerade
             // as a genuine collectThreshold-sized candidate set
-            System.err.println(s"[graft-vacuum] candidate set has $n files; " +
+            Dml.logger.warn(s"VACUUM candidate set has $n files; " +
               s"returning a $collectThreshold-path sample (exact count in " +
               "VacuumResult.count" +
               (if (dryRun) "" else " and the VACUUM commit metrics") + ")")

@@ -96,10 +96,9 @@ class MergeBuilder(table: DeltaTable, source: DataFrame, condition: String) {
 }
 
 /** Per-phase wall-time accumulator shared by the DML operators (merge,
-  * delete, update). A nanoTime pair per phase; stderr print under
-  * SPARK_GRAFT_TRACE=1. */
+  * delete, update). A nanoTime pair per phase, each logged at DEBUG on
+  * the `graft.ops` logger. */
 private[ops] final class PhaseRecorder(tag: String) {
-  private val trace = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
   val acc = scala.collection.mutable.LinkedHashMap[String, Double]()
   def apply[T](name: String)(body: => T): T = {
     val t0 = System.nanoTime()
@@ -107,7 +106,7 @@ private[ops] final class PhaseRecorder(tag: String) {
     val dt = (System.nanoTime() - t0) / 1e9
     // merge's early-filter aggregations run concurrently — guard the map
     acc.synchronized { acc(name) = acc.getOrElse(name, 0.0) + dt }
-    if (trace) System.err.println(f"[$tag-trace] $name%-22s $dt%.3fs")
+    Dml.logger.debug(f"[$tag] $name%-22s $dt%.3fs")
     r
   }
 }
@@ -345,18 +344,7 @@ object MergeOp {
       .withColumn("__tgt", lit(true))
     val src = source.observe(srcObs, count(lit(1)).as("n"))
       .withColumn("__src", lit(true))
-    // spark.graft.merge.joinStrategy: optional join-strategy hint on the
-    // SOURCE side of the full-outer join ("shuffle_hash" builds the hash
-    // table from the source partitions — r17 A/B knob; unset = planner/AQE
-    // choice, which at bench scale is sort-merge). Kept a conf, not a
-    // default: a pinned hash build must fit every post-shuffle source
-    // partition in memory, which only the deployment can promise at 100 TB
-    // — AQE's maxShuffledHashJoinLocalMapThreshold is the size-checked
-    // adaptive route to the same plan.
-    val srcSide = spark.conf.getOption("spark.graft.merge.joinStrategy")
-      .filter(_.nonEmpty)
-      .fold(src.alias("source"))(h => src.alias("source").hint(h))
-    val joined = srcSide
+    val joined = src.alias("source")
       .join(tgt.alias("target"), expr(condition), "full_outer")
 
     val matchedC = col("__src").isNotNull && col("__tgt").isNotNull
@@ -400,12 +388,10 @@ object MergeOp {
     // contended driver records of r8/r9 inflated ~2x without it); the DV
     // leg re-reads the join an extra time for mask building and measured
     // faster deserialized (r10 judge flagged clean-host merge_upsert_dv
-    // drifting 1.85s→2.75s under the blanket SER persist). Both overridable
-    // via spark.graft.merge.persistLevel (any StorageLevel name).
-    val persistLevel = StorageLevel.fromString(
-      spark.conf.getOption("spark.graft.merge.persistLevel").getOrElse(
-        if (snapshot.confBool("delta.enableDeletionVectors")) "MEMORY_AND_DISK"
-        else "MEMORY_AND_DISK_SER"))
+    // drifting 1.85s→2.75s under the blanket SER persist).
+    val persistLevel =
+      if (snapshot.confBool("delta.enableDeletionVectors")) StorageLevel.MEMORY_AND_DISK
+      else StorageLevel.MEMORY_AND_DISK_SER
     val withOp = joined.withColumn("__op", opCol)
       .observe(opObs, opCountAggs.head, opCountAggs.tail: _*)
       .persist(persistLevel)

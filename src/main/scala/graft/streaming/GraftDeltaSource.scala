@@ -285,7 +285,7 @@ class GraftDeltaSource(
         persistStart(baseOffset)
     } catch {
       case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft-delta] could not persist stream start at construction: $e")
+        GraftDeltaSource.logger.warn("could not persist stream start at construction", e)
     }
   }
 
@@ -838,6 +838,8 @@ class GraftDeltaSource(
 }
 
 object GraftDeltaSource {
+  private[streaming] val logger = org.slf4j.LoggerFactory.getLogger("graft.streaming")
+
   /** Table schema + the three CDF provenance columns — delegated to the
     * batch side's single definition. */
   def cdfSchema(base: StructType): StructType = CdfRead.cdfSchema(base)

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.entries.EntryCtx
 import graft.table.DeltaTable
 
-/** Dev tool: the bench merge scenario with SPARK_GRAFT_TRACE phase timings. */
+/** Dev tool: the bench merge scenario with per-phase timings, which
+  * MergeOp logs at DEBUG on the `graft.ops` logger (enabled here). */
 object MergeProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -17,6 +18,8 @@ object MergeProfile {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    org.apache.logging.log4j.core.config.Configurator.setLevel("graft.ops",
+      org.apache.logging.log4j.Level.DEBUG)
     val orders = EntryCtx.pq(spark, sfDir, "orders")
     // SAME source shape as Bench's merge_upsert row (one definition — a
     // bench scenario tune must not leave this profiler measuring the old

@@ -214,54 +214,6 @@ class Round14Spec extends AnyFunSuite {
     DeltaTable.write(spark, df, dir)
   }
 
-  private def withSingleScan[A](body: => A): A = {
-    spark.conf.set("spark.graft.dml.singleScan", "true")
-    try body finally spark.conf.unset("spark.graft.dml.singleScan")
-  }
-
-  test("UPDATE singleScan=true: candidate files read from storage exactly " +
-      "once even with a full-width predicate (discovery shares the scan)") {
-    val dir = tmpDir()
-    bigTable(dir)
-    val size = dataFileBytes(dir)
-    assert(size > 4L * 1024 * 1024, s"fixture too small for IO accounting: $size")
-    val t = DeltaTable.forPath(spark, dir)
-    val b0 = fsBytesRead()
-    // predicate references the WIDE column, so a separate discovery pass
-    // would read the full data (column pruning can't save it) — the
-    // find-then-rewrite shape measures ~2x the table size here
-    val m = withSingleScan {
-      t.update(Map("v" -> expr("concat(v, '!')")), Some("v > '' AND id % 2 = 0"))
-    }
-    val read = fsBytesRead() - b0
-    assert(m("num_updated_rows") == "60000", m.toString)
-    assert(read < (size * 1.7).toLong,
-      s"UPDATE read ${read}B for a ${size}B table — hit files were scanned " +
-        "from storage more than once")
-    assert(graft.ops.UpdateOp.lastPhases.contains("find_files") &&
-      graft.ops.UpdateOp.lastPhases.contains("rewrite_write"),
-      s"phase trace incomplete: ${graft.ops.UpdateOp.lastPhases}")
-  }
-
-  test("DELETE singleScan=true: partial-candidate files read from storage " +
-      "exactly once with a full-width predicate") {
-    val dir = tmpDir()
-    bigTable(dir)
-    val size = dataFileBytes(dir)
-    val t = DeltaTable.forPath(spark, dir)
-    val b0 = fsBytesRead()
-    val m = withSingleScan { t.delete(Some("v > '' AND id % 2 = 0")) }
-    val read = fsBytesRead() - b0
-    assert(m("num_deleted_rows") == "60000", m.toString)
-    assert(read < (size * 1.7).toLong,
-      s"DELETE read ${read}B for a ${size}B table — hit files were scanned " +
-        "from storage more than once")
-    assert(graft.ops.DeleteOp.lastPhases.contains("find_files") &&
-      graft.ops.DeleteOp.lastPhases.contains("rewrite_write"),
-      s"phase trace incomplete: ${graft.ops.DeleteOp.lastPhases}")
-    assert(DeltaTable.forPath(spark, dir).toDF.count() == 60000)
-  }
-
   test("default shape: column-pruned discovery + one full scan of hit " +
       "files (narrow predicate reads ~1x the data, not 2x)") {
     val dir = tmpDir()
@@ -578,19 +530,23 @@ class Round14Spec extends AnyFunSuite {
       s"postimage must carry the RECOMPUTED generated column, got $post")
   }
 
-  test("singleScan silently falls back when a data column collides with " +
-      "the scan's reserved identity names") {
+  test("a data column named __pos or __file does not block a non-DV DELETE or UPDATE") {
     import spark.implicits._
     val dir = tmpDir()
     // __pos as a DATA column is legal on plain scans (readRaw's guard only
-    // fires when identity is requested) — the perf conf must not turn a
-    // working DELETE into a reserved-name refusal
+    // fires when identity is requested, i.e. for the DV mask) — it must
+    // not turn a working DELETE/UPDATE into a reserved-name refusal, and
+    // the rewrite must carry it through like any other column (one file,
+    // so the DELETE rewrites the surviving rows)
     DeltaTable.write(spark,
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "__pos"), dir)
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "__pos").coalesce(1), dir)
     val t = DeltaTable.forPath(spark, dir)
-    val m = withSingleScan { t.delete(Some("id = 2")) }
-    assert(m("num_deleted_rows") == "1", m.toString)
-    assert(t.toDF.count() == 2)
+    val d = t.delete(Some("id = 2"))
+    assert(d("num_deleted_rows") == "1", d.toString)
+    val u = t.update(Map("__pos" -> expr("concat(__pos, '!')")), Some("id = 3"))
+    assert(u("num_updated_rows") == "1", u.toString)
+    assert(t.toDF.orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "a"), (3L, "c!")))
   }
 
   // ---------------------------------------------------------- llm hardening
