@@ -39,8 +39,7 @@ class DvMaskLookup(masks: Broadcast[Map[String, Array[Byte]]]) extends Serializa
         // (Scan.readFiles masks only the dvFiles leg) — a lookup miss is a
         // path-variant mismatch between _metadata.file_path and
         // PathKeys.variants, and failing open would silently resurrect
-        // deleted rows. Fail loudly (same contract as Cdf's unmapped-path
-        // raise_error).
+        // deleted rows. Fail loudly.
         val m = decoded.computeIfAbsent(file.toString, k =>
           masks.value.get(k).map(DeletionVectors.decodeRoaringMembership)
             .getOrElse(throw new IllegalStateException(
@@ -53,11 +52,10 @@ class DvMaskLookup(masks: Broadcast[Map[String, Array[Byte]]]) extends Serializa
   }
 }
 
-/** Thread-local one-slot (file → payload) memo shared by the per-file
-  * lookup expressions — scan rows arrive grouped by file, so one
-  * UTF8String equality check hits almost always. ONE implementation of
-  * the buffer-reuse-sensitive idiom (the key must be `clone()`d because
-  * the input UTF8String may alias a reused row buffer). */
+/** Thread-local one-slot (file → payload) memo for the per-file mask
+  * lookup — scan rows arrive grouped by file, so one UTF8String equality
+  * check hits almost always. The key must be `clone()`d because the input
+  * UTF8String may alias a reused row buffer. */
 final class PerFileMemo extends Serializable {
   @transient private lazy val tl = new ThreadLocal[Array[AnyRef]] {
     override def initialValue(): Array[AnyRef] = new Array[AnyRef](2)

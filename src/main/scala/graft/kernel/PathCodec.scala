@@ -1,5 +1,7 @@
 package graft.kernel
 
+import org.apache.hadoop.fs.Path
+
 /**
  * Delta `add`/`remove`/`cdc` `path` fields are RELATIVE URLS — percent-
  * encoded (PROTOCOL.md "Add File and Remove File"). A partition dir whose
@@ -24,6 +26,38 @@ object PathCodec {
       else if (u.getRawQuery != null || u.getRawFragment != null) rel
       else Option(u.getPath).getOrElse(rel)
     } catch { case _: Exception => rel } // tolerate non-URI legacy paths
+
+  /** Resolve a log-recorded (percent-encoded relative URL) path against
+    * `root`; scheme'd absolute URIs pass through Path(URI). */
+  def resolve(root: Path, relative: String): Path = {
+    try {
+      val uri = new java.net.URI(relative)
+      if (uri.isAbsolute) return new Path(uri)
+    } catch { case _: Exception => }
+    val rel = decode(relative)
+    // scheme-free ctor: a decoded name with ':' in its first segment
+    // ("backup:final.parquet" — legal; encode round-trips it as %3A) must
+    // not be URI-parsed, where "backup" reads as a scheme and Path(String)
+    // throws — making a table this engine itself wrote unreadable on every
+    // scan/DML/FSCK path
+    val p = new Path(null, null, rel)
+    if (p.isAbsolute) p else new Path(root, p)
+  }
+
+  /** Escape Hadoop-glob metacharacters in a path handed to `spark.read`:
+    * the reader glob-expands its path arguments, so a file legally named
+    * `report [2020].parquet` (foreign writers, convert_to_delta inputs)
+    * would fail resolution, and a literal `*` would silently match OTHER
+    * files. Backslash-escape, which Hadoop's GlobPattern honors. */
+  def globEscape(p: String): String = {
+    val sb = new StringBuilder(p.length + 8)
+    p.foreach { c =>
+      if (c == '\\' || c == '[' || c == ']' || c == '{' || c == '}' ||
+          c == '*' || c == '?') sb += '\\'
+      sb += c
+    }
+    sb.toString
+  }
 
   /** Literal filesystem path fragment → log-recordable relative URL.
     * Encoded via a "./" prefix: a ':' in the FIRST segment otherwise makes

@@ -87,21 +87,8 @@ case class Snapshot(
     getConf(key).map(_.trim.equalsIgnoreCase("true")).getOrElse(default)
 
   /** Resolve a log-recorded (percent-encoded relative URL) path against the
-    * table root; scheme'd absolute URIs pass through Path(URI). */
-  def absolutePath(relative: String): Path = {
-    try {
-      val uri = new java.net.URI(relative)
-      if (uri.isAbsolute) return new Path(uri)
-    } catch { case _: Exception => }
-    val rel = PathCodec.decode(relative)
-    // scheme-free ctor: a decoded name with ':' in its first segment
-    // ("backup:final.parquet" — legal; PathCodec.encode round-trips it as
-    // %3A) must not be URI-parsed, where "backup" reads as a scheme and
-    // Path(String) throws — making a table this engine itself wrote
-    // unreadable on every scan/DML/FSCK path
-    val p = new Path(null, null, rel)
-    if (p.isAbsolute) p else new Path(new Path(tablePath), p)
-  }
+    * table root ([[PathCodec.resolve]]). */
+  def absolutePath(relative: String): Path = PathCodec.resolve(new Path(tablePath), relative)
 }
 
 class DeltaTableNotFoundException(path: String)

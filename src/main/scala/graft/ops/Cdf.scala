@@ -1,12 +1,12 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 import graft.kernel._
-import graft.table.{DeltaTable, Scan}
+import graft.table.{DeltaTable, LogFileIndex, Scan}
 
 /**
  * Change Data Feed read — the change stream between two versions as a union
@@ -21,10 +21,9 @@ import graft.table.{DeltaTable, Scan}
  *
  * Scale shape: each leg is ONE parquet scan over all its files regardless
  * of how many commits the range spans; `_commit_version`/`_commit_timestamp`
- * are recovered by a broadcast join of `_metadata.file_path` against the
- * (small) file→version map, mirroring the reference's three ParquetSource
- * legs (load_cdf.rs ~480). A 1,000-version range analyzes as 3 scans, not
- * 1,000 union branches.
+ * ride the [[LogFileIndex]] as per-file partition values, mirroring the
+ * reference's three ParquetSource legs (load_cdf.rs ~480). A 1,000-version
+ * range analyzes as 3 scans, not 1,000 union branches.
  */
 object CdfRead {
 
@@ -85,8 +84,6 @@ object CdfRead {
         // multiplied billable LISTs/reads on every poll-loop call
         !Dml.cdcEnabled(log.metadataSnapshotAt(startingVersion)))
       throw enabledError
-    val schema = snapshot.schema
-    val partCols = snapshot.partitionColumns
 
     // gather per-commit change units via the shared classifier, tracking
     // enablement THROUGH the range: a mid-range disable window carries no
@@ -122,9 +119,9 @@ object CdfRead {
           s"Change Data Feed was disabled at or before version $v inside " +
           s"the requested range [$startingVersion, $end] — changes in the " +
           "disabled window were not recorded")
-      us.map { case (kind, path, pv, _) => (kind, path, pv, v, ts) }
+      us.map { case (kind, path, pv, size) => (kind, path, pv, size, v, ts) }
     }
-    legsFor(spark, table, schema, partCols, snapshot.metadata, units)
+    legsFor(spark, table, snapshot.metadata, units)
   }
 
   /** One commit's actions classified into CDF change units:
@@ -189,21 +186,20 @@ object CdfRead {
       org.apache.spark.sql.types.StructField("_commit_version", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("_commit_timestamp", org.apache.spark.sql.types.TimestampType)))
 
-  /** Assemble the three legs from classified change units. */
+  /** Assemble the three legs from classified change units
+    * (kind, rel path, partitionValues, size, version, tsMs). */
   private[graft] def legsFor(
       spark: SparkSession,
       table: DeltaTable,
-      schema: StructType,
-      partCols: Seq[String],
-      meta: Metadata,
-      units: Seq[(String, String, Map[String, String], Long, Long)]): DataFrame = {
+      meta: Metadata, // metadata AT the range end (the handle's may be stale)
+      units: Seq[(String, String, Map[String, String], Long, Long, Long)]): DataFrame = {
     val legs: Seq[DataFrame] = Seq("cdc" -> None, "insert" -> Some("insert"),
       "delete" -> Some("delete")).flatMap { case (kind, ct) =>
-      legDf(spark, table, schema, partCols, meta,
-        units.collect { case (k, path, pv, v, ts) if k == kind => (path, pv, v, ts) },
+      legDf(spark, table, meta,
+        units.collect { case (k, path, pv, size, v, ts) if k == kind => (path, pv, size, v, ts) },
         changeType = ct)
     }
-    if (legs.isEmpty) Scan.emptyDf(spark, cdfSchema(schema))
+    if (legs.isEmpty) Scan.emptyDf(spark, cdfSchema(meta.schema))
     else legs.reduce(_.unionByName(_))
   }
 
@@ -239,100 +235,45 @@ object CdfRead {
     }
   }
 
-  /** One leg: a single parquet scan over `files` with commit provenance
-    * recovered via a broadcast path→(version, timestamp) join. */
+  /** One leg: a single parquet scan over `files`, whose commit provenance
+    * is each file's partition row in the index. A rel path re-added at two
+    * versions in one leg (RESTORE re-adds a file removed earlier in the
+    * range, dataChange=true, no CDC) is listed once per version. */
   private[graft] def legDf(
       spark: SparkSession,
       table: DeltaTable,
-      schema: StructType,
-      partCols: Seq[String],
-      meta: Metadata, // metadata AT the range end (the handle's may be stale)
-      files: Seq[(String, Map[String, String], Long, Long)], // (rel path, partVals, version, tsMs)
+      meta: Metadata,
+      files: Seq[(String, Map[String, String], Long, Long, Long)], // (rel path, partVals, size, version, tsMs)
       changeType: Option[String]): Option[DataFrame] = {
     if (files.isEmpty) return None
-    // one rel path can appear at SEVERAL versions in one leg (RESTORE
-    // re-adds a file removed earlier in the range, dataChange=true, no
-    // CDC): a single batched scan cannot disambiguate those rows by
-    // _metadata.file_path, and the variant map would keep one version's
-    // provenance for both. Split into per-version sub-legs (paths are
-    // unique within a commit) and union — the common no-duplicate case
-    // stays one batched scan.
-    val distinctFiles = files.distinct
-    if (distinctFiles.groupBy(_._1).exists(_._2.map(_._3).distinct.size > 1)) {
-      val subs = distinctFiles.groupBy(_._3).toSeq.sortBy(_._1).flatMap {
-        case (_, fs) => legDf(spark, table, schema, partCols, meta, fs, changeType)
-      }
-      return if (subs.isEmpty) None else Some(subs.reduce(_.unionByName(_)))
-    }
-    val abs = distinctFiles.map { case (rel, pv, v, ts) =>
-      (table.snapshot.absolutePath(rel), pv, v, ts) // rel is a percent-encoded URL
-    }
-
     // the RESOLVED range-end metadata, not table.snapshot's: a stale
     // handle whose cache predates a column-mapping enablement would read
     // physically-named files with logical names (every mapped column NULL)
-    val mapped = ColumnMapping.enabled(meta)
-    val nm = if (mapped) ColumnMapping.nameMap(schema) else Map.empty[String, String]
+    val layout = new Scan.FileLayout(meta)
     // RemoveFile.partitionValues is OPTIONAL per the protocol (foreign
     // writers omit it) — on a partitioned table a missing map would stamp
     // every partition column NULL in this leg's rows, silently corrupting
     // provenance an incremental consumer folds. Fail loudly, like the
     // mtime fallback does.
-    if (partCols.nonEmpty) abs.foreach { case (p, pv, v, _) =>
-      val missing = partCols.filterNot(c => pv.contains(nm.getOrElse(c, c)))
+    files.foreach { case (p, pv, _, v, _) =>
+      val missing = layout.partitionFields.map(_.name).filterNot(pv.contains)
       if (missing.nonEmpty) throw new IllegalStateException(
         s"CDF: file $p at version $v lacks partitionValues for " +
           s"${missing.mkString(", ")} — cannot derive partition columns " +
           "for its change rows (the remove action omitted them)")
     }
-    val logicalData = StructType(schema.filterNot(f => partCols.contains(f.name)))
-    val dataSchema = StructType(
-      (if (mapped) ColumnMapping.physicalSchema(logicalData) else logicalData) ++
-        (if (changeType.isEmpty)
-          Seq(org.apache.spark.sql.types.StructField(Dml.CDC_COL, org.apache.spark.sql.types.StringType))
-        else Nil))
-
-    val raw = spark.read.schema(dataSchema)
-      .parquet(abs.map(t => Scan.globEscape(t._1.toString)): _*)
-
-    // _metadata.file_path is a URI-style string ("file:/dir/p%20x/f.parquet");
-    // emit every plausible encoding of each path so the equi-join is robust
-    // across filesystems, then assert nothing fell through.
-    import spark.implicits._
-    val keyed = PathKeys.variantMap(abs.map { case (p, _, v, ts) => p -> ((v, ts)) })
-      .toSeq.map { case (k, (v, ts)) => (k, v, ts) }.toDF("__k", "__v", "__ts")
-
-    val joined = raw
-      // metadataColumn: immune to a data column named _metadata shadowing
-      // the file-source struct (the Scan.readFiles discipline)
-      .withColumn("__fp", raw.metadataColumn("_metadata").getField("file_path"))
-      .join(broadcast(keyed), col("__fp") === col("__k"), "left")
-
-    // partition columns from the LOG's partitionValues (same codegen'd
-    // per-file lookup as the main scan — basePath hive inference cannot
-    // cover mapped / random-prefix layouts)
-    lazy val pvLookup = {
-      val byFile: Map[String, Array[String]] = PathKeys.variantMap(
-        abs.map { case (p, pv, _, _) =>
-          p -> partCols.map(c => pv.getOrElse(nm.getOrElse(c, c), null)).toArray
-        })
-      new graft.functions.PartitionValueLookup(spark.sparkContext.broadcast(byFile))
-    }
-    import org.apache.spark.sql.GraftSqlBridge
-    val cols: Seq[Column] = schema.map { f =>
-      if (partCols.contains(f.name))
-        GraftSqlBridge.column(graft.functions.PartitionValueAt(
-          GraftSqlBridge.expression(col("__fp")),
-          partCols.indexOf(f.name), pvLookup)).cast(f.dataType).as(f.name)
-      else if (mapped) col(nm.getOrElse(f.name, f.name)).cast(f.dataType).as(f.name)
-      else col(f.name)
-    } ++ Seq(
+    val raw = layout.relation(spark, table.deltaLog.tablePath.toString,
+      files.distinct.map { case (rel, pv, size, v, ts) =>
+        LogFileIndex.Entry(rel, size, 0L,
+          layout.partitionRow(pv) ++ Seq(Literal(v), Literal(ts * 1000L, TimestampType)))
+      },
+      extraData =
+        if (changeType.isEmpty) Seq(StructField(Dml.CDC_COL, StringType)) else Nil,
+      extraPartition = Seq(StructField("_commit_version", LongType),
+        StructField("_commit_timestamp", TimestampType)))
+    Some(raw.select(layout.columns ++ Seq(
       changeType.map(ct => lit(ct).as(Dml.CDC_COL)).getOrElse(col(Dml.CDC_COL)),
-      when(col("__v").isNotNull, col("__v"))
-        .otherwise(raise_error(concat(lit("CDF: unmapped file path "), col("__fp"))))
-        .as("_commit_version"),
-      (col("__ts") / 1000).cast("timestamp").as("_commit_timestamp"))
-    Some(joined.select(cols: _*))
+      col("_commit_version"), col("_commit_timestamp")): _*))
   }
 
 }

@@ -672,7 +672,7 @@ object ConvertToDeltaOp {
       // layout carries (e.g. 'report [2020].parquet' — spark.read
       // glob-expands its argument)
       val fileSchema = spark.read
-        .parquet(graft.table.Scan.globEscape(sample.toString))
+        .parquet(PathCodec.globEscape(sample.toString))
         .schema.fieldNames.toSet
       fullSchema.fieldNames.toSeq.filterNot(fileSchema.contains)
     }

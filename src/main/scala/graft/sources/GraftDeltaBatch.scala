@@ -49,15 +49,18 @@ case class GraftScan(snapshot: Snapshot, requiredSchema: StructType) extends V2S
  * catalog scan ([[GraftScan]]) and `format("graft-delta")` relation is
  * replaced by the analyzed plan of `Scan.readFiles` over the files that
  * survive stats/partition pruning with the query's own resolved filters.
- * The outer query then plans Spark's file scan directly — columnar parquet
- * reads, data-filter pushdown, real file-size statistics for join
- * selection, one codegen pass — while DV masks, log-sourced partition
- * values and column mapping keep coming from `Scan.readFiles`.
+ * The outer query then plans Spark's file scan over a
+ * [[graft.table.LogFileIndex]] directly — columnar parquet reads,
+ * partition and data-filter pushdown, log file sizes for join selection,
+ * one codegen pass — while DV masks and column mapping keep coming from
+ * `Scan.readFiles`.
  *
  * Registered once per session (`GraftSqlBridge.registerOptimization`) by
  * `GraftCatalog.initialize` and `GraftDeltaDataSource`'s batch read; it runs
- * in the optimizer's last batch, after Spark has pushed the filters and
- * pruned the columns of the scan it replaces.
+ * in the optimizer's last batch ("User Provided Optimizers"), after Spark
+ * has pushed the filters and pruned the columns of the scan it replaces.
+ * That is also after Spark's `PartitionPruning` batch, so the inlined scan
+ * gets no dynamic partition pruning filter.
  */
 object GraftScanInlining extends Rule[LogicalPlan] {
 

@@ -817,10 +817,9 @@ class GraftDeltaSource(
     }
     val batch =
       if (cdfMode)
-        CdfRead.legsFor(spark, cdfTable, initSnapshot.schema,
-          initSnapshot.partitionColumns, initSnapshot.metadata,
+        CdfRead.legsFor(spark, cdfTable, initSnapshot.metadata,
           unitsBetween(changesAt)(startOff, endOff)
-            .map(u => (u.kind, u.relPath, u.pv, u.version, u.ts)))
+            .map(u => (u.kind, u.relPath, u.pv, u.size, u.version, u.ts)))
       else
         Scan.readFiles(spark, initSnapshot, unitsBetween(filesAt)(startOff, endOff))
     GraftSqlBridge.streamingDataFrame(batch)

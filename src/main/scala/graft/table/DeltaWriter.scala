@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.kernel.{AddFile, ParquetStats, PartitionCodec}
+import graft.kernel.{AddFile, ParquetStats, PartitionCodec, PathCodec}
 
 /**
  * Physical file writer: stage hive-partitioned parquet with Spark's native
@@ -193,11 +193,11 @@ object DeltaWriter {
           val perFile = math.max(1L, (rows + chunks - 1) / chunks)
           val sub = new Path(staging, s"resplit_$i")
           withMicrosTimestamps(spark) {
-            // glob-escaped like every scan-side read (Scan.globEscape): a
-            // table path with [] {} * ? would make this re-read match
-            // nothing — or sibling files — instead of the staged file
+            // glob-escaped: a table path with [] {} * ? would make this
+            // re-read match nothing — or sibling files — instead of the
+            // staged file
             val w0 = spark.read.schema(dataSchema)
-              .parquet(graft.table.Scan.globEscape(p.toString))
+              .parquet(PathCodec.globEscape(p.toString))
               .write.option("maxRecordsPerFile", perFile)
             codec.fold(w0)(c => w0.option("compression", c))
               .mode("overwrite").parquet(sub.toString)

@@ -1,49 +1,49 @@
 package graft.table
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.kernel.{AddFile, DeletionVectors, PathKeys, Snapshot, StatsPruning}
+import graft.kernel.{AddFile, ColumnMapping, DeletionVectors, Metadata, PartitionCodec, PathKeys, Snapshot, StatsPruning}
 
 /**
  * The read path: snapshot → (partition pruning + stats file skipping on the
  * driver) → a pruned explicit file list handed to Spark's vectorized
- * parquet source. Spark then does projection pushdown, parquet row-group
- * filtering, whole-stage codegen — everything below the file list is stock
- * Catalyst, mirroring how delta-rs layers its `DeltaScan` TableProvider on
- * DataFusion's ParquetSource (`delta_datafusion/table_provider/next/mod.rs:728-768`).
+ * parquet source through a [[LogFileIndex]]. Spark then does projection
+ * pushdown, parquet row-group filtering, whole-stage codegen — everything
+ * below the file list is stock Catalyst, mirroring how delta-rs layers its
+ * `DeltaScan` TableProvider on DataFusion's ParquetSource
+ * (`delta_datafusion/table_provider/next/mod.rs:728-768`).
  *
- * Data files omit partition columns (Delta protocol); they are recovered
- * from the LOG's per-file partitionValues via a broadcast file→values
- * lookup (PartitionValueAt), then cast to the table schema's declared
- * types — NOT hive directory inference, which cannot cover column-mapped
- * or random-prefix layouts (see readRaw).
+ * Data files omit partition columns (Delta protocol). The index lists each
+ * file under its partition row, typed from the LOG's partitionValues —
+ * NOT hive directory inference, which cannot cover column-mapped or
+ * random-prefix layouts — so Catalyst plans them as partition columns.
  */
 object Scan {
 
-  /** Broadcast memo for per-scan lookup structures (DV masks, partition
-    * values): repeated scans of the same snapshot — a temp view queried
-    * many times, or the several passes of one DML — were re-reading every
-    * DV bitmap sequentially on the driver and re-broadcasting identical
-    * bytes per query. Key discipline:
+  /** Broadcast memo for DV masks: repeated scans of the same snapshot — a
+    * temp view queried many times, or the several passes of one DML — were
+    * re-reading every DV bitmap sequentially on the driver and
+    * re-broadcasting identical bytes per query. Key discipline:
     * - the SparkContext applicationId is part of the key — a cached
     *   broadcast from a stopped context would fail every task after a
     *   same-JVM session restart ("Broadcast used after destroy");
     * - the file set is identified by its md5 (128-bit), never a 32-bit
     *   hashCode — a collision between two pruned subsets would silently
-    *   serve the wrong masks/partition values (wrong RESULTS, not an
-    *   error);
+    *   serve the wrong masks (wrong RESULTS, not an error);
     * - insertion-order eviction at a SMALL cap (8): entries hold strong
     *   references to broadcasts of whole DV bitmaps, and Spark's
     *   ContextCleaner can only reclaim them once unreferenced — a large
     *   cache would PIN hundreds of MB on long-lived drivers. Correctness
     *   never depends on a hit. */
   private val lookupMemo =
-    new java.util.LinkedHashMap[(String, String, Long, String, String), AnyRef]() {
+    new java.util.LinkedHashMap[(String, String, Long, String), AnyRef]() {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Long, String, String), AnyRef]): Boolean =
+          e: java.util.Map.Entry[(String, String, Long, String), AnyRef]): Boolean =
         size() > 8
     }
   /** md5 identity of an ordered path list. NUL-terminates each path inside
@@ -57,10 +57,10 @@ object Scan {
   }
 
   private def memoLookup[T <: AnyRef](spark: SparkSession, snapshot: Snapshot,
-      kind: String, paths: Seq[String])(build: => T): T = {
+      paths: Seq[String])(build: => T): T = {
     val setId = fileSetId(paths)
     val key = (spark.sparkContext.applicationId, snapshot.tablePath.toString,
-      snapshot.version, kind, setId)
+      snapshot.version, setId)
     // build OUTSIDE the lock: blob reads + broadcast can take seconds and
     // must not serialize unrelated tables' scans; a same-key race just
     // builds twice (harmless — the loser's broadcast is GC-reclaimed)
@@ -145,7 +145,7 @@ object Scan {
       // alone: a pinned snapshot (streaming source) can serve batches where
       // the same path set reappears with a NEW deletion vector — a
       // path-only key would hit the stale mask and emit deleted rows
-      val lookup = memoLookup(spark, snapshot, "dv", dvFiles.map(_.reconcileKey)) {
+      val lookup = memoLookup(spark, snapshot, dvFiles.map(_.reconcileKey)) {
         val conf = spark.sessionState.newHadoopConf()
         val tp = new org.apache.hadoop.fs.Path(snapshot.tablePath)
         // parallel blob reads: thousands of sequential open/read round
@@ -192,86 +192,88 @@ object Scan {
           s"column name '$n' is reserved for row identity on DV-masked/DML " +
             "scans of this engine — rename the column")
       }
-    val partCols = snapshot.partitionColumns
     if (files.isEmpty) {
       val out = if (withIdentity)
-        StructType(schema.fields :+
-          org.apache.spark.sql.types.StructField("__file", org.apache.spark.sql.types.StringType) :+
-          org.apache.spark.sql.types.StructField("__pos", org.apache.spark.sql.types.LongType))
+        StructType(schema.fields :+ StructField("__file", StringType) :+
+          StructField("__pos", LongType))
       else schema
       return emptyDf(spark, out)
     }
 
-    val paths = files.map(f => snapshot.absolutePath(f.path).toString)
-    // under column mapping, files carry physical names; read physically,
-    // project back to logical (column_mapping.rs semantics)
-    val mapped = graft.kernel.ColumnMapping.enabled(snapshot.metadata)
-    val nm = if (mapped) graft.kernel.ColumnMapping.nameMap(schema) else Map.empty[String, String]
-    val logicalData = StructType(schema.filterNot(f => partCols.contains(f.name)))
-    val dataSchema =
-      if (mapped) graft.kernel.ColumnMapping.physicalSchema(logicalData) else logicalData
-
-    val raw = spark.read.schema(dataSchema).parquet(paths.map(globEscape): _*)
-
-    // partition columns come from the LOG's partitionValues (the protocol's
-    // source of truth, resolved per-file by a codegen'd broadcast lookup on
-    // _metadata.file_path) — NOT from hive `key=value` path inference, which
-    // cannot cover column-mapped / random-prefix layouts (e.g. the
-    // reference's table_with_column_mapping golden stores files under 2-char
-    // prefix dirs) and loses to the log when directories disagree.
-    lazy val pvLookup = memoLookup(spark, snapshot, "pv", files.map(_.path)) {
-      val byFile: Map[String, Array[String]] = graft.kernel.PathKeys.variantMap(
-        files.map { f =>
-          snapshot.absolutePath(f.path) ->
-            partCols.map(c => f.partitionValues.getOrElse(nm.getOrElse(c, c), null)).toArray
-        })
-      new graft.functions.PartitionValueLookup(spark.sparkContext.broadcast(byFile))
-    }
-    import org.apache.spark.sql.GraftSqlBridge
-    // literal attribute references, never parsing col(): a legal column
-    // name containing a dot (or a convert_to_delta physical name) would
-    // otherwise bind a struct FIELD path — AnalysisException at best, the
-    // wrong data at worst (one shared definition: GraftSqlBridge.attr)
-    def attr(n: String): Column = GraftSqlBridge.attr(n)
+    val layout = new FileLayout(snapshot.metadata)
+    val raw = layout.relation(spark, snapshot.tablePath, files.map(f =>
+      LogFileIndex.Entry(f.path, f.size, f.modificationTime, layout.partitionRow(f.partitionValues))))
     // Spark HIDES the file-source _metadata struct whenever the data
     // schema contains a column of that name (protocol-legal in foreign-
     // written tables): col("_metadata.file_path") would then bind the USER
-    // column — AnalysisException on partitioned/DV reads at best, wrong
-    // file identity at worst. metadataColumn() resolves the METADATA
-    // column explicitly, immune to shadowing; the data column itself
-    // still reads normally through `attr`.
-    lazy val fileMeta: Column = raw.metadataColumn("_metadata")
-    val cols: Seq[Column] = schema.map { f =>
-      if (partCols.contains(f.name)) {
-        GraftSqlBridge.column(graft.functions.PartitionValueAt(
-          GraftSqlBridge.expression(fileMeta.getField("file_path")),
-          partCols.indexOf(f.name), pvLookup)).cast(f.dataType).as(f.name)
-      } else if (mapped) attr(nm.getOrElse(f.name, f.name)).cast(f.dataType).as(f.name)
-      else attr(f.name)
-    }
+    // column — AnalysisException on DV reads at best, wrong file identity
+    // at worst. metadataColumn() resolves the METADATA column explicitly,
+    // immune to shadowing; the data column itself still reads normally.
     val identity: Seq[Column] =
-      if (withIdentity)
+      if (withIdentity) {
+        val fileMeta = raw.metadataColumn("_metadata")
         Seq(fileMeta.getField("file_path").as("__file"),
           fileMeta.getField("row_index").as("__pos"))
-      else Nil
-    raw.select(cols ++ identity: _*)
+      } else Nil
+    raw.select(layout.columns ++ identity: _*)
   }
 
-  /** Escape Hadoop-glob metacharacters in a path handed to `spark.read`:
-    * the reader glob-expands its path arguments, so a data file legally
-    * named `report [2020].parquet` (foreign writers, convert_to_delta
-    * inputs — our own writer emits only safe names) would fail resolution,
-    * and a literal `*` would silently match OTHER files. Backslash-escape,
-    * which Hadoop's GlobPattern honors. `_metadata.file_path` joins are
-    * unaffected (they see the resolved, unescaped path). */
-  private[graft] def globEscape(p: String): String = {
-    val sb = new StringBuilder(p.length + 8)
-    p.foreach { c =>
-      if (c == '\\' || c == '[' || c == ']' || c == '{' || c == '}' ||
-          c == '*' || c == '?') sb += '\\'
-      sb += c
+  /** How a table's data files lay out its schema: under column mapping
+    * they carry physical names (column_mapping.rs semantics), and they
+    * omit the partition columns, which come from the log. */
+  private[graft] final class FileLayout(meta: Metadata) {
+    private val schema = meta.schema
+    private val partCols = meta.partitionColumns
+    private val mapped = ColumnMapping.enabled(meta)
+    private val nm =
+      if (mapped) ColumnMapping.nameMap(schema) else Map.empty[String, String]
+    private def physical(n: String): String = nm.getOrElse(n, n)
+
+    /** The partition columns as the files name them, with declared types. */
+    val partitionFields: Seq[StructField] = schema
+      .filter(f => partCols.contains(f.name))
+      .map(f => StructField(physical(f.name), f.dataType))
+
+    val dataSchema: StructType = {
+      val logical = StructType(schema.filterNot(f => partCols.contains(f.name)))
+      if (mapped) ColumnMapping.physicalSchema(logical) else logical
     }
-    sb.toString
+
+    /** A file's partition row from its log partitionValues (keyed by
+      * physical name): a missing key, JSON null and
+      * `__HIVE_DEFAULT_PARTITION__` read NULL. */
+    def partitionRow(pv: Map[String, String]): Seq[Literal] = partitionFields.map { f =>
+      Literal.create(pv.get(f.name).filterNot(_ == PartitionCodec.HIVE_DEFAULT).orNull, StringType)
+    }
+
+    /** `entries` as Spark's parquet relation over a [[LogFileIndex]]:
+      * the data columns plus `extraData`, then the partition columns plus
+      * `extraPartition` (which each entry's row carries last). */
+    def relation(spark: SparkSession, tablePath: String, entries: Seq[LogFileIndex.Entry],
+        extraData: Seq[StructField] = Nil, extraPartition: Seq[StructField] = Nil): DataFrame = {
+      val index = new LogFileIndex(spark, tablePath,
+        StructType(partitionFields ++ extraPartition), entries)
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+        StructType(dataSchema ++ extraData), None, new ParquetFileFormat, Map.empty)(spark))
+    }
+
+    /** The table's columns under their logical names, over [[relation]].
+      * Literal attribute references, never parsing col(): a legal column
+      * name containing a dot (or a convert_to_delta physical name) would
+      * otherwise bind a struct FIELD path. A column is cast only where its
+      * physical type differs (nested field names): a cast is not "cheap"
+      * to Spark's `ScanOperation`, which then keeps a filter that names
+      * the column twice above the scan instead of pushing it down. */
+    val columns: Seq[Column] = {
+      import org.apache.spark.sql.GraftSqlBridge.attr
+      val physicalTypes = dataSchema.map(f => f.name -> f.dataType).toMap
+      schema.map { f =>
+        val c = attr(physical(f.name))
+        if (!mapped) c
+        else if (physicalTypes.get(physical(f.name)).forall(_ == f.dataType)) c.as(f.name)
+        else c.cast(f.dataType).as(f.name)
+      }
+    }
   }
 
   def emptyDf(spark: SparkSession, schema: StructType): DataFrame =

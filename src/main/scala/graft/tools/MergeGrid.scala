@@ -56,8 +56,7 @@ object MergeGrid {
   }
 
   /** Merge source of Bench's merge_upsert/merge_upsert_dv rows: 50%
-    * matched (updates), ~1% inserted — ONE definition shared with
-    * MergeProfile so profiler timings always explain the bench row. */
+    * matched (updates), ~1% inserted. */
   def benchUpsertSource(orders: DataFrame): DataFrame =
     orders.filter("o_orderkey % 2 = 0")
       .unionByName(orders.filter("o_orderkey % 100 = 0")

@@ -18,7 +18,7 @@ object SmokeDrive {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // SPARK_GRAFT_SF_DIR is the repo-standard override (Bench/MergeProfile);
+    // SPARK_GRAFT_SF_DIR is the repo-standard override (Bench);
     // SF_DIR stays as the documented legacy alias for this tool
     val sf = sys.env.get("SPARK_GRAFT_SF_DIR")
       .orElse(sys.env.get("SF_DIR"))

@@ -80,6 +80,41 @@ class CatalogReadSpec extends AnyFunSuite {
       api("cm").where("p = 2 AND id < 40").select("id", "unit price"))
   }
 
+  test("partition columns are scan partition columns: column mapping, a NULL " +
+      "partition and a file outside any key=value directory") {
+    import spark.implicits._
+    val dir = s"$warehouse/s/pm"
+    val df = Seq((1L, "a", Some(1)), (2L, "b", Some(2)), (3L, "c", None),
+      (4L, "d", Some(2)), (5L, "e", None)).toDF("id", "v", "p")
+    DeltaTable.write(spark, df, dir, partitionBy = Seq("p"),
+      configuration = Map("delta.columnMapping.mode" -> "name"))
+    // move the p=2 file under a plain prefix and point its Add at it, so
+    // no directory name carries the partition value
+    val moved = DeltaTable.forPath(spark, dir).snapshot.allFiles
+      .find(_.partitionValues.values.toSeq == Seq("2")).get
+    val name = Paths.get(moved.path).getFileName.toString
+    Files.createDirectories(Paths.get(dir, "xy"))
+    Files.move(Paths.get(dir, moved.path), Paths.get(dir, "xy", name))
+    val commit = Paths.get(dir, "_delta_log", graft.kernel.LogStore.commitFileName(0L))
+    val json = new String(Files.readAllBytes(commit), "UTF-8")
+    assert(json.contains(s"\"path\":\"${moved.path}\""), json)
+    Files.write(commit, json.replace(s"\"path\":\"${moved.path}\"",
+      s"\"path\":\"xy/$name\"").getBytes("UTF-8"))
+
+    def partitionFilters(read: DataFrame): Seq[String] =
+      executedNodes(read.queryExecution.executedPlan).collect {
+        case s: FileSourceScanExec => s.partitionFilters.map(_.sql)
+      }.flatten
+    Seq("p = 2" -> Seq(2L, 4L), "p IS NULL" -> Seq(3L, 5L)).foreach { case (where, ids) =>
+      val catalog = sql(s"SELECT id FROM rd.s.pm WHERE $where")
+      val library = api("pm").where(where).select("id")
+      Seq(catalog, library).foreach { read =>
+        assert(read.collect().map(_.getLong(0)).toSeq.sorted == ids, where)
+        assert(partitionFilters(read).nonEmpty, s"$where: no partition filter in the scan")
+      }
+    }
+  }
+
   test("VERSION AS OF reads the pinned snapshot") {
     sql("CREATE TABLE rd.s.tt (id BIGINT)")
     sql("INSERT INTO rd.s.tt VALUES (1), (2)") // v1

@@ -272,6 +272,45 @@ class Round8Spec extends AnyFunSuite {
     assert(feed == want, s"got $feed")
   }
 
+  test("CDF: a _commit_version filter selects one version's rows as a scan " +
+      "partition filter") {
+    val dir = tmpDir()
+    import spark.implicits._
+    DeltaTable.write(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "s"), dir,
+      configuration = Map("delta.enableChangeDataFeed" -> "true"))
+    DeltaTable.write(spark, Seq((3L, "c")).toDF("id", "s"), dir, mode = "append") // v1
+    val t = DeltaTable.forPath(spark, dir)
+    t.delete(Some("id = 2")) // v2: cdc files
+    DeltaTable.write(spark, Seq((4L, "d")).toDF("id", "s"), dir, mode = "append") // v3
+    Seq(1L -> Set((3L, "insert")), 2L -> Set((2L, "delete"))).foreach { case (v, want) =>
+      val feed = t.loadCdf(0).filter(col("_commit_version") === v)
+        .select("id", "_change_type")
+      assert(feed.collect().map(r => (r.getLong(0), r.getString(1))).toSet == want, s"v$v")
+      val filters = CatalogReadSpec.executedNodes(feed.queryExecution.executedPlan).collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.partitionFilters
+      }.flatten
+      assert(filters.exists(_.references.exists(_.name == "_commit_version")),
+        s"v$v: no _commit_version partition filter in the scans: $filters")
+    }
+  }
+
+  test("CDF: a remove action without a size still reads its file's rows") {
+    val dir = tmpDir()
+    import spark.implicits._
+    DeltaTable.write(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1), dir,
+      configuration = Map("delta.enableChangeDataFeed" -> "true"))
+    val t = DeltaTable.forPath(spark, dir)
+    // a FOREIGN writer's remove: size is optional in the protocol
+    val path = t.snapshot.allFiles.head.path
+    t.deltaLog.store.writeAtomic(
+      new org.apache.hadoop.fs.Path(t.deltaLog.logPath,
+        graft.kernel.LogStore.commitFileName(1)),
+      Iterator(s"""{"remove":{"path":"$path","deletionTimestamp":1,"dataChange":true}}"""))
+    val feed = DeltaTable.forPath(spark, dir).loadCdf(1).select("id", "_change_type")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(feed == Set((1L, "delete"), (2L, "delete")), s"got $feed")
+  }
+
   test("CDF: a commit without CommitInfo.timestamp gets the mtime, not epoch 0") {
     val dir = tmpDir()
     import spark.implicits._
