@@ -1,95 +1,76 @@
 package graft.functions
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicReferenceArray
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Predicate}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 
 import graft.kernel.DeletionVectors
 
 /**
  * Executor-side deletion-vector membership over a broadcast of
- * roaring-COMPRESSED bitmaps keyed by file path (KBs per masked file):
+ * roaring-COMPRESSED bitmaps indexed by DV slot (KBs per masked file):
  * the scale-safe replacement for anti-joining exploded (file, pos) pairs,
  * whose broadcast is tens of GB at 1B masked rows (the reference applies
- * DVs as per-file selection-vector masks, `next/scan/exec.rs:63-150` —
- * this is the same shape expressed as a Catalyst predicate).
+ * DVs as per-file selection-vector masks keyed by the log's file entry,
+ * `next/scan/exec.rs:63-150` — this is the same shape expressed as a
+ * Catalyst predicate). [[graft.table.LogFileIndex]] lists each DV file
+ * with its slot as the constant `_metadata.dv_slot` field, so a row finds
+ * its bitmap by array index.
  *
- * Bitmaps parse lazily once per file per executor into their COMPRESSED
- * container form ([[DeletionVectors.RoaringMembership]] — membership is
- * answered on array/bitset/run containers directly, so the per-task
+ * Bitmaps parse lazily once per slot per deserialized lookup into their
+ * COMPRESSED container form ([[DeletionVectors.RoaringMembership]] —
+ * membership is answered on array/bitset/run containers directly, so the
  * working set stays at roaring size instead of a flattened Array[Long]
- * that would be 8 bytes per deleted row); row lookups hit a thread-local
- * (file → membership) memo — scan rows arrive grouped by file, so the
- * common case is one UTF8String equality check + two binary searches.
+ * that would be 8 bytes per deleted row).
  */
-class DvMaskLookup(masks: Broadcast[Map[String, Array[Byte]]]) extends Serializable {
+class DvMaskLookup(masks: Broadcast[Array[Array[Byte]]]) extends Serializable {
   @transient private lazy val decoded =
-    new ConcurrentHashMap[String, DeletionVectors.RoaringMembership]()
-  @transient private lazy val memo = new PerFileMemo
+    new AtomicReferenceArray[DeletionVectors.RoaringMembership](masks.value.length)
 
-  def deleted(file: UTF8String, pos: Long): Boolean = {
-    val cached = memo.get(file)
-    val mem =
-      if (cached != null) cached.asInstanceOf[DeletionVectors.RoaringMembership]
-      else {
-        // every file this predicate scans carries a DV by construction
-        // (Scan.readFiles masks only the dvFiles leg) — a lookup miss is a
-        // path-variant mismatch between _metadata.file_path and
-        // PathKeys.variants, and failing open would silently resurrect
-        // deleted rows. Fail loudly.
-        val m = decoded.computeIfAbsent(file.toString, k =>
-          masks.value.get(k).map(DeletionVectors.decodeRoaringMembership)
-            .getOrElse(throw new IllegalStateException(
-              s"deletion-vector mask lookup missed file '$k' (path-variant " +
-                "mismatch) — refusing to return masked rows unfiltered")))
-        memo.put(file, m)
-        m
-      }
-    mem.contains(pos)
+  def deleted(slot: Int, pos: Long): Boolean = {
+    var m = decoded.get(slot)
+    if (m == null) {
+      m = DeletionVectors.decodeRoaringMembership(masks.value(slot))
+      decoded.set(slot, m)
+    }
+    m.contains(pos)
   }
 }
 
-/** Thread-local one-slot (file → payload) memo for the per-file mask
-  * lookup — scan rows arrive grouped by file, so one UTF8String equality
-  * check hits almost always. The key must be `clone()`d because the input
-  * UTF8String may alias a reused row buffer. */
-final class PerFileMemo extends Serializable {
-  @transient private lazy val tl = new ThreadLocal[Array[AnyRef]] {
-    override def initialValue(): Array[AnyRef] = new Array[AnyRef](2)
-  }
-  /** The cached payload for `file`, or null on a miss. */
-  def get(file: UTF8String): AnyRef = {
-    val m = tl.get()
-    if (m(0) != null && m(0).asInstanceOf[UTF8String].equals(file)) m(1) else null
-  }
-  def put(file: UTF8String, payload: AnyRef): Unit = {
-    val m = tl.get()
-    m(0) = file.clone()
-    m(1) = payload
-  }
-}
-
-/** TRUE when the row at (`file`, `pos`) is NOT masked by its file's
-  * deletion vector — a codegen'd filter predicate, so DV application adds
-  * no join to the scan plan and stays inside whole-stage codegen. */
-case class DvMaskKeep(file: Expression, pos: Expression, lookup: DvMaskLookup)
+/** TRUE when the row at (`slot`, `pos`) is NOT masked by its file's
+  * deletion vector; a NULL slot (a file without one) keeps the row. A
+  * codegen'd filter predicate, so DV application adds no join to the scan
+  * plan and stays inside whole-stage codegen. */
+case class DvMaskKeep(slot: Expression, pos: Expression, lookup: DvMaskLookup)
     extends BinaryExpression with Predicate {
 
-  override def left: Expression = file
+  override def left: Expression = slot
   override def right: Expression = pos
+  override def nullable: Boolean = false
 
-  override protected def nullSafeEval(f: Any, p: Any): Any =
-    !lookup.deleted(f.asInstanceOf[UTF8String], p.asInstanceOf[Long])
+  override def eval(input: InternalRow): Any = {
+    val s = slot.eval(input)
+    s == null || !lookup.deleted(s.asInstanceOf[Int], pos.eval(input).asInstanceOf[Long])
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("dvMasks", lookup, classOf[DvMaskLookup].getName)
-    nullSafeCodeGen(ctx, ev, (f, p) => s"${ev.value} = !$ref.deleted($f, $p);")
+    val s = slot.genCode(ctx)
+    val p = pos.genCode(ctx)
+    ev.copy(code = code"""
+      ${s.code}
+      boolean ${ev.value} = ${s.isNull};
+      if (!${ev.value}) {
+        ${p.code}
+        ${ev.value} = !$ref.deleted(${s.value}, ${p.value});
+      }""", isNull = FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
-    copy(file = newLeft, pos = newRight)
+    copy(slot = newLeft, pos = newRight)
 }

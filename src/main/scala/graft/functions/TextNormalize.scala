@@ -56,8 +56,10 @@ case class TextNormalize(child: Expression, mode: String)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val m = ctx.addReferenceObj("mode", mode, "java.lang.String")
+    // the companion's MODULE$: Janino resolves a bare
+    // `graft.functions.TextNormalize.apply` to the case class (TreeNode.apply)
     defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextNormalize.apply($c, $m)")
+      c => s"graft.functions.TextNormalize$$.MODULE$$.apply($c, $m)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): TextNormalize =

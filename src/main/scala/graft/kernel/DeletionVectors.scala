@@ -22,62 +22,6 @@ import org.apache.hadoop.fs.Path
  * The decoder returns deleted row indexes; [[serializeRoaring]] writes the
  * same format (array/bitset containers) for DV-table fixtures and tests.
  */
-/** Spellings under which Spark's `_metadata.file_path` / `input_file_name`
-  * may report a path — used to key driver-built maps joined against scans. */
-object PathKeys {
-  def variants(p: Path): Seq[String] = {
-    val uri = p.toUri
-    val decoded = uri.getPath
-    val encoded = try new java.net.URI(null, null, decoded, null).getRawPath
-      catch { case _: Exception => decoded }
-    // bare/file:-prefixed spellings are only REAL spellings for local or
-    // scheme-less paths: emitting them for authority-qualified URIs made
-    // two same-keyed files in DIFFERENT buckets collide to one variant
-    // ('/t/f.parquet') and variantMap refused the whole (unambiguous)
-    // table. Remote paths keep their scheme+authority in every variant.
-    val local = Option(uri.getScheme).forall(_ == "file") && uri.getAuthority == null
-    val extra =
-      if (local)
-        Seq(decoded, encoded, "file:" + encoded, "file://" + encoded, "file:" + decoded)
-      else {
-        // A scheme-less path can still carry an authority ('//host/t/f');
-        // concatenating the null scheme would emit bogus 'null://host/...'
-        // keys, so the prefix keeps only the '//authority' part there.
-        val pre = Option(uri.getScheme).map(_ + "://").getOrElse("//") +
-          Option(uri.getAuthority).getOrElse("")
-        Seq(pre + decoded, pre + encoded)
-      }
-    (Seq(p.toString, uri.toString) ++ extra).distinct
-  }
-
-  /** Build a per-file variant-key lookup, failing LOUDLY on a collision:
-    * two files whose names differ only by percent-encoding ('x y.parquet'
-    * vs 'x%20y.parquet' — both legal) share variant keys, and a silent
-    * .toMap would hand one file the other's payload (DV mask / partition
-    * values) — exactly the corruption the fail-loud lookups exist to
-    * prevent. Collisions are refused, never resolved by last-writer-wins. */
-  def variantMap[T](entries: Seq[(Path, T)]): Map[String, T] = {
-    val owner = scala.collection.mutable.HashMap[String, Path]()
-    val out = scala.collection.mutable.HashMap[String, T]()
-    entries.foreach { case (p, v) =>
-      variants(p).foreach { k =>
-        owner.get(k) match {
-          case Some(p0) if p0 != p =>
-            throw new IllegalStateException(
-              s"path-variant collision: '$k' resolves to both '$p0' and " +
-                s"'$p' — refusing to build an ambiguous per-file lookup " +
-                "(rename one of the files; percent-encoded and literal " +
-                "forms of the same name cannot coexist in one table)")
-          case _ =>
-            owner(k) = p
-            out(k) = v
-        }
-      }
-    }
-    out.toMap
-  }
-}
-
 object DeletionVectors {
 
   val MAGIC = 1681511377

@@ -4,35 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.kernel._
-import graft.table.{DeltaTable, DeltaWriter, Scan}
+import graft.table.{DeltaTable, DeltaWriter, LogFileIndex, Scan}
 
 /** Shared DML plumbing: matched-file discovery and CDC emission. */
 object Dml {
 
   private[ops] val logger = org.slf4j.LoggerFactory.getLogger("graft.ops")
-
-  /** Map `input_file_name()` / `_metadata.file_path` URIs back to AddFiles.
-    * Keyed by AUTHORITY + decoded absolute filesystem path:
-    * - part-file NAMES are not unique across partition directories (one
-    *   Spark write task reuses the same job UUID + task number in every
-    *   partition dir it writes) — hence the full path;
-    * - absolute-URI AddFiles on DIFFERENT buckets can share a path
-    *   (s3a://bucketA/data/f vs s3a://bucketB/data/f) — hence the
-    *   authority. The SCHEME is deliberately excluded: the scan side is
-    *   always fs-qualified (file:/tmp/x) while a local table's AddFile
-    *   URIs may be scheme-less (/tmp/x), and keying on it would split
-    *   identical files; cross-scheme same-bucket-same-path aliases don't
-    *   arise in practice (a bucket name binds to one store). */
-  def filePathIndex(snapshot: Snapshot, files: Seq[AddFile]): Map[String, AddFile] =
-    files.map(f => pathKey(snapshot.absolutePath(f.path).toUri) -> f).toMap
-
-  private def pathKey(u: java.net.URI): String =
-    Option(u.getAuthority).getOrElse("") + u.getPath
-
-  /** Decode a scan-emitted file URI to the index key above. */
-  def uriToPathKey(uri: String): String =
-    try pathKey(new java.net.URI(uri))
-    catch { case _: Exception => pathKey(new org.apache.hadoop.fs.Path(uri).toUri) }
 
   /** Files that actually contain rows matching `pred` — stats-pruned
     * candidates narrowed by a distributed scan tagging each row with its
@@ -49,35 +26,26 @@ object Dml {
       // stats pruning on partition-only predicates is exact
       return candidates
     }
-    matchedFiles(spark, snapshot, candidates, pred, "DML")
+    matchedFiles(spark, snapshot, candidates, pred)
   }
 
-  /** Scan `candidates`, keep the files with at least one `pred` match, and
-    * map each matched URI back to its snapshot AddFile — ONE definition of
-    * the scan/map-back block (the URI-keying edge cases have a history;
-    * fixes must not need to land twice). */
+  /** Scan `candidates` and keep the files with at least one `pred` match:
+    * each scanned row names its file by `_metadata.log_path`, the AddFile's
+    * own path. */
   private[graft] def matchedFiles(
       spark: SparkSession,
       snapshot: Snapshot,
       candidates: Seq[AddFile],
-      pred: String,
-      op: String): Seq[AddFile] = {
+      pred: String): Seq[AddFile] = {
     if (candidates.isEmpty) return Nil
-    val idx = filePathIndex(snapshot, candidates)
-    Scan.readFiles(spark, snapshot, candidates)
-      .filter(expr(pred))
-      .select(input_file_name().as("f"))
+    val byPath = candidates.map(f => f.path -> f).toMap
+    val scan = Scan.readFiles(spark, snapshot, candidates)
+    scan.filter(expr(pred))
+      .select(scan.metadataColumn("_metadata").getField(LogFileIndex.LogPath))
       .distinct()
       .collect()
-      .toSeq.map(r => mapBack(idx, r.getString(0), op))
+      .toSeq.map(r => byPath(r.getString(0)))
   }
-
-  /** Map a scan-emitted URI back to its AddFile, failing loudly on a miss
-    * (a path-encoding mismatch must never silently skip a matched file). */
-  private[graft] def mapBack(idx: Map[String, AddFile], uri: String, op: String): AddFile =
-    idx.getOrElse(uriToPathKey(uri), throw new IllegalStateException(
-      s"$op: matched file $uri does not map back to a snapshot AddFile " +
-        "(path-encoding mismatch) — refusing to silently skip it"))
 
   /** Above this size a file-membership IN-list becomes a broadcast join —
     * an isin over 100k paths is a megabyte-scale expression the planner
@@ -253,7 +221,7 @@ object DeleteOp {
         val partialFiles =
           if (partialCandidates.isEmpty) Nil
           else phases("find_files")(
-            Dml.matchedFiles(spark, snapshot, partialCandidates, pred, "DELETE"))
+            Dml.matchedFiles(spark, snapshot, partialCandidates, pred))
         // identity columns only for the DV mask's __file/__pos consumer —
         // without DVs a data column may itself be named __pos or __file
         val partialHit: Option[DataFrame] =
@@ -282,7 +250,7 @@ object DeleteOp {
         val (dvActions, rewriteAdds, dvDeletedRows, masked) =
           if (partialFiles.isEmpty) (Nil, Nil, 0L, useDv)
           else if (useDv) phases("dv_mask")(DvWriter.maskDistributed(table,
-            Dml.filePathIndex(snapshot, partialFiles),
+            partialFiles.map(f => f.path -> f).toMap,
             partialHit.get.filter(predCol)
               .select(col("__file"), col("__pos")))) match {
             case Some((acts, n)) => (acts, Nil, n, true)
@@ -366,7 +334,7 @@ class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.Config
 /** One executor-built deletion-vector blob: descriptor fields for a single
   * masked file plus how many rows its task newly masked. */
 case class DvBlob(
-    key: String,
+    path: String,
     storageType: String,
     pathOrInlineDv: String,
     offset: Option[Int],
@@ -405,7 +373,7 @@ object DvWriter {
   }
 
   /** Build per-file DV blobs ON EXECUTORS from a DataFrame of
-    * (`__file` URI, `__pos`) hit rows: hits shuffle by file, each task
+    * (`__file` log path, `__pos`) hit rows: hits shuffle by file, each task
     * writes its files' roaring blobs (unioned with any existing mask) and
     * only the per-file descriptors — one small row per masked file —
     * return to the driver. The naive collect() of 50M (file,pos) pairs was
@@ -419,7 +387,7 @@ object DvWriter {
     * a mask that big defeats the purpose of DVs). */
   def maskDistributed(
       table: DeltaTable,
-      filesByKey: Map[String, AddFile],
+      filesByPath: Map[String, AddFile],
       hits: DataFrame): Option[(Seq[Action], Long)] = {
     val spark = table.spark
     val cap = spark.conf.getOption("spark.graft.dv.maxMaskedRows")
@@ -435,7 +403,7 @@ object DvWriter {
     val bcConf = spark.sparkContext.broadcast(
       new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
     val bcDvs = spark.sparkContext.broadcast(
-      filesByKey.collect { case (k, a) if a.deletionVector.isDefined =>
+      filesByPath.collect { case (k, a) if a.deletionVector.isDefined =>
         k -> a.deletionVector.get })
 
     val blobs: Array[DvBlob] = hits
@@ -452,23 +420,22 @@ object DvWriter {
         var bufN = 0L
         var over = false // this file's fresh mask exceeded perFileCap
         def flush(): Unit = if (cur != null) {
-          val key = Dml.uriToPathKey(cur)
           if (over) {
             // sentinel: no blob written; sizeInBytes = -1 tells the driver
             // to abandon DV mode (rewrite fallback) without any big array
             // ever having been allocated here
-            out += DvBlob(key, "", "", None, -1, -1L, bufN)
+            out += DvBlob(cur, "", "", None, -1, -1L, bufN)
           } else {
             val fresh = buf.result()
-            val existing = bcDvs.value.get(key)
+            val existing = bcDvs.value.get(cur)
               .map(d => DeletionVectors.read(tp, d, conf))
               .getOrElse(Array.empty[Long])
             if (existing.length.toLong + fresh.length > perFileCap)
-              out += DvBlob(key, "", "", None, -1, -1L, bufN)
+              out += DvBlob(cur, "", "", None, -1, -1L, bufN)
             else {
               val union = unionSorted(existing, fresh)
               val desc = DeletionVectors.writeDvFile(tp, union, conf)
-              out += DvBlob(key, desc.storageType, desc.pathOrInlineDv, desc.offset,
+              out += DvBlob(cur, desc.storageType, desc.pathOrInlineDv, desc.offset,
                 desc.sizeInBytes, desc.cardinality, fresh.length.toLong)
             }
           }
@@ -511,7 +478,7 @@ object DvWriter {
     }
     val now = System.currentTimeMillis()
     val actions = blobs.toSeq.flatMap { b =>
-      val add = filesByKey(b.key)
+      val add = filesByPath(b.path)
       val desc = DeletionVectorDescriptor(b.storageType, b.pathOrInlineDv,
         b.offset, b.sizeInBytes, b.cardinality)
       Seq(add.remove(now, dataChange = true),
@@ -631,7 +598,7 @@ object UpdateOp {
     val files =
       if (partitionOnly) candidates // partition-only stats pruning is exact
       else phases("find_files")(
-        Dml.matchedFiles(spark, snapshot, candidates, pred, "UPDATE"))
+        Dml.matchedFiles(spark, snapshot, candidates, pred))
     txn.readFile(files.map(_.path))
     if (files.isEmpty) return emptyCommit()
     val srcHit = Scan.readFiles(spark, snapshot, files, withFileIdentity = useDv)
@@ -684,7 +651,7 @@ object UpdateOp {
     }
     val (actions, adds, removes, updatedRows): (Seq[Action], Seq[AddFile], Seq[Action], Long) =
       if (useDv) phases("dv_mask")(DvWriter.maskDistributed(table,
-        Dml.filePathIndex(snapshot, files),
+        files.map(f => f.path -> f).toMap,
         srcHit.filter(predCol).select(col("__file"), col("__pos")))) match {
         case Some((dvActions, masked)) =>
           val updatedOnly = Validation.prepareForWrite(spark,

@@ -33,8 +33,8 @@ class MergeDuplicateMatchException extends RuntimeException(
  *  - early filter: one `agg(min,max)` / distinct on the source builds a
  *    pruning predicate over the join keys → stats + partition skipping cuts
  *    the target file set before any shuffle;
- *  - target rows carry `_metadata` file/row-index identity; the "barrier"
- *    is `filter(op != COPY).select(__file).distinct()`;
+ *  - target rows carry `_metadata` log-path/row-index identity; the
+ *    "barrier" is `filter(op != COPY).select(__file).distinct()`;
  *  - duplicate-match validation is a groupBy over (file,row) identity;
  *  - Spark/AQE picks the join strategy (broadcast when the source is small).
  *
@@ -486,12 +486,8 @@ object MergeOp {
 
       val changedFiles = perFile.filter(_.getInt(2) == 1).map(_.getString(0)).toSet
 
-      val pathIdx = Dml.filePathIndex(snapshot, candidates)
-      val removedAdds = changedFiles.toSeq.map { uri =>
-        pathIdx.getOrElse(Dml.uriToPathKey(uri), throw new IllegalStateException(
-          s"MERGE: changed file $uri does not map back to a snapshot AddFile " +
-          "(path-encoding mismatch) — refusing to commit a duplicate-row state"))
-      }
+      val pathIdx = candidates.map(f => f.path -> f).toMap
+      val removedAdds = changedFiles.toSeq.map(pathIdx)
 
       // ---- output projection ----
       // CASE-INSENSITIVE membership, matching Spark's default resolution

@@ -3,9 +3,10 @@ package graft.table
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, FileSourceConstantMetadataStructField, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import graft.kernel.PathCodec
 
@@ -21,8 +22,16 @@ import graft.kernel.PathCodec
  * Each entry's partition row holds one [[Literal]] per `partitionSchema`
  * field, cast to the field's type with the session time zone: a log
  * partition string casts like a SQL string, and CDF's per-file
- * `_commit_version`/`_commit_timestamp` arrive typed. The same path may appear under two rows (a CDF leg re-adding a
- * file at two versions): each is listed, and read, once per row.
+ * `_commit_version`/`_commit_timestamp` arrive typed.
+ *
+ * Each listed file also carries its log identity as constant `_metadata`
+ * fields of [[LogParquetFileFormat]]: `log_path` (the entry's path exactly
+ * as the log spells it) and `dv_slot` (the file's deletion-vector slot, or
+ * null). Scanned rows therefore name their file by `AddFile.path`, never
+ * by the URI Spark resolved it to. The same path may appear in two entries
+ * (a CDF leg re-adding a file at two versions, a streaming batch carrying
+ * one file at two DV states): each is listed, and read, once per entry
+ * with that entry's own values.
  *
  * Stats skipping has already chosen `entries` ([[Scan.prunedFiles]]), so
  * `listFiles` applies only `partitionFilters` — which Spark's
@@ -38,15 +47,20 @@ class LogFileIndex(
   private val root: Path = fs.makeQualified(new Path(tablePath))
 
   private val dirs: Seq[PartitionDirectory] = {
-    // paths resolve against the qualified root, so `_metadata.file_path`
-    // has the form a store listing gives (the DV mask keys rely on it)
-    def status(e: LogFileIndex.Entry): FileStatus = {
+    // paths resolve against the qualified root, and a scheme-less
+    // absolute log path is qualified by the table's file system: every
+    // file is read from the store the table lives on, not from the
+    // session's default file system
+    def status(e: LogFileIndex.Entry): FileStatusWithMetadata = {
       val p = PathCodec.resolve(root, e.path)
       val q = if (p.toUri.getScheme == null) fs.makeQualified(p) else p
       // RemoveFile.size is optional: a file the log gives no size for is
       // stat'ed, since Spark reads nothing past a status's length
-      if (e.size > 0) new FileStatus(e.size, false, 0, 0L, e.mtime, q)
-      else fs.getFileStatus(q)
+      val st =
+        if (e.size > 0) new FileStatus(e.size, false, 0, 0L, e.mtime, q)
+        else fs.getFileStatus(q)
+      FileStatusWithMetadata(st,
+        Map(LogFileIndex.LogPath -> e.path, LogFileIndex.DvSlot -> e.dvSlot.map(Int.box).orNull))
     }
     val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
     val byRow = entries.groupBy(_.values)
@@ -54,7 +68,7 @@ class LogFileIndex(
       val row = InternalRow.fromSeq(vs.zip(partitionSchema).map { case (v, f) =>
         Cast(v, f.dataType, tz).eval()
       })
-      PartitionDirectory(row, byRow(vs).map(status).toArray)
+      PartitionDirectory(row, byRow(vs).map(status))
     }
   }
 
@@ -83,7 +97,25 @@ class LogFileIndex(
 
 object LogFileIndex {
 
+  /** `_metadata` field holding a scanned row's file path as the log spells it. */
+  val LogPath = "log_path"
+
+  /** `_metadata` field holding a scanned row's deletion-vector slot (null
+    * for a file without a deletion vector). */
+  val DvSlot = "dv_slot"
+
   /** One listed file: its log path (a relative URL or absolute URI), the
-    * log's size and mtime, and its partition row. */
-  case class Entry(path: String, size: Long, mtime: Long, values: Seq[Literal])
+    * log's size and mtime, its partition row, and its deletion-vector slot. */
+  case class Entry(path: String, size: Long, mtime: Long, values: Seq[Literal],
+      dvSlot: Option[Int] = None)
+}
+
+/** Spark's parquet source with the [[LogFileIndex]] constant `_metadata`
+  * fields (`log_path`, `dv_slot`) next to the standard ones and
+  * `row_index` — delta-spark's `DeltaParquetFileFormat` carries its row
+  * tracking fields the same way. */
+class LogParquetFileFormat extends ParquetFileFormat {
+  override def metadataSchemaFields: Seq[StructField] = super.metadataSchemaFields ++ Seq(
+    FileSourceConstantMetadataStructField(LogFileIndex.LogPath, StringType, nullable = false),
+    FileSourceConstantMetadataStructField(LogFileIndex.DvSlot, IntegerType, nullable = true))
 }

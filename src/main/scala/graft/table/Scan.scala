@@ -3,11 +3,10 @@ package graft.table
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.kernel.{AddFile, ColumnMapping, DeletionVectors, Metadata, PartitionCodec, PathKeys, Snapshot, StatsPruning}
+import graft.functions.{DvMaskKeep, DvMaskLookup}
+import graft.kernel.{AddFile, ColumnMapping, DeletionVectors, Metadata, PartitionCodec, Snapshot, StatsPruning}
 
 /**
  * The read path: snapshot → (partition pruning + stats file skipping on the
@@ -22,6 +21,13 @@ import graft.kernel.{AddFile, ColumnMapping, DeletionVectors, Metadata, Partitio
  * file under its partition row, typed from the LOG's partitionValues —
  * NOT hive directory inference, which cannot cover column-mapped or
  * random-prefix layouts — so Catalyst plans them as partition columns.
+ *
+ * The index also gives every file its log identity as constant `_metadata`
+ * fields: a scanned row names its file by `_metadata.log_path`
+ * (`AddFile.path`, the DML key) and its deletion vector by
+ * `_metadata.dv_slot`, so a table with deletion vectors is still one scan
+ * under one mask filter. `_metadata` resolves through `Project` and
+ * `Filter` but not through `Union`: take it from a scan, before unions.
  */
 object Scan {
 
@@ -41,9 +47,9 @@ object Scan {
     *   cache would PIN hundreds of MB on long-lived drivers. Correctness
     *   never depends on a hit. */
   private val lookupMemo =
-    new java.util.LinkedHashMap[(String, String, Long, String), AnyRef]() {
+    new java.util.LinkedHashMap[(String, String, Long, String), DvMaskLookup]() {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Long, String), AnyRef]): Boolean =
+          e: java.util.Map.Entry[(String, String, Long, String), DvMaskLookup]): Boolean =
         size() > 8
     }
   /** md5 identity of an ordered path list. NUL-terminates each path inside
@@ -54,23 +60,6 @@ object Scan {
     val md = java.security.MessageDigest.getInstance("MD5")
     paths.foreach { p => md.update(p.getBytes("UTF-8")); md.update(0.toByte) }
     md.digest().map("%02x".format(_)).mkString
-  }
-
-  private def memoLookup[T <: AnyRef](spark: SparkSession, snapshot: Snapshot,
-      paths: Seq[String])(build: => T): T = {
-    val setId = fileSetId(paths)
-    val key = (spark.sparkContext.applicationId, snapshot.tablePath.toString,
-      snapshot.version, setId)
-    // build OUTSIDE the lock: blob reads + broadcast can take seconds and
-    // must not serialize unrelated tables' scans; a same-key race just
-    // builds twice (harmless — the loser's broadcast is GC-reclaimed)
-    Option(lookupMemo.synchronized(lookupMemo.get(key))) match {
-      case Some(v) => v.asInstanceOf[T]
-      case None =>
-        val v = build
-        lookupMemo.synchronized(lookupMemo.put(key, v))
-        v
-    }
   }
 
   /** All live files, no pruning. */
@@ -86,114 +75,40 @@ object Scan {
     StatsPruning.pruneSnapshot(snapshot, predicates, spark)
 
   /** Read an explicit subset of the snapshot's files as a DataFrame with the
-    * full table schema (partition columns reconstructed + cast).
-    * With `withFileIdentity`, appends `__file` (path) and `__pos`
-    * (row index in file) from Spark's `_metadata` column — a stable row
-    * identity used by MERGE for duplicate-match detection and the
-    * changed-file barrier (the reference's file-path + row-ordinal metadata
-    * columns, `table_provider/next/mod.rs:986-1002`).
+    * full table schema (partition columns reconstructed + cast), as ONE
+    * relation over a [[LogFileIndex]].
+    * With `withFileIdentity`, appends `__file` (the file's log path,
+    * `AddFile.path`) and `__pos` (row index in file) from Spark's
+    * `_metadata` column — a stable row identity used by DML for matched
+    * files, DV masks and MERGE's duplicate-match detection (the
+    * reference's file-path + row-ordinal metadata columns,
+    * `table_provider/next/mod.rs:986-1002`).
     *
-    * Files carrying deletion vectors are read through a row-index anti-join
-    * against the decoded DV bitmaps (the reference applies them as
-    * selection-vector masks, next/scan/exec.rs:63-150). */
+    * Files carrying deletion vectors get slots 0..n-1 in input order, and
+    * the scan keeps a row only if its `_metadata.dv_slot` bitmap does not
+    * hold its row index (the reference applies DVs as per-file
+    * selection-vector masks, next/scan/exec.rs:63-150). The same path at
+    * two DV states (a streaming batch window re-adding it) is two listings
+    * with two slots. */
   def readFiles(
       spark: SparkSession,
       snapshot: Snapshot,
       files: Seq[AddFile],
       withFileIdentity: Boolean = false): DataFrame = {
-    // Per-path occurrence WAVES: a streaming ignoreChanges batch window can
-    // carry the SAME path re-added at two versions with different DV
-    // states. DV masks key by path (the physical `_metadata.file_path` is
-    // identical for both incarnations), so each incarnation must ride its
-    // own scan leg or variantMap keeps one DV for both. Unique-path input
-    // (every batch/DML caller) takes the single-wave fast path unchanged.
-    if (files.map(_.path).distinct.size != files.size) {
-      val occ = scala.collection.mutable.HashMap[String, Int]()
-      val indexed = files.map { f =>
-        val i = occ.getOrElse(f.path, 0); occ(f.path) = i + 1; (i, f)
-      }
-      return indexed.groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (_, wave) =>
-          readFilesUniquePaths(spark, snapshot, wave.map(_._2), withFileIdentity)
-        }
-        .reduce(_.unionByName(_))
-    }
-    readFilesUniquePaths(spark, snapshot, files, withFileIdentity)
-  }
-
-  private def readFilesUniquePaths(
-      spark: SparkSession,
-      snapshot: Snapshot,
-      files: Seq[AddFile],
-      withFileIdentity: Boolean): DataFrame = {
-    val (dvFiles, plainFiles) = files.partition(_.deletionVector.exists(_.cardinality > 0))
-    if (files.isEmpty || dvFiles.isEmpty) {
-      val plain = readRaw(spark, snapshot, files, withIdentity = withFileIdentity)
-      return plain
-    }
-
-    // DV-masked leg: needs row identity for the mask even if caller doesn't.
-    // Bitmaps stay roaring-COMPRESSED in a broadcast keyed by file path and
-    // are tested per-row by a codegen'd predicate — no join in the plan, and
-    // the broadcast is KBs per masked file instead of exploded positions
-    // (at 1B masked rows the old (file,pos) anti-join broadcast was tens of
-    // GB; this is the reference's per-file selection-vector shape,
-    // next/scan/exec.rs:63-150).
-    val masked = {
-      val withId = readRaw(spark, snapshot, dvFiles, withIdentity = true)
-      // memo identity = the RECONCILE key (path + DV uniqueId), not path
-      // alone: a pinned snapshot (streaming source) can serve batches where
-      // the same path set reappears with a NEW deletion vector — a
-      // path-only key would hit the stale mask and emit deleted rows
-      val lookup = memoLookup(spark, snapshot, dvFiles.map(_.reconcileKey)) {
-        val conf = spark.sessionState.newHadoopConf()
-        val tp = new org.apache.hadoop.fs.Path(snapshot.tablePath)
-        // parallel blob reads: thousands of sequential open/read round
-        // trips on an object store are seconds of driver-side planning
-        // latency; the reads are independent
-        // blocking{}: these are IO parks, and the shared global pool is
-        // sized to cores — un-marked they would pin every worker
-        import scala.concurrent.{blocking, Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val pairs = Await.result(
-          Future.traverse(dvFiles.toList) { f => Future { blocking {
-            snapshot.absolutePath(f.path) ->
-              DeletionVectors.readBytes(tp, f.deletionVector.get, conf)
-          }}}, scala.concurrent.duration.Duration.Inf)
-        val masks: Map[String, Array[Byte]] = PathKeys.variantMap(pairs)
-        new graft.functions.DvMaskLookup(spark.sparkContext.broadcast(masks))
-      }
-      import org.apache.spark.sql.GraftSqlBridge
-      withId.filter(GraftSqlBridge.column(graft.functions.DvMaskKeep(
-        GraftSqlBridge.expression(col("__file")),
-        GraftSqlBridge.expression(col("__pos")), lookup)))
-    }
-    val maskedOut = if (withFileIdentity) masked else masked.drop("__file", "__pos")
-    if (plainFiles.isEmpty) maskedOut
-    else readRaw(spark, snapshot, plainFiles, withIdentity = withFileIdentity)
-      .unionByName(maskedOut)
-  }
-
-  private def readRaw(
-      spark: SparkSession,
-      snapshot: Snapshot,
-      files: Seq[AddFile],
-      withIdentity: Boolean): DataFrame = {
     val schema = snapshot.schema
-    // __file/__pos are this engine's row-identity channel (DV masking, DML
-    // bookkeeping): a DATA column with either name would collide — the
-    // masked leg's drop() would discard user data and the DML references
-    // would bind ambiguously. Fail loudly up front; identity columns are
-    // only attached on DV-masked or DML scans, so plain tables with such
-    // names still read fine.
-    if (withIdentity) schema.fieldNames.find(n => n == "__file" || n == "__pos")
+    // __file/__pos are this engine's row-identity channel (DML
+    // bookkeeping): a DATA column with either name would make the DML
+    // references bind ambiguously. Fail loudly up front; identity columns
+    // are only attached on DML scans, so tables with such names still
+    // read fine.
+    if (withFileIdentity) schema.fieldNames.find(n => n == "__file" || n == "__pos")
       .foreach { n =>
         throw new IllegalArgumentException(
-          s"column name '$n' is reserved for row identity on DV-masked/DML " +
+          s"column name '$n' is reserved for row identity on DML " +
             "scans of this engine — rename the column")
       }
     if (files.isEmpty) {
-      val out = if (withIdentity)
+      val out = if (withFileIdentity)
         StructType(schema.fields :+ StructField("__file", StringType) :+
           StructField("__pos", LongType))
       else schema
@@ -201,21 +116,66 @@ object Scan {
     }
 
     val layout = new FileLayout(snapshot.metadata)
-    val raw = layout.relation(spark, snapshot.tablePath, files.map(f =>
-      LogFileIndex.Entry(f.path, f.size, f.modificationTime, layout.partitionRow(f.partitionValues))))
+    def masked(f: AddFile) = f.deletionVector.exists(_.cardinality > 0)
+    val slots = files.scanLeft(0)((n, f) => if (masked(f)) n + 1 else n)
+    val raw = layout.relation(spark, snapshot.tablePath, files.zip(slots).map { case (f, n) =>
+      LogFileIndex.Entry(f.path, f.size, f.modificationTime,
+        layout.partitionRow(f.partitionValues), Option.when(masked(f))(n))
+    })
     // Spark HIDES the file-source _metadata struct whenever the data
     // schema contains a column of that name (protocol-legal in foreign-
-    // written tables): col("_metadata.file_path") would then bind the USER
-    // column — AnalysisException on DV reads at best, wrong file identity
-    // at worst. metadataColumn() resolves the METADATA column explicitly,
+    // written tables): col("_metadata.row_index") would then bind the USER
+    // column. metadataColumn() resolves the METADATA column explicitly,
     // immune to shadowing; the data column itself still reads normally.
+    lazy val fileMeta = raw.metadataColumn("_metadata")
+    val dvFiles = files.filter(masked)
+    val kept =
+      if (dvFiles.isEmpty) raw
+      else {
+        import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+        raw.filter(column(DvMaskKeep(
+          expression(fileMeta.getField(LogFileIndex.DvSlot)),
+          expression(fileMeta.getField("row_index")), dvLookup(spark, snapshot, dvFiles))))
+      }
     val identity: Seq[Column] =
-      if (withIdentity) {
-        val fileMeta = raw.metadataColumn("_metadata")
-        Seq(fileMeta.getField("file_path").as("__file"),
+      if (withFileIdentity)
+        Seq(fileMeta.getField(LogFileIndex.LogPath).as("__file"),
           fileMeta.getField("row_index").as("__pos"))
-      } else Nil
-    raw.select(layout.columns ++ identity: _*)
+      else Nil
+    kept.select(layout.columns ++ identity: _*)
+  }
+
+  /** The DV bitmaps of `dvFiles`, broadcast in slot order. */
+  private def dvLookup(spark: SparkSession, snapshot: Snapshot,
+      dvFiles: Seq[AddFile]): DvMaskLookup = {
+    // memo identity = the RECONCILE keys (path + DV uniqueId) in slot
+    // order, not paths: a pinned snapshot (streaming source) can serve
+    // batches where the same path set reappears with a NEW deletion
+    // vector — a path-only key would hit the stale mask and emit deleted
+    // rows
+    val key = (spark.sparkContext.applicationId, snapshot.tablePath.toString,
+      snapshot.version, fileSetId(dvFiles.map(_.reconcileKey)))
+    // build OUTSIDE the lock: blob reads + broadcast can take seconds and
+    // must not serialize unrelated tables' scans; a same-key race just
+    // builds twice (harmless — the loser's broadcast is GC-reclaimed)
+    Option(lookupMemo.synchronized(lookupMemo.get(key))).getOrElse {
+      val conf = spark.sessionState.newHadoopConf()
+      val tp = new org.apache.hadoop.fs.Path(snapshot.tablePath)
+      // parallel blob reads: thousands of sequential open/read round
+      // trips on an object store are seconds of driver-side planning
+      // latency; the reads are independent
+      // blocking{}: these are IO parks, and the shared global pool is
+      // sized to cores — un-marked they would pin every worker
+      import scala.concurrent.{blocking, Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val masks = Await.result(
+        Future.traverse(dvFiles.toList) { f => Future { blocking {
+          DeletionVectors.readBytes(tp, f.deletionVector.get, conf)
+        }}}, scala.concurrent.duration.Duration.Inf)
+      val lookup = new DvMaskLookup(spark.sparkContext.broadcast(masks.toArray))
+      lookupMemo.synchronized(lookupMemo.put(key, lookup))
+      lookup
+    }
   }
 
   /** How a table's data files lay out its schema: under column mapping
@@ -254,7 +214,7 @@ object Scan {
       val index = new LogFileIndex(spark, tablePath,
         StructType(partitionFields ++ extraPartition), entries)
       spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-        StructType(dataSchema ++ extraData), None, new ParquetFileFormat, Map.empty)(spark))
+        StructType(dataSchema ++ extraData), None, new LogParquetFileFormat, Map.empty)(spark))
     }
 
     /** The table's columns under their logical names, over [[relation]].

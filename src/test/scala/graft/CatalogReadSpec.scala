@@ -6,7 +6,7 @@ import java.nio.file.attribute.FileTime
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
@@ -65,10 +65,17 @@ class CatalogReadSpec extends AnyFunSuite {
           |TBLPROPERTIES ('delta.enableDeletionVectors' = 'true')""".stripMargin)
     sql("INSERT INTO rd.s.dv SELECT id, concat('v', id) FROM range(0, 40)")
     sql("DELETE FROM rd.s.dv WHERE id IN (3, 6, 9, 12, 15, 30)")
-    assert(DeltaTable.forPath(spark, s"$warehouse/s/dv").snapshot.allFiles
-      .exists(_.deletionVector.isDefined), "DELETE wrote no deletion vector")
+    val files = DeltaTable.forPath(spark, s"$warehouse/s/dv").snapshot.allFiles
+    assert(files.exists(_.deletionVector.isDefined), "DELETE wrote no deletion vector")
+    assert(files.exists(_.deletionVector.isEmpty), s"no file without a DV: $files")
     assertParity(sql("SELECT * FROM rd.s.dv WHERE id > 10"), api("dv").where("id > 10"))
     assert(sql("SELECT count(*) FROM rd.s.dv").head().getLong(0) == 34)
+    // masked and plain files are one scan under one mask filter
+    val all = sql("SELECT * FROM rd.s.dv")
+    assert(all.collect().length == 34)
+    val plan = executedNodes(all.queryExecution.executedPlan)
+    assert(plan.count(_.isInstanceOf[FileSourceScanExec]) == 1, plan.mkString("\n"))
+    assert(!plan.exists(_.isInstanceOf[UnionExec]), plan.mkString("\n"))
   }
 
   test("column mapping: logical names read through the catalog") {

@@ -2,18 +2,17 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.kernel.{ColumnMapping, PathKeys, Protocol, ProtocolGate}
+import graft.kernel.{ColumnMapping, Protocol, ProtocolGate}
 import graft.ops.IncrementalAgg
 import graft.table.DeltaTable
 
-/** Round-12 regressions for the r11 advisor findings: PathKeys null-scheme
-  * authority variants, the columnMapping none -> name upgrade migration,
-  * and the stats-first IncrementalAgg first-fold emptiness check. */
+/** Round-12 regressions for the r11 advisor findings: the columnMapping
+  * none -> name upgrade migration and the stats-first IncrementalAgg
+  * first-fold emptiness check. */
 class Round12Spec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -26,13 +25,45 @@ class Round12Spec extends AnyFunSuite {
 
   def tmpDir(): String = Files.createTempDirectory("graft_r12_").toString + "/t"
 
-  test("PathKeys.variants: scheme-less path with authority emits no null:// keys") {
-    val vs = PathKeys.variants(new Path("//host/t/f.parquet"))
-    assert(vs.forall(!_.contains("null://")), s"bogus null-scheme variant in $vs")
-    assert(vs.contains("//host/t/f.parquet"))
-    // scheme'd remote paths keep scheme+authority (r11 invariant unchanged)
-    val s3 = PathKeys.variants(new Path("s3a://bucket/t/f.parquet"))
-    assert(s3.forall(_.startsWith("s3a://bucket/")))
+  test("deletion vectors on percent-encoded twins: files named 'x y.parquet' " +
+      "and 'x%20y.parquet' each keep their own mask through DELETE and UPDATE") {
+    val dir = tmpDir()
+    DeltaTable.write(spark,
+      spark.range(0, 10, 1, 2).select(col("id"), (col("id") * 10).as("v")), dir,
+      configuration = Map("delta.enableDeletionVectors" -> "true"))
+    val parts = DeltaTable.forPath(spark, dir).snapshot.allFiles
+      .sortBy(_.stats.getOrElse("")).map(_.path)
+    assert(parts.size == 2, s"want one file per range partition, got $parts")
+    // rename the files on disk and point their Adds (percent-encoded URLs)
+    // at the new names: the literal and the encoded spelling of one name
+    val names = Seq("x y.parquet", "x%20y.parquet")
+    val commit = java.nio.file.Paths.get(dir, "_delta_log",
+      graft.kernel.LogStore.commitFileName(0L))
+    var json = new String(Files.readAllBytes(commit), "UTF-8")
+    parts.zip(names).foreach { case (p, n) =>
+      Files.move(java.nio.file.Paths.get(dir, p), java.nio.file.Paths.get(dir, n))
+      assert(json.contains(s"\"path\":\"$p\""), json)
+      json = json.replace(s"\"path\":\"$p\"",
+        s"\"path\":\"${graft.kernel.PathCodec.encode(n)}\"")
+    }
+    Files.write(commit, json.getBytes("UTF-8"))
+    val t = DeltaTable.forPath(spark, dir)
+    def rows(): Seq[(Long, Long)] = t.toDF.orderBy("id").collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(rows() == (0L until 10L).map(i => (i, i * 10)))
+
+    // one hit in each file: both files keep their data under a new mask
+    assert(t.delete(Some("id IN (1, 7)"))("num_deleted_rows") == "2")
+    val masked = t.snapshot.allFiles.filter(_.deletionVector.isDefined)
+    assert(masked.map(f => graft.kernel.PathCodec.decode(f.path)).toSet == names.toSet,
+      s"both twins must carry a deletion vector: ${t.snapshot.allFiles}")
+    val afterDelete = Seq(0L, 2L, 3L, 4L, 5L, 6L, 8L, 9L).map(i => (i, i * 10))
+    assert(rows() == afterDelete)
+
+    // UPDATE on top: each twin's existing mask grows by its own hit
+    t.update(Map("v" -> expr("v + 1")), Some("id IN (2, 8)"))
+    assert(rows() == afterDelete.map { case (i, v) =>
+      (i, if (i == 2L || i == 8L) v + 1 else v) })
   }
 
   test("setProperties: none -> name upgrade migrates schema, maxColumnId, protocol") {

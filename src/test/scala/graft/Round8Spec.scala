@@ -239,12 +239,6 @@ class Round8Spec extends AnyFunSuite {
     assert(t.schema("m").dataType == MapType(StringType, LongType, false))
     assert(t.toDF.count() == 2L)
 
-    // variant-key collisions are refused, never last-writer-wins
-    val e = intercept[IllegalStateException](graft.kernel.PathKeys.variantMap(Seq(
-      new org.apache.hadoop.fs.Path("/t/x y.parquet") -> 1,
-      new org.apache.hadoop.fs.Path("/t/x%20y.parquet") -> 2)))
-    assert(e.getMessage.contains("collision"))
-
     // zero-arg zorder_key is an analysis error, not a constant-key no-op
     graft.functions.ZOrder.register(spark)
     val eZ = intercept[org.apache.spark.sql.AnalysisException](

@@ -48,6 +48,11 @@ class TextNormalizeSpec extends AnyFunSuite {
       org.apache.spark.sql.catalyst.expressions.Literal.create(
         decomposed, org.apache.spark.sql.types.StringType), "nfc")
     assert(e.eval(null).toString == composed) // interpreted path directly
+    // generate() compiles or throws: a codegen call Janino cannot resolve
+    // fails here instead of falling back to interpreted evaluation
+    val projected = org.apache.spark.sql.catalyst.expressions.codegen
+      .GenerateUnsafeProjection.generate(Seq(e)).apply(null)
+    assert(projected.getUTF8String(0).toString == composed)
   }
 
   test("null propagates; SQL registration works; bad mode fails analysis") {

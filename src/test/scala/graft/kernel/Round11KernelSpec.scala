@@ -1,10 +1,9 @@
 package graft.kernel
 
-import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-11 kernel review regressions: first-segment-colon path encoding,
-  * cross-bucket variant keys, Retry-After overflow clamp. */
+  * Retry-After overflow clamp. */
 class Round11KernelSpec extends AnyFunSuite {
 
   test("PathCodec.encode: first-segment colon cannot null the path or leak a scheme") {
@@ -24,26 +23,6 @@ class Round11KernelSpec extends AnyFunSuite {
     // spaces and existing behavior unchanged
     assert(PathCodec.encode("x y.parquet") == "x%20y.parquet")
     assert(PathCodec.decode("x%20y.parquet") == "x y.parquet")
-  }
-
-  test("PathKeys: same key path in different buckets does not collide") {
-    val a = new Path("s3a://bucketA/t/f.parquet")
-    val b = new Path("s3a://bucketB/t/f.parquet")
-    // pre-fix both emitted the bare '/t/f.parquet' variant → variantMap
-    // refused the whole (unambiguous) table
-    val m = PathKeys.variantMap(Seq(a -> 1, b -> 2))
-    assert(m(a.toString) == 1 && m(b.toString) == 2)
-    // local paths keep their bare/file: spellings (scan joins rely on them)
-    val local = PathKeys.variants(new Path("/tmp/t/f.parquet"))
-    assert(local.contains("/tmp/t/f.parquet"))
-    assert(local.exists(_.startsWith("file:")))
-    // remote variants all retain the authority
-    assert(PathKeys.variants(a).forall(_.contains("bucketA")))
-    // percent-encoded vs literal same-name collisions are still refused
-    intercept[IllegalStateException] {
-      PathKeys.variantMap(Seq(
-        new Path("/t/x y.parquet") -> 1, new Path("/t/x%20y.parquet") -> 2))
-    }
   }
 
   test("HttpWire.retryAfterMs: clamped, overflow-proof, date form") {
