@@ -11,9 +11,11 @@ import org.apache.spark.sql.types._
  * reference behavior in `crates/core/src/protocol/checkpoints.rs:27-46`
  * (`create_checkpoint_for`).
  *
- * The checkpoint is written and read through Spark so that on a huge table
- * the state materialization is a distributed parquet job, not driver JSON
- * parsing.
+ * A snapshot whose state sits in driver memory is written from the driver
+ * with Spark's own parquet writer, launching no Spark job. A lazy (huge)
+ * snapshot streams its state from the previous checkpoint's parquet in a
+ * Spark write. Reads go through Spark, so a huge checkpoint is read as a
+ * distributed parquet job, not driver JSON parsing.
  */
 object Checkpoints {
 
@@ -164,6 +166,7 @@ object Checkpoints {
       r.deletionVector.map(dvRow).orNull)
 
   /** Write the checkpoint for `snapshot` plus the `_last_checkpoint` hint.
+    * An eager snapshot's state is written from the driver ([[writeParts]]).
     * On a lazy (huge-table) snapshot the add/remove state streams from the
     * PREVIOUS checkpoint's parquet with the tail overlay applied — the
     * driver never materializes the index to re-checkpoint it. */
@@ -213,9 +216,10 @@ object Checkpoints {
       r.deletionTimestamp.getOrElse(0L) >= tombstoneCutoff
 
     val lazyIdx = snapshot.lazyIndex.filterNot(_.isMaterialized)
-    // file-action rows (add/remove) only; control rows ride the manifest
-    // (V2) or a unioned single-partition head (classic)
-    val (fileDf, knownFileRows, nActions) = lazyIdx match {
+    // stages the file-action rows (add/remove), preceded by the control rows
+    // when `withControl` (classic; V2 puts them in its manifest), as `part-*`
+    // parquet files in a staging dir, `nParts` of them at most
+    val (stage, knownFileRows, nActions) = lazyIdx match {
       case Some(idx) =>
         // overlay identity is (path, dvUniqueId) — mirroring ReplayState /
         // LazyFileIndex — so a tail tombstone for one DV state of a path
@@ -289,25 +293,38 @@ object Checkpoints {
           idx.tailAdds.size + idx.tailRemoves.count(tombstoneLive) + controlRows.size
         // the add leg streams through addColumnDf so stats_parsed-only
         // checkpoints keep their stats in the checkpoint we WRITE
-        (small.unionByName(leg("add", addType,
-            Some(addColumnDf(spark, idx.checkpointParts)))).unionByName(removeLeg),
-          None, approx)
+        val fileDf = small.unionByName(leg("add", addType,
+          Some(addColumnDf(spark, idx.checkpointParts)))).unionByName(removeLeg)
+        def sparkStage(tmp: Path, withControl: Boolean, nParts: Int): Unit = {
+          val df =
+            if (!withControl) fileDf
+            else spark.createDataFrame(spark.sparkContext.parallelize(controlRows, 1),
+              checkpointSchema).unionByName(fileDf)
+          // repartition(1), not coalesce(1): coalesce is a NARROW dependency
+          // that collapses the whole upstream (old-checkpoint scan, overlay
+          // anti-join, stats synthesis) into ONE task — exactly the huge-table
+          // checkpoints this branch exists to parallelize. repartition keeps
+          // the upstream cluster-wide and only funnels the write.
+          df.repartition(nParts).write.mode("overwrite").parquet(tmp.toString)
+        }
+        (sparkStage _, None, approx)
       case None =>
-        val rows =
-          snapshot.allFiles.map(f => Row(null, addRow(f), null, null, null, null)) ++
-          snapshot.tombstones.filter(tombstoneLive)
-            .map(r => Row(null, null, removeRow(r), null, null, null))
-        (spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, math.max(1, rows.size / 50000)),
-          checkpointSchema),
-          Some(rows.size.toLong), rows.size.toLong + controlRows.size)
+        // the state is already in driver memory: write it from here, with
+        // no Spark job
+        val removes = snapshot.tombstones.filter(tombstoneLive)
+        def fileRows =
+          snapshot.allFiles.iterator.map(f => Row(null, addRow(f), null, null, null, null)) ++
+            removes.iterator.map(r => Row(null, null, removeRow(r), null, null, null))
+        val nFileRows = snapshot.allFiles.size.toLong + removes.size
+        def driverStage(tmp: Path, withControl: Boolean, nParts: Int): Unit =
+          if (withControl) writeParts(spark, tmp, controlRows.iterator ++ fileRows,
+            nFileRows + controlRows.size, nParts)
+          else writeParts(spark, tmp, fileRows, nFileRows, nParts)
+        (driverStage _, Some(nFileRows), nFileRows + controlRows.size)
     }
-    val controlDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(controlRows, 1), checkpointSchema)
-    val df = controlDf.unionByName(fileDf)
 
     if (writeV2) {
-      writeV2Checkpoint(spark, logPath, snapshot, store, fileDf,
+      writeV2Checkpoint(logPath, snapshot, store, stage(_, false, _),
         knownFileRows, nActions, partSize)
       return
     }
@@ -323,14 +340,7 @@ object Checkpoints {
     // the finally reclaims the staging dir on ANY failure (a rename require,
     // a write error) — debris in _delta_log inflates every listing forever
     val destFiles: Seq[Path] = try {
-      // repartition(1), not coalesce(1): coalesce is a NARROW dependency
-      // that collapses the whole upstream (old-checkpoint scan, overlay
-      // anti-join, stats synthesis) into ONE task — exactly the huge-table
-      // checkpoints the lazy branch exists to parallelize. repartition
-      // keeps the upstream cluster-wide and only funnels the write.
-      val written =
-        if (nParts <= 1) df.repartition(1) else df.repartition(nParts)
-      written.write.mode("overwrite").parquet(tmp.toString)
+      stage(tmp, true, math.max(nParts, 1))
       val partFiles = fs.listStatus(tmp).map(_.getPath)
         .filter(_.getName.startsWith("part-")).sortBy(_.getName)
       require(partFiles.nonEmpty, s"no part file in $tmp")
@@ -361,6 +371,40 @@ object Checkpoints {
       s"""{"version":${snapshot.version},"size":$size$partsField}""")
   }
 
+  /** Writes `n` rows of [[checkpointSchema]] into `dir` on the driver as
+    * `part-%05d.parquet` files of `ceil(n / nParts)` rows (the last may hold
+    * fewer), at least one file: the parquet writer a Spark write task runs,
+    * without the job. */
+  private def writeParts(spark: SparkSession, dir: Path, rows: Iterator[Row], n: Long,
+      nParts: Int): Unit = {
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    // parts left by a crashed attempt at this version must not be published
+    // next to ours
+    dir.getFileSystem(job.getConfiguration).delete(dir, true)
+    val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, checkpointSchema)
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(checkpointSchema)
+    val perPart = math.max(1L, (n + nParts - 1) / nParts)
+    var part = 0
+    do {
+      val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+        job.getConfiguration, new TaskAttemptID("", 0, TaskType.MAP, part, 0))
+      val out = factory.newInstance(
+        new Path(dir, f"part-$part%05d.parquet").toString, checkpointSchema, ctx)
+      try {
+        var i = 0L
+        while (i < perPart && rows.hasNext) {
+          out.write(toCatalyst(rows.next())
+            .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
+          i += 1
+        }
+      } finally out.close()
+      part += 1
+    } while (rows.hasNext)
+  }
+
   private def writeHint(fs: org.apache.hadoop.fs.FileSystem, logPath: Path,
                         hint: String): Unit = {
     val hintPath = new Path(logPath, LogStore.LAST_CHECKPOINT)
@@ -386,17 +430,14 @@ object Checkpoints {
     * (readResolved) already speaks this layout — this writer closes the
     * round trip for tables with `delta.checkpointPolicy=v2`. */
   private def writeV2Checkpoint(
-      spark: SparkSession, logPath: Path, snapshot: Snapshot, store: LogStore,
-      fileDf: org.apache.spark.sql.DataFrame, knownFileRows: Option[Long],
+      logPath: Path, snapshot: Snapshot, store: LogStore,
+      stageFiles: (Path, Int) => Unit, knownFileRows: Option[Long],
       nActions: Long, partSize: Int): Unit = {
     val fs = logPath.getFileSystem(store.conf)
     val nParts = math.min(((nActions + partSize - 1) / partSize).toInt, 9999)
     val tmp = new Path(logPath, s".checkpoint_tmp_${snapshot.version}")
     val sidecars: Seq[Sidecar] = try {
-      // repartition(1) for the same reason as the classic writer above
-      val written =
-        if (nParts <= 1) fileDf.repartition(1) else fileDf.repartition(nParts)
-      written.write.mode("overwrite").parquet(tmp.toString)
+      stageFiles(tmp, math.max(nParts, 1))
       val partFiles = fs.listStatus(tmp).map(_.getPath)
         .filter(_.getName.startsWith("part-")).sortBy(_.getName)
       val sidecarDir = new Path(logPath, "_sidecars")

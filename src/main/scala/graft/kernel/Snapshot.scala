@@ -261,12 +261,16 @@ class DeltaLog(val spark: SparkSession, val tablePath: Path) {
   private def logId(listing: Seq[FileStatus], v: Long, commitLines: Seq[String]) =
     DeltaLog.LogId(v, signature(listing, v), DeltaLog.digest(commitLines))
 
-  /** Writes a checkpoint of `snap` and re-signs its cache entry for it. */
-  private[graft] def checkpoint(snap: Snapshot): Unit = {
+  /** Writes a checkpoint of `snap`, runs `cleanup` (expired-log cleanup, which
+    * may delete the commits behind it), then re-signs `snap`'s cache entry
+    * from one listing taken after both. */
+  private[graft] def checkpoint(snap: Snapshot, cleanup: => Unit = ()): Unit = {
     Checkpoints.write(spark, logPath, snap, store)
-    val key = cacheKey
-    DeltaLog.cacheGet(key).filter(_.ref.get eq snap).foreach(e => DeltaLog.install(key, snap,
-      Some(e.id.copy(listed = signature(store.list(logPath), snap.version))), Some(e)))
+    try cleanup finally {
+      val key = cacheKey
+      DeltaLog.cacheGet(key).filter(_.ref.get eq snap).foreach(e => DeltaLog.install(key, snap,
+        Some(e.id.copy(listed = signature(store.list(logPath), snap.version))), Some(e)))
+    }
   }
 
   private def fullReplay(listing: Seq[FileStatus], target: Option[Long], reason: String) = {

@@ -412,8 +412,7 @@ class OptimisticTransaction(
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption).getOrElse(10)
     if (interval > 0 && version > 0 && version % interval == 0) {
       try {
-        log.checkpoint(log.snapshotAt(version))
-        cleanupExpiredLogs(version, meta)
+        log.checkpoint(log.snapshotAt(version), LogCleanup.run(log, version, meta))
       } catch {
         case _: InterruptedException =>
           // cooperative cancellation must survive the swallow (same
@@ -427,9 +426,6 @@ class OptimisticTransaction(
       }
     }
   }
-
-  private def cleanupExpiredLogs(checkpointVersion: Long, meta: Option[Metadata]): Unit =
-    LogCleanup.run(log, checkpointVersion, meta)
 }
 
 /** Expired-log cleanup, shared by the post-commit path above and the

@@ -12,6 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.kernel._
 import graft.table.DeltaTable
+import SnapshotCacheSpec.state
 
 /** The kernel snapshot cache (`DeltaLog` companion): every load validates
   * the cached snapshot against the store alone and replays only the commits
@@ -43,25 +44,8 @@ class SnapshotCacheSpec extends AnyFunSuite {
 
   /** Spark jobs launched from `graft.kernel` code (checkpoint reads of a
     * full replay) while `body` runs. */
-  private def kernelJobs[A](body: => A): (A, Int) = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val site = e.stageInfos.sortBy(_.stageId).lastOption.map(_.details).getOrElse("")
-        val firstUserFrame = site.linesIterator.map(_.trim).find(f =>
-          f.nonEmpty && !f.startsWith("org.apache.spark") && !f.startsWith("scala.") &&
-            !f.startsWith("java.") && !f.startsWith("jdk."))
-        if (firstUserFrame.exists(_.startsWith("graft.kernel."))) n.incrementAndGet()
-      }
-    }
-    ListenerBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = body
-      ListenerBus.drain(spark.sparkContext)
-      (a, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+  private def kernelJobs[A](body: => A): (A, Int) =
+    SnapshotCacheSpec.jobs(spark, kernelOnly = true)(body)
 
   test("a future commit mtime does not stop the cache from serving") {
     sql("CREATE NAMESPACE sc.fut")
@@ -156,21 +140,72 @@ class SnapshotCacheSpec extends AnyFunSuite {
         val cp = Checkpoints.read(spark,
           new Path(log.logPath, LogStore.checkpointFileName(v)))
         val replayed = (0L to v).flatMap(log.readCommit)
-        def state(actions: Seq[Action]) = {
-          val adds = scala.collection.mutable.LinkedHashMap[String, AddFile]()
-          actions.foreach {
-            case f: AddFile => adds(f.reconcileKey) = f
-            case r: RemoveFile => adds.remove(r.reconcileKey)
-            case _ =>
-          }
-          (adds.keySet.toSet,
-            actions.collect { case t: SetTransaction => t.appId -> t.version }.toMap,
-            actions.collect { case m: Metadata => m }.last,
-            actions.collect { case p: Protocol => p }.last)
-        }
         assert(state(cp) == state(replayed), s"checkpoint $v")
-        assert(state(cp)._2 == Map("app" -> v))
+        assert(state(cp).txns == Map("app" -> v))
       }
     } finally DeltaLog.unregisterLogStore("file")
+  }
+
+  test("log cleanup after a checkpoint keeps the cache entry valid") {
+    sql("CREATE NAMESPACE sc.old")
+    sql("CREATE TABLE sc.old.t (id BIGINT) TBLPROPERTIES ('delta.checkpointInterval' = '2')")
+    sql("INSERT INTO sc.old.t VALUES (1)")
+    val dir = s"$warehouse/old/t"
+    // both commits are past the 30-day default delta.logRetentionDuration
+    val aged = System.currentTimeMillis() - 60L * 24 * 3600 * 1000
+    logFiles(dir).foreach(f => fs.setTimes(f.getPath, aged, -1))
+    sql("INSERT INTO sc.old.t VALUES (2)") // v2: checkpoint, then cleanup of v0 and v1
+    assert(logFiles(dir).map(_.getPath.getName) == Seq(LogStore.commitFileName(2)),
+      "cleanup must have deleted the aged commits")
+
+    val catalog = spark.sessionState.catalogManager.catalog("sc").asInstanceOf[TableCatalog]
+    val (_, jobs) = kernelJobs(catalog.loadTable(Identifier.of(Array("old"), "t")).schema())
+    assert(jobs == 0, "the load after cleanup must be served from the cache")
+    assert(count("sc.old.t") == 2)
+  }
+}
+
+object SnapshotCacheSpec {
+  /** What a replay of `actions` knows about a table. */
+  case class State(adds: Map[String, AddFile], tombstones: Map[String, RemoveFile],
+      txns: Map[String, Long], domains: Map[String, DomainMetadata],
+      metadata: Metadata, protocol: Protocol)
+
+  def state(actions: Seq[Action]): State = {
+    val adds = scala.collection.mutable.Map[String, AddFile]()
+    val tombstones = scala.collection.mutable.Map[String, RemoveFile]()
+    val domains = scala.collection.mutable.Map[String, DomainMetadata]()
+    actions.foreach {
+      case f: AddFile => adds(f.reconcileKey) = f; tombstones.remove(f.reconcileKey)
+      case r: RemoveFile => adds.remove(r.reconcileKey); tombstones(r.reconcileKey) = r
+      case d: DomainMetadata => if (d.removed) domains.remove(d.domain) else domains(d.domain) = d
+      case _ =>
+    }
+    State(adds.toMap, tombstones.toMap,
+      actions.collect { case t: SetTransaction => t.appId -> t.version }.toMap,
+      domains.toMap, actions.collect { case m: Metadata => m }.last,
+      actions.collect { case p: Protocol => p }.last)
+  }
+
+  /** Spark jobs started while `body` runs; with `kernelOnly`, only those
+    * whose first non-Spark call-site frame is in `graft.kernel`. */
+  def jobs[A](spark: SparkSession, kernelOnly: Boolean = false)(body: => A): (A, Int) = {
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val site = e.stageInfos.sortBy(_.stageId).lastOption.map(_.details).getOrElse("")
+        val firstUserFrame = site.linesIterator.map(_.trim).find(f =>
+          f.nonEmpty && !f.startsWith("org.apache.spark") && !f.startsWith("scala.") &&
+            !f.startsWith("java.") && !f.startsWith("jdk."))
+        if (!kernelOnly || firstUserFrame.exists(_.startsWith("graft.kernel."))) n.incrementAndGet()
+      }
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val a = body
+      ListenerBus.drain(spark.sparkContext)
+      (a, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 }
