@@ -45,7 +45,7 @@ object CoreEntries {
       // SF) so several of the 8 range files lie PROVABLY below it
       val pred = "l_shipdate >= TIMESTAMP '1998-01-01 00:00:00' AND l_quantity < 10"
       val cands = graft.table.Scan.prunedFiles(t.snapshot,
-        Seq(graft.table.Scan.parsePredicate(s, pred)), Some(s))
+        Seq(graft.table.Scan.parsePredicate(s, pred)))
       require(cands.nonEmpty && cands.size < t.snapshot.allFiles.size,
         s"delta_scan_pruned: stats pruning kept ${cands.size} of " +
           s"${t.snapshot.allFiles.size} range-partitioned files — file " +

@@ -1,7 +1,16 @@
 package graft.kernel
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /**
@@ -11,11 +20,11 @@ import org.apache.spark.sql.types._
  * reference behavior in `crates/core/src/protocol/checkpoints.rs:27-46`
  * (`create_checkpoint_for`).
  *
- * A snapshot whose state sits in driver memory is written from the driver
- * with Spark's own parquet writer, launching no Spark job. A lazy (huge)
- * snapshot streams its state from the previous checkpoint's parquet in a
- * Spark write. Reads go through Spark, so a huge checkpoint is read as a
- * distributed parquet job, not driver JSON parsing.
+ * The snapshot kind decides where checkpoint IO runs. An eager snapshot's
+ * checkpoint is written and read on the driver, through Spark's own parquet
+ * writer and reader, launching no Spark job. A lazy (huge) snapshot streams
+ * its state from the previous checkpoint's parquet in a Spark write, and
+ * its control-plane read is a column-pruned Spark scan.
  */
 object Checkpoints {
 
@@ -491,21 +500,19 @@ object Checkpoints {
     actions.collect { case s: Sidecar => new Path(sidecarDir, s.path) }
   }
 
-  /** Read a checkpoint parquet back into actions. With `withFiles = false`
-    * only the control-plane columns are scanned (columnar pruning makes this
-    * near-free even on a huge checkpoint). */
-  def read(spark: SparkSession, file: Path, withFiles: Boolean = true): Seq[Action] =
-    read(spark, Seq(file), withFiles)
+  /** Read a checkpoint parquet back into actions, on the driver. */
+  def read(spark: SparkSession, file: Path): Seq[Action] =
+    read(spark, Seq(file), withFiles = true)
 
   /** Resolve any checkpoint flavor: classic parquet part(s), or a V2 uuid
     * manifest (json lines or parquet) whose Sidecar actions point at
     * `_delta_log/_sidecars/` parquets carrying the add/remove state. */
   def readResolved(spark: SparkSession, store: LogStore, logPath: Path,
-                   parts: Seq[Path], withFiles: Boolean): Seq[Action] = {
+      parts: Seq[Path], withFiles: Boolean, onDriver: Boolean = true): Seq[Action] = {
     val (jsonParts, parquetParts) = parts.partition(_.getName.endsWith(".json"))
     val manifestActions: Seq[Action] =
       jsonParts.flatMap(p => store.read(p).flatMap(ActionCodec.fromJson)) ++
-        (if (parquetParts.nonEmpty) read(spark, parquetParts, withFiles) else Nil)
+        (if (parquetParts.nonEmpty) read(spark, parquetParts, withFiles, onDriver) else Nil)
     val sidecars = manifestActions.collect { case s: Sidecar => s }
     val resolved =
       if (sidecars.isEmpty || !withFiles)
@@ -516,14 +523,14 @@ object Checkpoints {
       else {
         val sidecarPaths = sidecars.map(s =>
           new Path(new Path(logPath, "_sidecars"), s.path))
-        manifestActions ++ read(spark, sidecarPaths, withFiles = true)
+        manifestActions ++ read(spark, sidecarPaths, withFiles = true, onDriver)
           .filter(a => a.isInstanceOf[AddFile] || a.isInstanceOf[RemoveFile])
       }
     resolved.filterNot(a => a.isInstanceOf[Sidecar] || a.isInstanceOf[CheckpointMetadata])
   }
 
-  /** Footer peek shared by the lazy (addColumnDf) and eager (read) paths:
-    * the table-specific `add.stats_parsed` struct type when the parts were
+  /** Footer peek (the first part's footer, read on the driver) shared by
+    * the lazy (addColumnDf) and eager (read) paths: the table-specific `add.stats_parsed` struct type when the parts were
     * written with `delta.checkpoint.writeStatsAsJson=false` (delta-spark).
     * Reading such parts through the bare addType silently nulls stats,
     * degrading data skipping to full scans and PERSISTING the loss when a
@@ -531,26 +538,33 @@ object Checkpoints {
     * synthesis ([[synthesizeStats]]) are single definitions so a fix
     * cannot land in only one path (reference scan_row.rs:225-310). */
   private def statsParsedTypeOf(spark: SparkSession, parts: Seq[Path]): Option[StructType] =
-    scala.util.Try(spark.read.parquet(parts.map(_.toString): _*).schema).toOption
+    scala.util.Try {
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(parts.head, spark.sessionState.newHadoopConf()))
+      try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        .convert(reader.getFooter.getFileMetaData.getSchema)
+      finally reader.close()
+    }.toOption
       .flatMap(_.find(_.name == "add")).map(_.dataType)
       .collect { case s: StructType => s }
       .flatMap(_.find(_.name == "stats_parsed")).map(_.dataType)
       .collect { case s: StructType => s }
 
-  /** THE stats_parsed → raw-JSON synthesis (null-safe, drops the struct
-    * field afterwards so downstream sees exactly addType) — one definition
-    * for the lazy and eager paths; see [[statsParsedTypeOf]]. */
+  /** THE stats_parsed → raw-JSON synthesis (null-safe, and rebuilt as
+    * exactly addType, without the struct field) — one definition for the
+    * lazy and eager paths; see [[statsParsedTypeOf]]. Built from plain
+    * field reads, not `withField`/`dropFields`, so Catalyst can evaluate it
+    * over a local relation on the driver. */
   private def synthesizeStats(add: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{coalesce, to_json, when}
-    when(add.isNotNull,
-      add.withField("stats",
-        coalesce(add.getField("stats"), to_json(add.getField("stats_parsed"))))
-        .dropFields("stats_parsed"))
-      .otherwise(add.dropFields("stats_parsed"))
+    import org.apache.spark.sql.functions.{coalesce, struct, to_json, when}
+    when(add.isNotNull, struct(addType.fieldNames.toSeq.map {
+      case "stats" =>
+        coalesce(add.getField("stats"), to_json(add.getField("stats_parsed"))).as("stats")
+      case n => add.getField(n).as(n)
+    }: _*))
   }
 
   def addColumnDf(spark: SparkSession, parts: Seq[Path]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
     statsParsedTypeOf(spark, parts) match {
       case None =>
         spark.read.schema(StructType(Seq(StructField("add", addType))))
@@ -563,10 +577,15 @@ object Checkpoints {
     }
   }
 
-  /** Multi-file variant: all parts of one checkpoint version (classic
-    * single-file, or delta-spark's `.checkpoint.%010d.%010d.parquet` parts)
-    * read as one distributed scan. */
-  def read(spark: SparkSession, files: Seq[Path], withFiles: Boolean): Seq[Action] = {
+  /** All parts of one checkpoint version (classic single-file, or
+    * delta-spark's `.checkpoint.%010d.%010d.parquet` parts) read into
+    * actions. With `withFiles = false` only the control-plane columns are
+    * read. With `onDriver` (an eager snapshot's read) the parts are decoded
+    * in this process by Spark's parquet reader, with no Spark job; otherwise
+    * they are one Spark scan collected to the driver, the lazy snapshot's
+    * control-plane read of a checkpoint of millions of rows. */
+  def read(spark: SparkSession, files: Seq[Path], withFiles: Boolean,
+      onDriver: Boolean = true): Seq[Action] = {
     require(files.nonEmpty, "no checkpoint files to read")
     // delta-spark checkpoints written with delta.checkpoint.writeStatsAsJson
     // =false carry stats ONLY as the `add.stats_parsed` STRUCT (the
@@ -584,28 +603,29 @@ object Checkpoints {
       case f if f.name == "add" => StructField("add", addReadType)
       case f => f
     } :+ StructField("sidecar", sidecarType))
-    val schema0 =
+    val schema =
       if (withFiles) readSchema
       else StructType(readSchema.filterNot(f => f.name == "add" || f.name == "remove"))
-    val df0raw = spark.read.schema(schema0).parquet(files.map(_.toString): _*)
-    val df0 = statsParsedType match {
-      case Some(_) =>
-        df0raw.withColumn("add",
-          synthesizeStats(org.apache.spark.sql.functions.col("add")))
-      case None => df0raw
-    }
-    // re-align to the full positional layout expected below
-    val df = if (withFiles) df0 else df0
-      .withColumn("add", org.apache.spark.sql.functions.lit(null).cast(addType))
-      .withColumn("remove", org.apache.spark.sql.functions.lit(null).cast(removeType))
-      .select("txn", "add", "remove", "metaData", "protocol", "domainMetadata", "sidecar")
-    df.collect().toSeq.flatMap { row =>
-      if (!row.isNullAt(1)) {
-        Some(decodeAdd(row.getStruct(1)))
-      } else if (!row.isNullAt(2)) {
-        Some(decodeRemove(row.getStruct(2)))
-      } else if (!row.isNullAt(3)) {
-        val m = row.getStruct(3)
+    def collectRows(df: org.apache.spark.sql.DataFrame): Seq[Row] =
+      (if (statsParsedType.isEmpty) df else df.withColumn("add", synthesizeStats(col("add"))))
+        .collect().toSeq
+    // a DataFrame over driver rows is a local relation: the optimizer
+    // evaluates the synthesis on the driver, and collecting it runs no job
+    val rows =
+      if (!onDriver) collectRows(spark.read.schema(schema).parquet(files.map(_.toString): _*))
+      else if (statsParsedType.isEmpty) driverRows(spark, files, schema)
+      else collectRows(spark.createDataFrame(driverRows(spark, files, schema).asJava, schema))
+    val Seq(txnAt, addAt, removeAt, metaAt, protocolAt, domainAt, sidecarAt) =
+      Seq("txn", "add", "remove", "metaData", "protocol", "domainMetadata", "sidecar")
+        .map(schema.fieldNames.indexOf(_))
+    def has(row: Row, i: Int) = i >= 0 && !row.isNullAt(i)
+    rows.flatMap { row =>
+      if (has(row, addAt)) {
+        Some(decodeAdd(row.getStruct(addAt)))
+      } else if (has(row, removeAt)) {
+        Some(decodeRemove(row.getStruct(removeAt)))
+      } else if (has(row, metaAt)) {
+        val m = row.getStruct(metaAt)
         val fmt = m.getStruct(3)
         Some(graft.kernel.Metadata(
           id = m.getString(0),
@@ -616,27 +636,44 @@ object Checkpoints {
           partitionColumns = m.getSeq[String](5),
           configuration = mapOf(m, 6),
           createdTime = if (m.isNullAt(7)) None else Some(m.getLong(7))))
-      } else if (!row.isNullAt(4)) {
-        val p = row.getStruct(4)
+      } else if (has(row, protocolAt)) {
+        val p = row.getStruct(protocolAt)
         // feature columns are absent in checkpoints written by older
         // versions of this library — tolerate a 2-field struct
         def feats(i: Int): Option[Seq[String]] =
           if (p.length <= i || p.isNullAt(i)) None else Some(p.getSeq[String](i))
         Some(Protocol(p.getInt(0), p.getInt(1), feats(2), feats(3)))
-      } else if (!row.isNullAt(0)) {
-        val t = row.getStruct(0)
+      } else if (has(row, txnAt)) {
+        val t = row.getStruct(txnAt)
         Some(SetTransaction(t.getString(0), t.getLong(1),
           if (t.isNullAt(2)) None else Some(t.getLong(2))))
-      } else if (row.length > 5 && !row.isNullAt(5)) {
-        val d = row.getStruct(5)
+      } else if (has(row, domainAt)) {
+        val d = row.getStruct(domainAt)
         Some(DomainMetadata(d.getString(0), d.getString(1),
           if (d.isNullAt(2)) false else d.getBoolean(2)))
-      } else if (row.length > 6 && !row.isNullAt(6)) {
-        val s = row.getStruct(6)
+      } else if (has(row, sidecarAt)) {
+        val s = row.getStruct(sidecarAt)
         Some(Sidecar(s.getString(0),
           if (s.isNullAt(1)) None else Some(s.getLong(1)),
           if (s.isNullAt(2)) None else Some(s.getLong(2))))
       } else None
+    }
+  }
+
+  /** Rows of `schema` read from parquet `files` in this process by Spark's
+    * parquet reader, the reader a scan task runs, without the job. Columns a
+    * file lacks read as null. */
+  private def driverRows(spark: SparkSession, files: Seq[Path], schema: StructType): Seq[Row] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+      StructType(Nil), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    files.flatMap { p =>
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      val rows = readFile(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(st), 0,
+        st.getLen, fileSize = st.getLen))
+      try rows.map(r => toRow(r).asInstanceOf[Row]).toVector
+      finally rows match { case c: java.io.Closeable => c.close(); case _ => }
     }
   }
 }

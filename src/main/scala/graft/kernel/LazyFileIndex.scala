@@ -51,17 +51,16 @@ class LazyFileIndex(
   // degrades to full scans exactly on the huge tables lazy mode serves
   private lazy val addDf = Checkpoints.addColumnDf(spark, checkpointParts)
 
-  /** Distributed prune: file-skipping predicates evaluate on executors over
-    * the checkpoint parquet; only survivors cross to the driver. `schema`/
-    * `partitionColumns`/`preds` must already be in the physical domain when
-    * column mapping is enabled (see StatsPruning.prune(snapshot, ...)). */
+  /** Distributed prune of an index that is not materialized (a materialized
+    * one is pruned on the driver, like an eager snapshot): file-skipping
+    * predicates evaluate on executors over the checkpoint parquet; only
+    * survivors cross to the driver. `schema`/`partitionColumns`/`preds` must
+    * already be in the physical domain when column mapping is enabled (see
+    * [[StatsPruning.prune]]). */
   def prune(
       schema: StructType,
       partitionColumns: Seq[String],
       preds: Seq[Expression]): Vector[AddFile] = {
-    if (isMaterialized)
-      return cachedAdds.filter(f =>
-        StatsPruning.fileMayMatchAll(schema, partitionColumns, preds, f))
     val schemaJson = schema.json
     val pc = partitionColumns
     val predsB = spark.sparkContext.broadcast(preds.toVector)

@@ -18,15 +18,18 @@ import org.json4s.jackson.JsonMethods
  * it. A remove never cancels a same-path add carrying a DIFFERENT deletion
  * vector (the DV-rewrite shape). Tombstones are retained for VACUUM.
  *
- * Scale note: the file index lives on the driver (same as delta-rs, whose
- * snapshot caches log data in Arrow batches in-process). A full replay reads
- * the checkpoint through Spark, a distributed scan that reduces to the
- * driver index, plus a JSON tail bounded by `delta.checkpointInterval`
- * commits. It runs once per table: [[DeltaLog]] keeps each table's latest
+ * Scale note: the snapshot kind is the log plane's one driver/Spark
+ * boundary. An eager snapshot's file index lives on the driver (same as
+ * delta-rs, whose snapshot caches log data in Arrow batches in-process): a
+ * full replay reads the checkpoint in this process, with Spark's parquet
+ * reader but no Spark job, plus a JSON tail bounded by
+ * `delta.checkpointInterval` commits, and pruning is a driver loop. A full
+ * replay runs once per table: [[DeltaLog]] keeps each table's latest
  * snapshot in a process-wide cache and moves it forward by reading only the
  * commits written since, as delta-rs moves its `EagerSnapshot`. Above
- * `spark.graft.lazySnapshotThreshold` checkpoint actions the Add index stays
- * parquet-backed ([[LazyFileIndex]]) and pruning runs distributed.
+ * `spark.graft.lazySnapshotThreshold` checkpoint actions the snapshot is
+ * lazy: the Add index stays parquet-backed ([[LazyFileIndex]]) and
+ * pruning and counts run as Spark jobs.
  */
 case class Snapshot(
     tablePath: String,
@@ -44,9 +47,8 @@ case class Snapshot(
   def partitionColumns: Seq[String] = metadata.partitionColumns
 
   /** The live file set. On a lazy (huge-table) snapshot this pulls the full
-    * index to the driver once and caches it — prefer
-    * [[StatsPruning.prune(snapshot*]] / the count/size accessors below,
-    * which stay distributed. */
+    * index to the driver once and caches it — prefer [[StatsPruning.prune]]
+    * and the count/size accessors below, which stay distributed. */
   lazy val allFiles: Vector[AddFile] =
     lazyIndex.map(_.materializeAdds()).getOrElse(eagerFiles)
 
@@ -382,14 +384,16 @@ class DeltaLog(val spark: SparkSession, val tablePath: Path) {
           if (hintV.contains(cv)) hintSize.getOrElse(footerRows())
           else footerRows()
         }
-        if (withFiles && cpRows >= lazyThreshold &&
-            (classic || v2SidecarParts.nonEmpty)) {
+        // an eager-size checkpoint is read on the driver, with no Spark job
+        val eager = cpRows < lazyThreshold
+        if (withFiles && !eager && (classic || v2SidecarParts.nonEmpty)) {
           lazyParts = Some(if (classic) parts else v2SidecarParts)
           // control plane only — columnar pruning (or the tiny manifest)
           // makes this near-free
-          Checkpoints.readResolved(spark, store, logPath, parts, withFiles = false)
+          Checkpoints.readResolved(spark, store, logPath, parts, withFiles = false,
+            onDriver = false)
         } else
-          Checkpoints.readResolved(spark, store, logPath, parts, withFiles = withFiles)
+          Checkpoints.readResolved(spark, store, logPath, parts, withFiles, onDriver = eager)
       case None => Nil
     }
     val startAfter = cpVersion.getOrElse(-1L)

@@ -3,6 +3,8 @@ package graft.kernel
 import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
+import scala.collection.parallel.CollectionConverters._
+
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
@@ -79,10 +81,11 @@ object PartitionCodec {
  * `find_files.rs:719` ("silently disable pruning by failing open") —
  * pruning must never change results, only cost.
  *
- * Runs on the driver (no Spark job) so scan planning stays at
- * metadata-latency even when the query itself is tiny; the evaluation is
- * O(files × predicate-size) over the in-memory index, the same shape as
- * delta-rs's in-process Arrow evaluation.
+ * On an eager snapshot this runs on the driver (no Spark job), so scan
+ * planning stays at metadata latency even when the query itself is tiny;
+ * the evaluation is O(files × predicate-size) over the in-memory index,
+ * the same shape as delta-rs's in-process Arrow evaluation. A lazy
+ * snapshot runs the same per-file test in its [[LazyFileIndex]] job.
  */
 object StatsPruning {
 
@@ -302,44 +305,41 @@ object StatsPruning {
       case _ => None
     }
 
-  /** Snapshot-aware variant: translates schema/partition/predicate names to
-    * the physical domain when column mapping is enabled (log partitionValues
-    * and stats keys are physical names). */
-  def fileMayMatch(snapshot: Snapshot, pred: Expression, file: AddFile): Boolean = {
+  /** The snapshot's schema, partition columns and `preds` in the physical
+    * domain: log partitionValues and stats keys carry physical names when
+    * column mapping is enabled. */
+  private def physical(snapshot: Snapshot, preds: Seq[Expression])
+      : (StructType, Seq[String], Seq[Expression]) =
     if (ColumnMapping.enabled(snapshot.metadata)) {
       val nm = ColumnMapping.nameMap(snapshot.schema)
-      fileMayMatch(ColumnMapping.physicalSchema(snapshot.schema),
+      (ColumnMapping.physicalSchema(snapshot.schema),
         snapshot.partitionColumns.map(c => nm.getOrElse(c, c)),
-        ColumnMapping.toPhysicalPredicate(pred, nm), file)
-    } else fileMayMatch(snapshot.schema, snapshot.partitionColumns, pred, file)
-  }
+        preds.map(ColumnMapping.toPhysicalPredicate(_, nm)))
+    } else (snapshot.schema, snapshot.partitionColumns, preds)
 
-  /** Snapshot-aware prune (mapping-translated, optionally distributed). */
-  def prune(snapshot: Snapshot, preds: Seq[Expression], files: Seq[AddFile],
-            spark: Option[org.apache.spark.sql.SparkSession]): Seq[AddFile] = {
-    if (ColumnMapping.enabled(snapshot.metadata)) {
-      val nm = ColumnMapping.nameMap(snapshot.schema)
-      prune(ColumnMapping.physicalSchema(snapshot.schema),
-        snapshot.partitionColumns.map(c => nm.getOrElse(c, c)),
-        preds.map(ColumnMapping.toPhysicalPredicate(_, nm)), files, spark)
-    } else prune(snapshot.schema, snapshot.partitionColumns, preds, files, spark)
-  }
-
-  /** Prune the snapshot's live set WITHOUT materializing it: on a lazy
-    * (huge-table) snapshot the predicates evaluate distributed over the
-    * checkpoint parquet and only survivors reach the driver. */
-  def pruneSnapshot(snapshot: Snapshot, preds: Seq[Expression],
-                    spark: Option[org.apache.spark.sql.SparkSession]): Seq[AddFile] =
-    snapshot.lazyIndex match {
-      case Some(idx) if !idx.isMaterialized && preds.nonEmpty =>
-        if (ColumnMapping.enabled(snapshot.metadata)) {
-          val nm = ColumnMapping.nameMap(snapshot.schema)
-          idx.prune(ColumnMapping.physicalSchema(snapshot.schema),
-            snapshot.partitionColumns.map(c => nm.getOrElse(c, c)),
-            preds.map(ColumnMapping.toPhysicalPredicate(_, nm)))
-        } else idx.prune(snapshot.schema, snapshot.partitionColumns, preds)
-      case _ => prune(snapshot, preds, snapshot.allFiles, spark)
+  /** The files of `snapshot` that may match all `preds`, in snapshot order.
+    * The snapshot kind decides where this runs: an eager snapshot filters
+    * its driver-resident Adds on the driver (a parallel collection, no Spark
+    * job); a lazy one evaluates the predicates in a Spark job over its
+    * checkpoint parquet, and only survivors reach the driver. */
+  def prune(snapshot: Snapshot, preds: Seq[Expression]): Seq[AddFile] = {
+    if (preds.isEmpty) return snapshot.allFiles
+    snapshot.lazyIndex.filterNot(_.isMaterialized) match {
+      case Some(idx) =>
+        val (schema, partCols, ps) = physical(snapshot, preds)
+        idx.prune(schema, partCols, ps)
+      case None =>
+        val mayMatch = filePredicate(snapshot, preds)
+        snapshot.allFiles.par.filter(mayMatch).seq
     }
+  }
+
+  /** Per-file test "may match all `preds`" against `snapshot`, with the
+    * column-mapping translation done once, outside the per-file loop. */
+  def filePredicate(snapshot: Snapshot, preds: Seq[Expression]): AddFile => Boolean = {
+    val (schema, partCols, ps) = physical(snapshot, preds)
+    f => fileMayMatchAll(schema, partCols, ps, f)
+  }
 
   /** True iff the file may contain rows satisfying `pred` (fail-open). */
   def fileMayMatch(
@@ -373,65 +373,6 @@ object StatsPruning {
     val fv = FileView(partVals, stats)
     val pcs = partitionColumns.toSet
     preds.forall(p => eval(schema, pcs, p, fv).getOrElse(true))
-  }
-
-  /** Mapping-translated per-file predicate with the snapshot-level work
-    * (nameMap, physical schema, predicate rewrite) hoisted out of the
-    * per-file loop — DML's full/partial split calls this once and applies
-    * the closure to thousands of candidates. */
-  def filePredicate(snapshot: Snapshot, pred: Expression): AddFile => Boolean = {
-    if (ColumnMapping.enabled(snapshot.metadata)) {
-      val nm = ColumnMapping.nameMap(snapshot.schema)
-      val sch = ColumnMapping.physicalSchema(snapshot.schema)
-      val pcs = snapshot.partitionColumns.map(c => nm.getOrElse(c, c))
-      val p = ColumnMapping.toPhysicalPredicate(pred, nm)
-      f => fileMayMatch(sch, pcs, p, f)
-    } else {
-      val sch = snapshot.schema
-      val pcs = snapshot.partitionColumns
-      f => fileMayMatch(sch, pcs, pred, f)
-    }
-  }
-
-  /** Above this many candidate files, pruning runs as a Spark job instead
-    * of a serial driver loop (override: spark.graft.distributedPruneThreshold). */
-  val DefaultDistributedThreshold = 50000
-
-  /** Prune a file list down to those that may match all `preds`.
-    *
-    * Small snapshots evaluate on the driver (metadata-latency planning, no
-    * job). Large ones distribute the O(files × predicate) evaluation as a
-    * mapPartitions filter and reduce only the survivors to the driver — the
-    * per-file cost at millions of Adds is then cluster-parallel. (The Add
-    * index itself still materializes on the driver first; moving the whole
-    * snapshot to a Dataset is the follow-on step for >10M-file tables.) */
-  def prune(
-      schema: StructType,
-      partitionColumns: Seq[String],
-      preds: Seq[Expression],
-      files: Seq[AddFile],
-      spark: Option[org.apache.spark.sql.SparkSession] = None): Seq[AddFile] = {
-    if (preds.isEmpty) return files
-    val threshold = spark.flatMap(s =>
-        scala.util.Try(s.conf.get("spark.graft.distributedPruneThreshold").toInt).toOption)
-      .getOrElse(DefaultDistributedThreshold)
-    spark match {
-      case Some(s) if files.size >= threshold =>
-        val schemaJson = schema.json
-        val pc = partitionColumns
-        val predsB = s.sparkContext.broadcast(preds.toVector)
-        val slices = math.max(s.sparkContext.defaultParallelism, files.size / 10000)
-        s.sparkContext.parallelize(files, slices)
-          .mapPartitions { it =>
-            val sch = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-              .asInstanceOf[StructType]
-            val ps = predsB.value
-            it.filter(f => fileMayMatchAll(sch, pc, ps, f))
-          }
-          .collect().toSeq
-      case _ =>
-        files.filter(f => fileMayMatchAll(schema, partitionColumns, preds, f))
-    }
   }
 
   /** Returns Some(false) = provably no match (skip file); Some(true)/None = keep. */

@@ -399,9 +399,8 @@ class OptimisticTransaction(
     snapshot match {
       case None => true
       case Some(s) =>
-        files.exists { f =>
-          readPredicates.exists(p => StatsPruning.fileMayMatch(s, p, f))
-        }
+        val mayMatch = readPredicates.map(p => StatsPruning.filePredicate(s, Seq(p)))
+        files.exists(f => mayMatch.exists(_(f)))
     }
   }
 

@@ -20,7 +20,7 @@ object Dml {
       snapshot: Snapshot,
       pred: String): Seq[AddFile] = {
     val predExpr = Scan.parsePredicate(spark, pred)
-    val candidates = Scan.prunedFiles(snapshot, Seq(predExpr), Some(spark))
+    val candidates = Scan.prunedFiles(snapshot, Seq(predExpr))
     if (candidates.isEmpty) return Nil
     if (StatsPruning.isPartitionOnly(snapshot.schema, predExpr, snapshot.partitionColumns)) {
       // stats pruning on partition-only predicates is exact
@@ -200,13 +200,12 @@ object DeleteOp {
       case Some(pred) =>
         val predExpr = Scan.parsePredicate(spark, pred)
         txn.readPredicate(predExpr)
-        val candidates = Scan.prunedFiles(snapshot, Seq(predExpr), Some(spark))
+        val candidates = Scan.prunedFiles(snapshot, Seq(predExpr))
         txn.readFile(candidates.map(_.path))
 
         // provably fully-matching files (negation can't match) drop whole
-        val negation = Scan.parsePredicate(spark, s"NOT ($pred)")
-        val negMatch = StatsPruning.filePredicate(snapshot, negation)
-        val (fullFiles, partialCandidates) = candidates.partition(f => !negMatch(f))
+        val (fullFiles, partialCandidates) =
+          WriteIntoDelta.splitFullPartial(spark, snapshot, candidates, pred)
 
         val useDv = snapshot.confBool("delta.enableDeletionVectors")
         val cdcOn = Dml.cdcEnabled(snapshot)
@@ -570,7 +569,7 @@ object UpdateOp {
       }
     }
 
-    val candidates = Scan.prunedFiles(snapshot, Seq(predExpr), Some(spark))
+    val candidates = Scan.prunedFiles(snapshot, Seq(predExpr))
     if (candidates.isEmpty) {
       lastPhases = phases.acc.toMap
       return emptyCommit()

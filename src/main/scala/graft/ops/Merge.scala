@@ -330,7 +330,7 @@ object MergeOp {
     earlyPreds.foreach(txn.readPredicate)
     if (earlyPreds.isEmpty) txn.readWholeTable()
 
-    val candidates = Scan.prunedFiles(snapshot, earlyPreds, Some(spark))
+    val candidates = Scan.prunedFiles(snapshot, earlyPreds)
     lastCandidateFiles = candidates.size
     txn.readFile(candidates.map(_.path))
 

@@ -56,7 +56,7 @@ object OptimizeOp {
         val e = Scan.parsePredicate(spark, p)
         require(StatsPruning.isPartitionOnly(snapshot.schema, e, snapshot.partitionColumns),
           "OPTIMIZE predicate must reference only partition columns")
-        Scan.prunedFiles(snapshot, Seq(e), Some(table.spark)).filter(_.size < targetSize)
+        Scan.prunedFiles(snapshot, Seq(e)).filter(_.size < targetSize)
       case None => snapshot.filesSmallerThan(targetSize)
     }
 
@@ -267,7 +267,7 @@ object OptimizeOp {
         require(StatsPruning.isPartitionOnly(snapshot.schema, e, snapshot.partitionColumns),
           "OPTIMIZE predicate must reference only partition columns")
         txn.readPredicate(e)
-        Scan.prunedFiles(snapshot, Seq(e), Some(spark))
+        Scan.prunedFiles(snapshot, Seq(e))
       case None =>
         txn.readWholeTable()
         snapshot.allFiles

@@ -167,7 +167,7 @@ object WriteIntoDelta {
       case ("overwrite", Some(pred)) =>
         val predExpr = Scan.parsePredicate(spark, pred)
         txn.readPredicate(predExpr)
-        val candidates = Scan.prunedFiles(snapshot, Seq(predExpr), Some(spark))
+        val candidates = Scan.prunedFiles(snapshot, Seq(predExpr))
         txn.readFile(candidates.map(_.path))
         // drop fully-matching files whole; rewrite partial files keeping
         // only their non-matching rows
@@ -234,7 +234,7 @@ object WriteIntoDelta {
       candidates: Seq[AddFile],
       pred: String): (Seq[AddFile], Seq[AddFile]) = {
     val negation = Scan.parsePredicate(spark, s"NOT ($pred)")
-    val negMatch = StatsPruning.filePredicate(snapshot, negation)
+    val negMatch = StatsPruning.filePredicate(snapshot, Seq(negation))
     candidates.partition(f => !negMatch(f))
   }
 

@@ -93,9 +93,9 @@ object GraftScanInlining extends Rule[LogicalPlan] {
     val spark = SparkSession.active
     // ScanOperation hands over only deterministic filters, and the pruner
     // fails open on shapes it cannot evaluate; subquery plans stay out of
-    // the predicates the distributed pruner broadcasts
+    // the predicates a lazy snapshot's pruning job broadcasts
     val preds = filters.filterNot(SubqueryExpression.hasSubquery)
-    val files = Scan.prunedFiles(snap, preds, Some(spark))
+    val files = Scan.prunedFiles(snap, preds)
     if (files.isEmpty) return LocalRelation(leaf.output)
     val read = Scan.readFiles(spark, snap, files).queryExecution.analyzed
     val byName = read.output.map(a => a.name -> a).toMap

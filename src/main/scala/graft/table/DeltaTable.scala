@@ -75,7 +75,7 @@ class DeltaTable private[graft] (
     // metadata — the BlindDeltaTable.append TOCTOU, one method over)
     val snap = snapshot
     val files = predicate match {
-      case Some(p) => Scan.prunedFiles(snap, Seq(Scan.parsePredicate(spark, p)), Some(spark))
+      case Some(p) => Scan.prunedFiles(snap, Seq(Scan.parsePredicate(spark, p)))
       case None => snap.allFiles
     }
     // Add actions key partitionValues by PHYSICAL name under column

@@ -68,11 +68,17 @@ object Scan {
 
   /** Pruned read: only files that may satisfy `predicates`. */
   def readWhere(spark: SparkSession, snapshot: Snapshot, predicates: Seq[Expression]): DataFrame =
-    readFiles(spark, snapshot, prunedFiles(snapshot, predicates, Some(spark)))
+    readFiles(spark, snapshot, prunedFiles(snapshot, predicates))
 
+  /** The snapshot's files that may satisfy `predicates` ([[StatsPruning.prune]]). */
+  def prunedFiles(snapshot: Snapshot, predicates: Seq[Expression]): Seq[AddFile] =
+    StatsPruning.prune(snapshot, predicates)
+
+  /** The same; the session is unused. Kept only because the benchmark's
+    * traced scan (`lakebench/src/lakebench/Workloads.scala`) still passes one. */
+  @deprecated("the session is unused: call prunedFiles(snapshot, predicates)", "0.1.0")
   def prunedFiles(snapshot: Snapshot, predicates: Seq[Expression],
-                  spark: Option[SparkSession] = None): Seq[AddFile] =
-    StatsPruning.pruneSnapshot(snapshot, predicates, spark)
+      spark: Option[SparkSession]): Seq[AddFile] = prunedFiles(snapshot, predicates)
 
   /** Read an explicit subset of the snapshot's files as a DataFrame with the
     * full table schema (partition columns reconstructed + cast), as ONE

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
@@ -16,7 +16,8 @@ import SnapshotCacheSpec.{jobs, state}
 
 /** Checkpoints of a snapshot held in driver memory are written from the
   * driver: same footer schema and same replayed state as a JSON replay, in
-  * all three layouts, and no Spark job. */
+  * all three layouts, and no Spark job. A cold load of such a checkpoint is
+  * read on the driver too. */
 class CheckpointWriteSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -143,5 +144,88 @@ class CheckpointWriteSpec extends AnyFunSuite {
     val checkpointing = append(2)
     assert(new java.io.File(dir, s"_delta_log/${LogStore.checkpointFileName(2)}").exists)
     assert(checkpointing == plain, "the checkpointing append ran more jobs than a plain one")
+  }
+
+  /** `t`'s log copied to a fresh path (so no snapshot-cache entry) without
+    * its JSON commits: a load must replay from the checkpoint alone. */
+  private def checkpointOnlyCopy(t: DeltaTable): DeltaLog = {
+    val conf = spark.sessionState.newHadoopConf()
+    val src = t.deltaLog.logPath
+    val fs = src.getFileSystem(conf)
+    val dst = new Path(tmpDir(), LogStore.LOG_DIR)
+    assert(FileUtil.copy(fs, src, fs, dst, false, conf))
+    fs.listStatus(dst).map(_.getPath).filter(p => LogStore.isCommitFile(p.getName))
+      .foreach(fs.delete(_, false))
+    new DeltaLog(spark, dst.getParent)
+  }
+
+  private def actionsOf(s: Snapshot): Seq[Action] =
+    Seq(s.protocol, s.metadata) ++ s.allFiles ++ s.tombstones ++
+      s.txns.map { case (app, v) => SetTransaction(app, v, None) } ++ s.domains.values
+
+  /** Cold loads of `log`, full and metadata-only, launch no Spark job and
+    * build an eager snapshot; the driver and Spark reads of its checkpoint
+    * return the same actions. Returns the snapshot. */
+  private def coldLoad(log: DeltaLog): Snapshot = {
+    val (snap, n) = jobs(spark)(log.snapshot())
+    assert(n == 0, "a cold load of an eager checkpointed table launched Spark jobs")
+    assert(snap.lazyIndex.isEmpty)
+    val (meta, m) = jobs(spark)(log.metadataSnapshot())
+    assert(m == 0, "metadataSnapshot() launched Spark jobs")
+    assert(meta.version == snap.version && meta.metadata == snap.metadata &&
+      meta.protocol == snap.protocol && meta.txns == snap.txns)
+    val fs = log.logPath.getFileSystem(log.store.conf)
+    val parts = fs.listStatus(log.logPath).map(_.getPath)
+      .filter(p => LogStore.isCheckpointFile(p.getName)).toSeq
+    def read(onDriver: Boolean) = Checkpoints.readResolved(spark, log.store, log.logPath,
+      parts, withFiles = true, onDriver).toSet
+    assert(read(onDriver = true) == read(onDriver = false))
+    snap
+  }
+
+  test("cold loads of eager classic, multi-part and V2 checkpoints launch no Spark job") {
+    for ((v2, partSize) <- Seq((false, None), (false, Some("3")), (true, None))) {
+      val t = build(v2)
+      partSize.foreach(spark.conf.set("spark.graft.checkpoint.partSize", _))
+      try t.createCheckpoint()
+      finally spark.conf.unset("spark.graft.checkpoint.partSize")
+      val snap = coldLoad(checkpointOnlyCopy(t))
+      assert(snap.version == t.version)
+      assert(state(actionsOf(snap)) == state((0L to t.version).flatMap(t.deltaLog.readCommit)),
+        s"v2=$v2 partSize=$partSize")
+    }
+  }
+
+  test("a cold load of an eager stats_parsed-only checkpoint launches no Spark job") {
+    val dir = tmpDir()
+    DeltaTable.write(spark, spark.range(1, 101).toDF().repartitionByRange(2, col("id")), dir)
+    val t = DeltaTable.forPath(spark, dir)
+    t.createCheckpoint()
+    // rewritten as delta-spark lays out writeStatsAsJson=false: the stats
+    // as an `add.stats_parsed` struct, the raw JSON null
+    val cp = new Path(t.deltaLog.logPath, LogStore.checkpointFileName(t.version))
+    val rewritten = tmpDir()
+    spark.read.parquet(cp.toString).withColumn("add", col("add")
+      .withField("stats_parsed", struct(
+        get_json_object(col("add.stats"), "$.numRecords").cast("long").as("numRecords"),
+        struct(get_json_object(col("add.stats"), "$.minValues.id").cast("long").as("id"))
+          .as("minValues"),
+        struct(get_json_object(col("add.stats"), "$.maxValues.id").cast("long").as("id"))
+          .as("maxValues")))
+      .withField("stats", lit(null).cast("string")))
+      .coalesce(1).write.parquet(rewritten)
+    val fs = cp.getFileSystem(spark.sessionState.newHadoopConf())
+    val part = fs.listStatus(new Path(rewritten)).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    assert(fs.delete(cp, false) && fs.rename(part, cp))
+
+    val snap = coldLoad(checkpointOnlyCopy(t))
+    val original = state((0L to t.version).flatMap(t.deltaLog.readCommit))
+    assert(snap.allFiles.map(f => f.reconcileKey -> f.copy(stats = None)).toMap ==
+      original.adds.map { case (k, f) => k -> f.copy(stats = None) })
+    assert(snap.allFiles.forall(_.stats.isDefined), "stats synthesized from stats_parsed")
+    assert(snap.approxNumRecords.contains(100L))
+    val pred = graft.table.Scan.parsePredicate(spark, "id <= 1")
+    assert(graft.table.Scan.prunedFiles(snap, Seq(pred)).size == 1)
   }
 }

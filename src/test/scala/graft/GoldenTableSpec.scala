@@ -47,8 +47,8 @@ class GoldenTableSpec extends AnyFunSuite {
     val pruned = t.scanWhere("year = '2021' AND month = '12'")
     assert(pruned.select("value").as[String].collect().sorted.toSeq == Seq("5", "6", "7"))
     assert(graft.table.Scan.prunedFiles(t.snapshot,
-      Seq(graft.table.Scan.parsePredicate(spark, "year = '2021' AND month = '12'")),
-      Some(spark)).size < t.snapshot.numFiles)
+      Seq(graft.table.Scan.parsePredicate(spark, "year = '2021' AND month = '12'")))
+      .size < t.snapshot.numFiles)
   }
 
   test("table-with-dv-small: delta-spark-written deletion vector applied") {
@@ -198,7 +198,7 @@ class GoldenTableSpec extends AnyFunSuite {
     assert(t.schema.fieldNames.contains("nested_struct"))
     // stats may be absent from these adds — pruning must fail open
     val pruned = graft.table.Scan.prunedFiles(t.snapshot,
-      Seq(graft.table.Scan.parsePredicate(spark, "integer = 3")), Some(spark))
+      Seq(graft.table.Scan.parsePredicate(spark, "integer = 3")))
     assert(pruned.nonEmpty)
   }
 
@@ -288,7 +288,7 @@ class GoldenTableSpec extends AnyFunSuite {
     // a selective predicate may prune the stats-carrying file but NEVER the
     // stats-less one — fail open is the correctness rule (find_files.rs:719)
     val pruned = graft.table.Scan.prunedFiles(t.snapshot,
-      Seq(graft.table.Scan.parsePredicate(spark, "integer = -99999")), Some(spark))
+      Seq(graft.table.Scan.parsePredicate(spark, "integer = -99999")))
     assert(pruned.exists(_.stats.isEmpty),
       "stats-less file must never be pruned by a stats predicate")
     // checkpointed variant of the same table behaves identically
@@ -319,10 +319,10 @@ class GoldenTableSpec extends AnyFunSuite {
     // DATE-typed predicate must fail OPEN (no pruning), the string form
     // prunes exactly
     val typed = graft.table.Scan.prunedFiles(t.snapshot,
-      Seq(graft.table.Scan.parsePredicate(spark, "date = DATE '2023-04-13'")), Some(spark))
+      Seq(graft.table.Scan.parsePredicate(spark, "date = DATE '2023-04-13'")))
     assert(typed.size == 2)
     val pruned = graft.table.Scan.prunedFiles(t.snapshot,
-      Seq(graft.table.Scan.parsePredicate(spark, "date = '2023-04-13'")), Some(spark))
+      Seq(graft.table.Scan.parsePredicate(spark, "date = '2023-04-13'")))
     assert(pruned.size == 1)
     assert(t.scanWhere("date = '2023-04-13'").count() == 144)
   }
@@ -337,7 +337,7 @@ class GoldenTableSpec extends AnyFunSuite {
     assert(hit.count() == 2) // one per event_date
     assert(graft.table.Scan.prunedFiles(t.snapshot,
       Seq(graft.table.Scan.parsePredicate(spark,
-        "year = '2021.0' AND category = 'A' AND is_active = 'true'")), Some(spark)).size == 2)
+        "year = '2021.0' AND category = 'A' AND is_active = 'true'"))).size == 2)
   }
 
   test("checkpoint_with_partitions: log missing version 0 replays via checkpoint") {

@@ -53,7 +53,7 @@ class KernelFixesSpec extends AnyFunSuite {
     // predicate over the partition column: must not throw, must keep the
     // NaN file (unknown → fail open), and the typed files prune correctly
     val pruned = graft.table.Scan.prunedFiles(t.snapshot,
-      Seq(graft.table.Scan.parsePredicate(spark, "p > 2.0")), Some(spark))
+      Seq(graft.table.Scan.parsePredicate(spark, "p > 2.0")))
     assert(pruned.exists(_.partitionValues("p") == "NaN"))
     assert(!pruned.exists(_.partitionValues("p") == "1.5"))
     assert(t.toDF.count() == 3)

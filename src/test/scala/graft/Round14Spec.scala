@@ -444,7 +444,7 @@ class Round14Spec extends AnyFunSuite {
 
     def mayMatch(e: org.apache.spark.sql.catalyst.expressions.Expression,
                  f: graft.kernel.AddFile) =
-      StatsPruning.fileMayMatch(snap, e, f)
+      StatsPruning.filePredicate(snap, Seq(e))(f)
 
     // partition InSet with a NULL element (IN (..., NULL) after OptimizeIn):
     // previously NPE'd out of the planner; 3VL says NULL can never make the

@@ -122,7 +122,7 @@ class Round16ScaleSpec extends AnyFunSuite {
     // pruned-scan planning: k = 123456 lives only in file i=1234
     val pred = graft.table.Scan.parsePredicate(spark, "k = 123456")
     val tPr0 = System.nanoTime()
-    val pruned = graft.table.Scan.prunedFiles(snap, Seq(pred), Some(spark))
+    val pruned = graft.table.Scan.prunedFiles(snap, Seq(pred))
     val pruneSec = (System.nanoTime() - tPr0) / 1e9
     assert(pruned.map(_.path) == Seq(f"f${1234}%09d.parquet"),
       s"stats pruning must cut $n files to the one covering k=123456, " +

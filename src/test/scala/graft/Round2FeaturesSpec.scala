@@ -119,20 +119,27 @@ class Round2FeaturesSpec extends AnyFunSuite {
     assert(t.toDF.select("k").as[Int].collect().toSet == Set(2, 3))
   }
 
-  test("distributed pruning path matches driver-side pruning") {
-    import spark.implicits._
-    val dir = tmpDir()
-    val df = (0 until 1000).map(i => (i.toLong, i % 10)).toDF("id", "bucket")
-    DeltaTable.write(spark, df.repartitionByRange(10, col("id")), dir)
-    val t = DeltaTable.forPath(spark, dir)
-    val pred = graft.table.Scan.parsePredicate(spark, "id < 100")
-    val driverSide = graft.table.Scan.prunedFiles(t.snapshot, Seq(pred))
-    spark.conf.set("spark.graft.distributedPruneThreshold", "1")
-    try {
-      val distributed = graft.table.Scan.prunedFiles(t.snapshot, Seq(pred), Some(spark))
-      assert(distributed.map(_.path).toSet == driverSide.map(_.path).toSet)
-      assert(driverSide.size < t.snapshot.numFiles)
-    } finally spark.conf.unset("spark.graft.distributedPruneThreshold")
+  test("pruning 50k eager Adds launches no job and keeps a serial filter's files and order") {
+    import org.apache.spark.sql.types._
+    import graft.kernel.{AddFile, Metadata, Protocol, Snapshot, StatsPruning}
+    val schema = StructType(Seq(StructField("id", LongType), StructField("p", IntegerType)))
+    // file i holds ids [100i, 100i + 99] in partition p = i % 10, in a
+    // shuffled snapshot order
+    val files = new scala.util.Random(7).shuffle((0 until 50000).toVector).map { i =>
+      AddFile(f"p=${i % 10}/f$i%05d.parquet", Map("p" -> (i % 10).toString), size = 4096,
+        stats = Some(s"""{"numRecords":100,"minValues":{"id":${i * 100L}},""" +
+          s""""maxValues":{"id":${i * 100L + 99}},"nullCount":{"id":0}}"""))
+    }
+    val snap = Snapshot("/synthetic", 0L, Protocol(),
+      Metadata(schemaString = schema.json, partitionColumns = Seq("p")),
+      files, Vector.empty, Map.empty, Map.empty, 0L)
+    val preds = Seq("id >= 1000000 AND id < 1050000", "p < 5")
+      .map(graft.table.Scan.parsePredicate(spark, _))
+    val (pruned, jobs) = SnapshotCacheSpec.jobs(spark)(graft.table.Scan.prunedFiles(snap, preds))
+    assert(jobs == 0, "pruning an eager snapshot launched Spark jobs")
+    val serial = files.filter(f => StatsPruning.fileMayMatchAll(schema, Seq("p"), preds, f))
+    assert(serial.size == 250)
+    assert(pruned == serial)
   }
 
   test("DELETE via deletion vectors: no rewrite, masks merge, vacuum keeps blobs") {

@@ -203,7 +203,7 @@ class Round3Spec extends AnyFunSuite {
       assert(snap.numFiles == 1000001L)
       assert(snap.approxNumRecords.contains(10000001L)) // 1M x 10 + the real row
       val pred = graft.table.Scan.parsePredicate(spark, "k = 12345")
-      val pruned = graft.table.Scan.prunedFiles(snap, Seq(pred), Some(spark))
+      val pruned = graft.table.Scan.prunedFiles(snap, Seq(pred))
       assert(pruned.map(_.path) == Seq("part-fake-1234.parquet"))
       assert(snap.lazyIndex.exists(!_.isMaterialized),
         "count/prune must not pull the full Add index to the driver")
@@ -213,7 +213,7 @@ class Round3Spec extends AnyFunSuite {
       assert(snap2.lazyIndex.exists(!_.isMaterialized), "refresh must stay lazy")
       assert(snap2.numFiles == 1000002L)
       val pruned2 = graft.table.Scan.prunedFiles(snap2,
-        Seq(graft.table.Scan.parsePredicate(spark, "k = 777777770")), Some(spark))
+        Seq(graft.table.Scan.parsePredicate(spark, "k = 777777770")))
       assert(pruned2.size == 1 && pruned2.head.path.startsWith("part-"))
       assert(snap2.lazyIndex.exists(!_.isMaterialized))
       // vacuum's live set stays a DataFrame on lazy snapshots — the real
@@ -234,7 +234,7 @@ class Round3Spec extends AnyFunSuite {
       assert(reloaded.lazyIndex.isDefined)
       assert(reloaded.numFiles == 1000002L)
       assert(graft.table.Scan.prunedFiles(reloaded,
-        Seq(graft.table.Scan.parsePredicate(spark, "k = 12345")), Some(spark))
+        Seq(graft.table.Scan.parsePredicate(spark, "k = 12345")))
         .map(_.path) == Seq("part-fake-1234.parquet"))
     } finally spark.conf.unset("spark.graft.lazySnapshotThreshold")
   }
@@ -304,7 +304,7 @@ class Round3Spec extends AnyFunSuite {
         "expected the sidecar-backed lazy index")
       assert(DeltaTable.forPath(spark, dir).toDF.count() == 2001)
       val pruned = graft.table.Scan.prunedFiles(snap,
-        Seq(graft.table.Scan.parsePredicate(spark, "k = 9999")), Some(spark))
+        Seq(graft.table.Scan.parsePredicate(spark, "k = 9999")))
       assert(pruned.nonEmpty && pruned.size < snap.numFiles)
     } finally spark.conf.unset("spark.graft.lazySnapshotThreshold")
   }

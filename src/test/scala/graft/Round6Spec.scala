@@ -60,11 +60,11 @@ class Round6Spec extends AnyFunSuite {
     assert(snap.allFiles.size == 4)
 
     val onA = Scan.prunedFiles(snap,
-      Seq(Scan.parsePredicate(spark, "a <= 100")), Some(spark))
+      Seq(Scan.parsePredicate(spark, "a <= 100")))
     assert(onA.size < 4, s"predicate on stats column did not prune: ${onA.size} files")
 
     val onB = Scan.prunedFiles(snap,
-      Seq(Scan.parsePredicate(spark, "b <= 100")), Some(spark))
+      Seq(Scan.parsePredicate(spark, "b <= 100")))
     assert(onB.size == 4, s"predicate on no-stats column must fail open, got ${onB.size}")
     assert(t.scanWhere("b <= 100").count() == 100)
   }
@@ -99,7 +99,7 @@ class Round6Spec extends AnyFunSuite {
     }
     // pruning translates the logical predicate to the physical stats key
     val pruned = Scan.prunedFiles(snap,
-      Seq(Scan.parsePredicate(spark, "a > 9999")), Some(spark))
+      Seq(Scan.parsePredicate(spark, "a > 9999")))
     assert(pruned.isEmpty, "mapped stats column should prune an impossible range")
   }
 
@@ -167,7 +167,7 @@ class Round6Spec extends AnyFunSuite {
     // distributed point prune: one surviving file, still not materialized
     val t1 = System.nanoTime()
     val pruned = graft.table.Scan.prunedFiles(snap,
-      Seq(graft.table.Scan.parsePredicate(spark, "o_orderkey = 123456")), Some(spark))
+      Seq(graft.table.Scan.parsePredicate(spark, "o_orderkey = 123456")))
     val pruneSec = (System.nanoTime() - t1) / 1e9
     assert(pruned.size == 1, s"expected 1 surviving file, got ${pruned.size}")
     assert(pruned.head.path.contains("part-0000001234"))

@@ -373,7 +373,7 @@ class Round8Spec extends AnyFunSuite {
       assert(t.approxCount.contains(100L),
         "lazy numRecords must be recovered from stats_parsed")
       val pruned = graft.table.Scan.prunedFiles(t.snapshot,
-        Seq(graft.table.Scan.parsePredicate(spark, "id <= 1")), Some(spark))
+        Seq(graft.table.Scan.parsePredicate(spark, "id <= 1")))
       assert(pruned.size == 1,
         s"lazy skipping must prune on stats_parsed-derived bounds, kept ${pruned.size}")
 
@@ -387,7 +387,7 @@ class Round8Spec extends AnyFunSuite {
       val t3 = DeltaTable.forPath(spark, dir)
       assert(t3.approxCount.contains(101L))
       val pruned3 = graft.table.Scan.prunedFiles(t3.snapshot,
-        Seq(graft.table.Scan.parsePredicate(spark, "id <= 1")), Some(spark))
+        Seq(graft.table.Scan.parsePredicate(spark, "id <= 1")))
       assert(pruned3.size == 1,
         s"re-checkpoint dropped stats_parsed-derived stats (kept ${pruned3.size} files)")
     } finally spark.conf.unset("spark.graft.lazySnapshotThreshold")

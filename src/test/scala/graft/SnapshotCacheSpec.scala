@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.kernel._
 import graft.table.DeltaTable
-import SnapshotCacheSpec.state
+import SnapshotCacheSpec.{fullReplays, state}
 
 /** The kernel snapshot cache (`DeltaLog` companion): every load validates
   * the cached snapshot against the store alone and replays only the commits
@@ -42,8 +42,7 @@ class SnapshotCacheSpec extends AnyFunSuite {
   private def dataFiles(dir: String): Set[String] =
     fs.listStatus(new Path(dir)).map(_.getPath.getName).filter(_.endsWith(".parquet")).toSet
 
-  /** Spark jobs launched from `graft.kernel` code (checkpoint reads of a
-    * full replay) while `body` runs. */
+  /** Spark jobs launched from `graft.kernel` code while `body` runs. */
   private def kernelJobs[A](body: => A): (A, Int) =
     SnapshotCacheSpec.jobs(spark, kernelOnly = true)(body)
 
@@ -56,17 +55,18 @@ class SnapshotCacheSpec extends AnyFunSuite {
     val latest = logFiles(dir).last.getPath
     fs.setTimes(latest, System.currentTimeMillis() + 3600L * 1000, -1)
 
-    assert(count("sc.fut.t") == 3)
-    // the changed mtime fails the check once; the replay it forces reads
-    // the checkpoint through Spark, so a second full replay would show here
-    val (again, jobs) = kernelJobs(count("sc.fut.t"))
+    // the changed mtime fails the check once
+    val (first, replays) = fullReplays(count("sc.fut.t"))
+    assert(first == 3)
+    assert(replays.size == 1 && replays.head.endsWith("failed check"), replays)
+    val (again, replaysAgain) = fullReplays(count("sc.fut.t"))
     assert(again == 3)
-    assert(jobs == 0, "the second SELECT must be served from the cache")
+    assert(replaysAgain.isEmpty, "the second SELECT must be served from the cache")
 
     sql("INSERT INTO sc.fut.t VALUES (4, 'r4')")
-    val (after, jobsAfter) = kernelJobs(count("sc.fut.t"))
+    val (after, replaysAfter) = fullReplays(count("sc.fut.t"))
     assert(after == 4)
-    assert(jobsAfter == 0, "the append is replayed as one new commit")
+    assert(replaysAfter.isEmpty, "the append is replayed as one new commit")
   }
 
   test("a table re-created at a cached path is served, not the dead one") {
@@ -127,9 +127,11 @@ class SnapshotCacheSpec extends AnyFunSuite {
         val rows = (1 to i).map(j => (i * 100L + j, s"r$j")).toDF("id", "v")
         DeltaTable.write(spark, rows, dir, mode = "append", appTxn = Some(("app", i.toLong)))
         reads.set(0)
-        val (_, jobs) = kernelJobs(catalog.loadTable(Identifier.of(Array("inc"), "t")).schema())
+        val ((_, jobs), replays) = fullReplays(
+          kernelJobs(catalog.loadTable(Identifier.of(Array("inc"), "t")).schema()))
         assert(reads.get == 1, s"append $i: commit-file reads of the load")
         assert(jobs == 0, s"append $i: graft.kernel jobs of the load")
+        assert(replays.isEmpty, s"append $i: full replays of the load")
         assert(count("sc.inc.t") == (1 to i).sum)
       }
 
@@ -159,8 +161,8 @@ class SnapshotCacheSpec extends AnyFunSuite {
       "cleanup must have deleted the aged commits")
 
     val catalog = spark.sessionState.catalogManager.catalog("sc").asInstanceOf[TableCatalog]
-    val (_, jobs) = kernelJobs(catalog.loadTable(Identifier.of(Array("old"), "t")).schema())
-    assert(jobs == 0, "the load after cleanup must be served from the cache")
+    val (_, replays) = fullReplays(catalog.loadTable(Identifier.of(Array("old"), "t")).schema())
+    assert(replays.isEmpty, "the load after cleanup must be served from the cache")
     assert(count("sc.old.t") == 2)
   }
 }
@@ -185,6 +187,35 @@ object SnapshotCacheSpec {
       actions.collect { case t: SetTransaction => t.appId -> t.version }.toMap,
       domains.toMap, actions.collect { case m: Metadata => m }.last,
       actions.collect { case p: Protocol => p }.last)
+  }
+
+  /** The kernel's "full replay of <path>: <reason>" lines logged while
+    * `body` runs: loads that the snapshot cache did not serve. */
+  def fullReplays[A](body: => A): (A, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("full-replays", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.startsWith("full replay of ")) seen.add(m)
+      }
+    }
+    val logger = LogManager.getLogger("graft.kernel").asInstanceOf[Logger]
+    val level = logger.getLevel
+    appender.start()
+    logger.addAppender(appender)
+    logger.setLevel(Level.DEBUG)
+    try {
+      val a = body
+      (a, seen.toArray(Array.empty[String]).toSeq)
+    } finally {
+      logger.setLevel(level)
+      logger.removeAppender(appender)
+      appender.stop()
+    }
   }
 
   /** Spark jobs started while `body` runs; with `kernelOnly`, only those
