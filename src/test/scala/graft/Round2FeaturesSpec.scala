@@ -119,7 +119,7 @@ class Round2FeaturesSpec extends AnyFunSuite {
     assert(t.toDF.select("k").as[Int].collect().toSet == Set(2, 3))
   }
 
-  test("pruning 50k eager Adds launches no job and keeps a serial filter's files and order") {
+  test("pruning 50k eager Adds: no job, same files and order") {
     import org.apache.spark.sql.types._
     import graft.kernel.{AddFile, Metadata, Protocol, Snapshot, StatsPruning}
     val schema = StructType(Seq(StructField("id", LongType), StructField("p", IntegerType)))
