@@ -20,11 +20,12 @@ import org.apache.spark.sql.types._
  * reference behavior in `crates/core/src/protocol/checkpoints.rs:27-46`
  * (`create_checkpoint_for`).
  *
- * The snapshot kind decides where checkpoint IO runs. An eager snapshot's
- * checkpoint is written and read on the driver, through Spark's own parquet
- * writer and reader, launching no Spark job. A lazy (huge) snapshot streams
- * its state from the previous checkpoint's parquet in a Spark write, and
- * its control-plane read is a column-pruned Spark scan.
+ * Checkpoints are read on the driver, through Spark's own parquet reader,
+ * launching no Spark job: all of an eager snapshot's checkpoint, and only
+ * the control-plane columns of a lazy (huge) one's. The snapshot kind
+ * decides where a checkpoint write runs. An eager snapshot's is written on
+ * the driver through Spark's parquet writer; a lazy snapshot streams its
+ * state from the previous checkpoint's parquet in a Spark write.
  */
 object Checkpoints {
 
@@ -508,11 +509,11 @@ object Checkpoints {
     * manifest (json lines or parquet) whose Sidecar actions point at
     * `_delta_log/_sidecars/` parquets carrying the add/remove state. */
   def readResolved(spark: SparkSession, store: LogStore, logPath: Path,
-      parts: Seq[Path], withFiles: Boolean, onDriver: Boolean = true): Seq[Action] = {
+      parts: Seq[Path], withFiles: Boolean): Seq[Action] = {
     val (jsonParts, parquetParts) = parts.partition(_.getName.endsWith(".json"))
     val manifestActions: Seq[Action] =
       jsonParts.flatMap(p => store.read(p).flatMap(ActionCodec.fromJson)) ++
-        (if (parquetParts.nonEmpty) read(spark, parquetParts, withFiles, onDriver) else Nil)
+        (if (parquetParts.nonEmpty) read(spark, parquetParts, withFiles) else Nil)
     val sidecars = manifestActions.collect { case s: Sidecar => s }
     val resolved =
       if (sidecars.isEmpty || !withFiles)
@@ -523,7 +524,7 @@ object Checkpoints {
       else {
         val sidecarPaths = sidecars.map(s =>
           new Path(new Path(logPath, "_sidecars"), s.path))
-        manifestActions ++ read(spark, sidecarPaths, withFiles = true, onDriver)
+        manifestActions ++ read(spark, sidecarPaths, withFiles = true)
           .filter(a => a.isInstanceOf[AddFile] || a.isInstanceOf[RemoveFile])
       }
     resolved.filterNot(a => a.isInstanceOf[Sidecar] || a.isInstanceOf[CheckpointMetadata])
@@ -579,13 +580,11 @@ object Checkpoints {
 
   /** All parts of one checkpoint version (classic single-file, or
     * delta-spark's `.checkpoint.%010d.%010d.parquet` parts) read into
-    * actions. With `withFiles = false` only the control-plane columns are
-    * read. With `onDriver` (an eager snapshot's read) the parts are decoded
-    * in this process by Spark's parquet reader, with no Spark job; otherwise
-    * they are one Spark scan collected to the driver, the lazy snapshot's
-    * control-plane read of a checkpoint of millions of rows. */
-  def read(spark: SparkSession, files: Seq[Path], withFiles: Boolean,
-      onDriver: Boolean = true): Seq[Action] = {
+    * actions, in this process by Spark's parquet reader, with no Spark job.
+    * With `withFiles = false` only the control-plane columns are read: a
+    * lazy snapshot's read of a checkpoint of millions of Add rows, which
+    * read as all-null and are dropped unconverted. */
+  def read(spark: SparkSession, files: Seq[Path], withFiles: Boolean): Seq[Action] = {
     require(files.nonEmpty, "no checkpoint files to read")
     // delta-spark checkpoints written with delta.checkpoint.writeStatsAsJson
     // =false carry stats ONLY as the `add.stats_parsed` STRUCT (the
@@ -606,15 +605,12 @@ object Checkpoints {
     val schema =
       if (withFiles) readSchema
       else StructType(readSchema.filterNot(f => f.name == "add" || f.name == "remove"))
-    def collectRows(df: org.apache.spark.sql.DataFrame): Seq[Row] =
-      (if (statsParsedType.isEmpty) df else df.withColumn("add", synthesizeStats(col("add"))))
-        .collect().toSeq
     // a DataFrame over driver rows is a local relation: the optimizer
     // evaluates the synthesis on the driver, and collecting it runs no job
     val rows =
-      if (!onDriver) collectRows(spark.read.schema(schema).parquet(files.map(_.toString): _*))
-      else if (statsParsedType.isEmpty) driverRows(spark, files, schema)
-      else collectRows(spark.createDataFrame(driverRows(spark, files, schema).asJava, schema))
+      if (statsParsedType.isEmpty) driverRows(spark, files, schema)
+      else spark.createDataFrame(driverRows(spark, files, schema).asJava, schema)
+        .withColumn("add", synthesizeStats(col("add"))).collect().toSeq
     val Seq(txnAt, addAt, removeAt, metaAt, protocolAt, domainAt, sidecarAt) =
       Seq("txn", "add", "remove", "metaData", "protocol", "domainMetadata", "sidecar")
         .map(schema.fieldNames.indexOf(_))
@@ -660,9 +656,11 @@ object Checkpoints {
     }
   }
 
-  /** Rows of `schema` read from parquet `files` in this process by Spark's
-    * parquet reader, the reader a scan task runs, without the job. Columns a
-    * file lacks read as null. */
+  /** The rows of `schema` that are not all-null, read from parquet `files`
+    * in this process by Spark's parquet reader, the reader a scan task runs,
+    * without the job. Columns a file lacks read as null. The vectorized and
+    * the row-based reader both return a `Closeable` iterator, so a read that
+    * fails part-way still closes its file (pinned by `CheckpointWriteSpec`). */
   private def driverRows(spark: SparkSession, files: Seq[Path], schema: StructType): Seq[Row] = {
     val conf = spark.sessionState.newHadoopConf()
     val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
@@ -672,7 +670,8 @@ object Checkpoints {
       val st = p.getFileSystem(conf).getFileStatus(p)
       val rows = readFile(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(st), 0,
         st.getLen, fileSize = st.getLen))
-      try rows.map(r => toRow(r).asInstanceOf[Row]).toVector
+      try rows.filter(r => (0 until r.numFields).exists(!r.isNullAt(_)))
+        .map(r => toRow(r).asInstanceOf[Row]).toVector
       finally rows match { case c: java.io.Closeable => c.close(); case _ => }
     }
   }

@@ -384,16 +384,14 @@ class DeltaLog(val spark: SparkSession, val tablePath: Path) {
           if (hintV.contains(cv)) hintSize.getOrElse(footerRows())
           else footerRows()
         }
-        // an eager-size checkpoint is read on the driver, with no Spark job
-        val eager = cpRows < lazyThreshold
-        if (withFiles && !eager && (classic || v2SidecarParts.nonEmpty)) {
+        if (withFiles && cpRows >= lazyThreshold &&
+            (classic || v2SidecarParts.nonEmpty)) {
           lazyParts = Some(if (classic) parts else v2SidecarParts)
           // control plane only — columnar pruning (or the tiny manifest)
           // makes this near-free
-          Checkpoints.readResolved(spark, store, logPath, parts, withFiles = false,
-            onDriver = false)
+          Checkpoints.readResolved(spark, store, logPath, parts, withFiles = false)
         } else
-          Checkpoints.readResolved(spark, store, logPath, parts, withFiles, onDriver = eager)
+          Checkpoints.readResolved(spark, store, logPath, parts, withFiles = withFiles)
       case None => Nil
     }
     val startAfter = cpVersion.getOrElse(-1L)

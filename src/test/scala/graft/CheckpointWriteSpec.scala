@@ -1,8 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
-import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FileUtil, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
@@ -164,8 +166,7 @@ class CheckpointWriteSpec extends AnyFunSuite {
       s.txns.map { case (app, v) => SetTransaction(app, v, None) } ++ s.domains.values
 
   /** Cold loads of `log`, full and metadata-only, launch no Spark job and
-    * build an eager snapshot; the driver and Spark reads of its checkpoint
-    * return the same actions. Returns the snapshot. */
+    * build an eager snapshot. Returns the snapshot. */
   private def coldLoad(log: DeltaLog): Snapshot = {
     val (snap, n) = jobs(spark)(log.snapshot())
     assert(n == 0, "a cold load of an eager checkpointed table launched Spark jobs")
@@ -174,12 +175,6 @@ class CheckpointWriteSpec extends AnyFunSuite {
     assert(m == 0, "metadataSnapshot() launched Spark jobs")
     assert(meta.version == snap.version && meta.metadata == snap.metadata &&
       meta.protocol == snap.protocol && meta.txns == snap.txns)
-    val fs = log.logPath.getFileSystem(log.store.conf)
-    val parts = fs.listStatus(log.logPath).map(_.getPath)
-      .filter(p => LogStore.isCheckpointFile(p.getName)).toSeq
-    def read(onDriver: Boolean) = Checkpoints.readResolved(spark, log.store, log.logPath,
-      parts, withFiles = true, onDriver).toSet
-    assert(read(onDriver = true) == read(onDriver = false))
     snap
   }
 
@@ -228,4 +223,53 @@ class CheckpointWriteSpec extends AnyFunSuite {
     val pred = graft.table.Scan.parsePredicate(spark, "id <= 1")
     assert(graft.table.Scan.prunedFiles(snap, Seq(pred)).size == 1)
   }
+
+  test("a checkpoint read that fails part-way closes the part it opened") {
+    val dir = tmpDir()
+    DeltaTable.write(spark, spark.range(0, 100).toDF(), dir)
+    val t = DeltaTable.forPath(spark, dir)
+    t.createCheckpoint()
+    // a copy of the checkpoint whose column chunks are overwritten and whose
+    // footer is intact: the read opens it and fails while decoding rows
+    val root = Files.createTempDirectory("graft_cpw_corrupt_")
+    val bytes = Files.readAllBytes(
+      Paths.get(dir, "_delta_log", LogStore.checkpointFileName(t.version)))
+    val footerLen = ByteBuffer.wrap(bytes, bytes.length - 8, 4)
+      .order(ByteOrder.LITTLE_ENDIAN).getInt
+    java.util.Arrays.fill(bytes, 4, bytes.length - 8 - footerLen, 0xff.toByte)
+    Files.write(root.resolve("cp.parquet"), bytes)
+    Mount.register(spark, "cpcount", root.toString)
+    spark.sparkContext.hadoopConfiguration.set("fs.cpcount.impl",
+      classOf[CountingMountFileSystem].getName)
+    try for (vectorized <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
+      val opened = CountingMountFileSystem.opened.get
+      intercept[Exception](Checkpoints.read(spark, new Path("cpcount:/cp.parquet")))
+      assert(CountingMountFileSystem.opened.get > opened, s"vectorized=$vectorized")
+      assert(CountingMountFileSystem.closed.get == CountingMountFileSystem.opened.get,
+        s"vectorized=$vectorized: a stream of the failed read was left open")
+    } finally {
+      spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+      Mount.unregister(spark, "cpcount")
+    }
+  }
+}
+
+/** A [[MountFileSystem]] that counts the streams it opens and closes. */
+class CountingMountFileSystem extends MountFileSystem {
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    CountingMountFileSystem.opened.incrementAndGet()
+    new FSDataInputStream(super.open(f, bufferSize)) {
+      private val done = new AtomicBoolean
+      override def close(): Unit = {
+        if (done.compareAndSet(false, true)) CountingMountFileSystem.closed.incrementAndGet()
+        super.close()
+      }
+    }
+  }
+}
+
+object CountingMountFileSystem {
+  val opened = new AtomicInteger
+  val closed = new AtomicInteger
 }
