@@ -22,9 +22,9 @@ import org.json4s.jackson.JsonMethods
  * String truncation (32 chars, max gets its last char bumped so the bound
  * stays an upper bound) follows `writer/stats.rs:495-560`.
  *
- * Reading a footer is a few KB of IO — collection over the files of one
- * commit is parallelized on the driver; at fleet scale the same function is
- * a `mapPartitions` over the written-file list.
+ * Reading a footer is a few KB of IO. A write collects it in the writing
+ * task, once each file is closed (`AddFileCommitProtocol.commitTask`), so
+ * the driver reads no footer.
  */
 object ParquetStats {
 

@@ -1,37 +1,52 @@
 package graft.table
 
 import java.util.UUID
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.collection.parallel.CollectionConverters._
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+import org.apache.spark.{TaskContext, TaskKilledException}
+import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter, parquet}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.kernel.{AddFile, ParquetStats, PartitionCodec, PathCodec}
 
 /**
- * Physical file writer: stage hive-partitioned parquet with Spark's native
- * writer, harvest footer stats, move files into the table directory, and
- * return the `Add` actions. This replaces delta-rs's hand-rolled
+ * Physical file writer: writes hive-partitioned parquet with Spark's native
+ * writer straight to each file's final path in the table, collects each
+ * file's footer stats in the task that wrote it, and returns the `Add`
+ * actions. This replaces delta-rs's hand-rolled
  * `PartitionWriter`/`RecordBatchWriter` (`crates/core/src/operations/write/writer.rs:414`,
  * `writer/record_batch.rs:44`) with Spark's distributed, codegen'd parquet
- * sink — stats collection stays footer-based like `writer/stats.rs:82-130`.
+ * sink — stats stay footer-based like `writer/stats.rs:82-130`. The log is
+ * the only commit point: a file that no commit names is invisible to
+ * readers, so [[AddFileCommitProtocol]] places files where they will live.
  */
 object DeltaWriter {
 
   /** Hive path-name escaping — delegated to Spark's own implementation so
     * the unescape is the EXACT inverse of what FileFormatWriter wrote into
-    * the staging dirs (a hand-maintained copy could silently diverge on an
+    * the partition dirs (a hand-maintained copy could silently diverge on an
     * edge character; partition VALUES always come from the log on read, so
-    * only staged-dir parsing and dest-dir naming flow through here). */
+    * only written-dir parsing and dest-dir naming flow through here). */
   def unescapePathName(s: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(s)
 
   /** Write `df` as parquet data files of the table; returns Add actions with
-    * relative paths, partition values, and footer-derived stats. Does NOT
-    * commit. */
+    * relative paths, partition values, and footer-derived stats, in task
+    * order. Does NOT commit. */
   def writeFiles(
       spark: SparkSession,
       tablePath: Path,
@@ -52,9 +67,6 @@ object DeltaWriter {
           partitionColumns.map(c => nm.getOrElse(c, c)))
       } else (df, partitionColumns)
 
-    val fs = tablePath.getFileSystem(spark.sessionState.newHadoopConf())
-    val staging = new Path(tablePath, s".tmp_write_${UUID.randomUUID().toString.take(12)}")
-
     val toWrite =
       if (optimizeWrite && physPartCols.nonEmpty)
         dfPhys.repartition(physPartCols.map(quotedCol): _*)
@@ -62,76 +74,10 @@ object DeltaWriter {
 
     // honor the table's compression property (delta-spark's knob; the
     // reference exposes the same through WriterProperties, python
-    // writer.py) — falls back to Spark's session codec (snappy). Hoisted so
-    // the targetFileSize RESPLIT rewrite below uses the same codec.
-    val codec = meta.flatMap(
-      _.configuration.get("delta.parquet.compression.codec")).map(_.trim)
-    try withMicrosTimestamps(spark) {
-      val writer0 = toWrite.write.mode("overwrite")
-      val writer = codec.fold(writer0)(c => writer0.option("compression", c))
-      (if (physPartCols.nonEmpty) writer.partitionBy(physPartCols: _*) else writer)
-        .parquet(staging.toString)
-    } catch {
-      case e: Throwable =>
-        // ANY write failure must reclaim the staging dir (a partial staged
-        // copy of the data would otherwise accumulate inside the table path
-        // — VACUUM skips hidden dirs). Constraint-marker failures
-        // (Validation.MARKER raise_error guards evaluated during this
-        // write) additionally surface as the library's exception.
-        // Best-effort cleanup: a delete that ALSO fails (same outage that
-        // killed the write) must not mask the root cause or skip the
-        // constraint-exception mapping below. An interrupt (job
-        // cancellation) restores the thread's flag instead of vanishing;
-        // ordinary failures log the leaked path (VACUUM skips hidden dirs,
-        // so nothing else will ever report it).
-        try fs.delete(staging, true) catch {
-          case ie: InterruptedException =>
-            Thread.currentThread().interrupt()
-            e.addSuppressed(ie)
-          case scala.util.control.NonFatal(e2) =>
-            DeltaTable.logger.warn(s"staging cleanup failed for $staging", e2)
-            // attached to the thrown exception like the post-write twin
-            // below: callers capturing it see the leaked path too
-            e.addSuppressed(e2)
-        }
-        var t: Throwable = e
-        while (t != null) {
-          val m = t.getMessage
-          if (m != null && m.contains(graft.ops.Validation.MARKER)) {
-            throw new graft.ops.ConstraintViolationException(
-              m.substring(m.indexOf(graft.ops.Validation.MARKER)))
-          }
-          t = t.getCause
-        }
-        throw e
-    }
-
-    // Everything from here to the commit-ready Adds must clean the staging
-    // dir on failure — a throw mid-walk/stats/resplit/move would otherwise
-    // leak a full staged copy of the data inside the table path
-    try {
-    // Collect written part-files (recursive; partition dirs in between).
-    // The listing's FileStatus already carries each file's length — keep it
-    // so the targetFileSize split decision below costs zero extra HEADs.
-    val files = scala.collection.mutable.ArrayBuffer[(Path, Seq[(String, String)], Long)]()
-    def walk(dir: Path, parts: Seq[(String, String)]): Unit = {
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) {
-          val eq = name.indexOf('=')
-          if (eq > 0) {
-            val k = unescapePathName(name.substring(0, eq))
-            val v = unescapePathName(name.substring(eq + 1))
-            walk(st.getPath, parts :+ (k -> v))
-          } else walk(st.getPath, parts)
-        } else if (name.startsWith("part-") && name.endsWith(".parquet")) {
-          files += ((st.getPath, parts, st.getLen))
-        }
-      }
-    }
-    walk(staging, Nil)
-
-    val conf = spark.sessionState.newHadoopConf()
+    // writer.py) — falls back to Spark's session codec (snappy). The
+    // targetFileSize resplit below writes with the same options.
+    val options = meta.flatMap(_.configuration.get("delta.parquet.compression.codec"))
+      .map(c => Map("compression" -> c.trim)).getOrElse(Map.empty[String, String])
     val dataSchema = StructType(dfPhys.schema.filterNot(f => physPartCols.contains(f.name)))
 
     // delta.dataSkippingStatsColumns: an explicit stats-column list that
@@ -170,149 +116,103 @@ object DeltaWriter {
       }
     }
 
-    // delta.targetFileSize: resplit staged files that came out oversized.
-    // Only the oversized data pays the extra read/write, and bytes-per-row
-    // is exact (taken from the staged file itself) rather than a pre-write
-    // guess — the reference sizes files while streaming the write
-    // (operations/mod.rs:598-609, write/writer.rs:317).
-    val targetSize = meta.flatMap(_.configuration.get("delta.targetFileSize"))
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption).filter(_ > 0)
-    val finalFiles: Seq[(Path, Seq[(String, String)])] = targetSize match {
-      case None => files.toSeq.map { case (p, parts, _) => (p, parts) }
-      case Some(tgt) =>
-        // overflow-safe 1.5x threshold: `tgt * 3 / 2` wraps negative for a
-        // targetFileSize above Long.MaxValue/3, classifying EVERY staged
-        // file as oversized and doubling the write's IO for nothing
-        val threshold =
-          if (tgt > Long.MaxValue / 3 * 2) Long.MaxValue else tgt / 2 * 3
-        val (overL, okL) = files.toSeq.partition(_._3 > threshold)
-        val ok = okL.map { case (p, parts, _) => (p, parts) }
-        val resplit = overL.zipWithIndex.flatMap { case ((p, parts, len), i) =>
-          val (rows, _) = ParquetStats.collect(conf, p, dataSchema, 0)
-          val chunks = math.max(2L, (len + tgt - 1) / tgt)
-          val perFile = math.max(1L, (rows + chunks - 1) / chunks)
-          val sub = new Path(staging, s"resplit_$i")
-          withMicrosTimestamps(spark) {
-            // glob-escaped: a table path with [] {} * ? would make this
-            // re-read match nothing — or sibling files — instead of the
-            // staged file
-            val w0 = spark.read.schema(dataSchema)
-              .parquet(PathCodec.globEscape(p.toString))
-              .write.option("maxRecordsPerFile", perFile)
-            codec.fold(w0)(c => w0.option("compression", c))
-              .mode("overwrite").parquet(sub.toString)
-          }
-          fs.delete(p, false)
-          fs.listStatus(sub).map(_.getPath)
-            .filter(q => q.getName.startsWith("part-") && q.getName.endsWith(".parquet"))
-            .sortBy(_.getName).toSeq.map(q => (q, parts))
-        }
-        ok ++ resplit
+    /** One Spark write job of `rows` under `tablePath/relDir` through
+      * [[AddFileCommitProtocol]], under its own SQL execution id so
+      * listeners and the SQL UI see it. */
+    def write(rows: DataFrame, relDir: String, partCols: Seq[String],
+        writeOptions: Map[String, String]): Seq[AddFile] = {
+      val qe = rows.queryExecution
+      val plan = qe.executedPlan
+      val resolver = qe.sparkSession.sessionState.conf.resolver
+      val partAttrs = partCols.map(c => plan.output.find(a => resolver(a.name, c)).getOrElse(
+        throw new IllegalArgumentException(s"partition column $c is not in " +
+          plan.output.map(_.name).mkString("[", ", ", "]"))))
+      val hadoopConf = qe.sparkSession.sessionState.newHadoopConf()
+      val committer = new AddFileCommitProtocol(tablePath.toString, relDir, dataSchema,
+        numIndexedCols, statsCols)
+      SQLExecution.withNewExecutionId(qe, Some("graft write")) {
+        FileFormatWriter.write(qe.sparkSession, plan, DeltaParquetFormat, committer,
+          FileFormatWriter.OutputSpec(tablePath.toString, Map.empty, plan.output),
+          hadoopConf, partAttrs, None,
+          Seq(new BasicWriteJobStatsTracker(new SerializableConfiguration(hadoopConf),
+            BasicWriteJobStatsTracker.metrics)),
+          writeOptions)
+      }
+      committer.adds
     }
 
-    val adds = finalFiles.par.map { case (src, parts) =>
-      val (_, statsJson) = ParquetStats.collect(conf, src, dataSchema, numIndexedCols, statsCols)
-      val partDirs = parts.map { case (k, v) =>
-        s"${escapePathName(k)}=${escapePathName(v)}"
+    val adds =
+      try write(toWrite, pathPrefix, physPartCols, options)
+      catch {
+        case e: Throwable =>
+          // constraint-marker failures (Validation.MARKER raise_error guards
+          // evaluated during this write) surface as the library's exception
+          var t: Throwable = e
+          while (t != null) {
+            val m = t.getMessage
+            if (m != null && m.contains(graft.ops.Validation.MARKER)) {
+              throw new graft.ops.ConstraintViolationException(
+                m.substring(m.indexOf(graft.ops.Validation.MARKER)))
+            }
+            t = t.getCause
+          }
+          throw e
       }
-      val relDir = (Seq(pathPrefix).filter(_.nonEmpty) ++ partDirs).mkString("/")
-      val relPath = if (relDir.isEmpty) src.getName else s"$relDir/${src.getName}"
-      val dest = new Path(tablePath, relPath)
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(src, dest))
-        throw new IllegalStateException(s"failed to move $src -> $dest")
-      val st = fs.getFileStatus(dest)
-      val partValues: Map[String, String] = parts.map { case (k, v) =>
-        k -> (if (v == PartitionCodec.HIVE_DEFAULT) null else v)
-      }.toMap
-      AddFile(
-        // the log records paths as percent-encoded relative URLs
-        path = graft.kernel.PathCodec.encode(relPath),
-        partitionValues = partValues,
-        size = st.getLen,
-        modificationTime = st.getModificationTime,
-        dataChange = true,
-        stats = Some(statsJson))
-    }.seq
 
-    fs.delete(staging, true)
-    adds
-    } catch {
-      case e: Throwable =>
-        try fs.delete(staging, true)
-        catch {
-          // preserve a cancellation's interrupt flag (same hardening as the
-          // write-phase catch above) — swallowing it here made the
-          // cancellation vanish into an ordinary-looking failure
-          case ie: InterruptedException =>
-            Thread.currentThread().interrupt()
-            e.addSuppressed(ie)
-          case ce: Exception =>
-            // same outage usually kills the delete too: report the leaked
-            // staging dir (VACUUM skips hidden dirs, nothing else will)
-            DeltaTable.logger.warn(s"failed to clean staging dir $staging", ce)
-            e.addSuppressed(ce)
-        }
-        throw e
+    // delta.targetFileSize: resplit written files that came out oversized.
+    // Only the oversized data pays the extra read/write, and rows-per-file
+    // is exact (the file's own collected row count) rather than a pre-write
+    // guess — the reference sizes files while streaming the write
+    // (operations/mod.rs:598-609, write/writer.rs:317). A failure part-way
+    // leaves uncommitted files behind, which VACUUM reclaims.
+    val targetSize = meta.flatMap(_.configuration.get("delta.targetFileSize"))
+      .flatMap(s => scala.util.Try(s.trim.toLong).toOption).filter(_ > 0)
+    targetSize.fold(adds) { tgt =>
+      // overflow-safe 1.5x threshold: `tgt * 3 / 2` wraps negative for a
+      // targetFileSize above Long.MaxValue/3, classifying EVERY written
+      // file as oversized and doubling the write's IO for nothing
+      val threshold = if (tgt > Long.MaxValue / 3 * 2) Long.MaxValue else tgt / 2 * 3
+      val fs = tablePath.getFileSystem(spark.sessionState.newHadoopConf())
+      adds.filter(_.size <= threshold) ++ adds.filter(_.size > threshold).flatMap { a =>
+        val chunks = math.max(2L, (a.size + tgt - 1) / tgt)
+        val perFile = math.max(1L, (a.numRecords.get + chunks - 1) / chunks)
+        val file = PathCodec.resolve(tablePath, a.path)
+        val rel = PathCodec.decode(a.path)
+        // glob-escaped: a table path with [] {} * ? would make this
+        // re-read match nothing — or sibling files — instead of the file
+        val split = write(
+          spark.read.schema(dataSchema).format("parquet").load(PathCodec.globEscape(file.toString)),
+          rel.take(math.max(0, rel.lastIndexOf('/'))), Nil,
+          options + ("maxRecordsPerFile" -> perFile.toString))
+        fs.delete(file, false)
+        split
+      }
     }
   }
 
-  /** Delta requires µs timestamps in parquet (normalize_for_delta,
-    * kernel/schema/cast/mod.rs:325); INT96 would also break footer stats.
-    * VARIANT columns must land as the PLAIN spec layout
+  /** Spark's parquet format, writing what Delta requires whatever the
+    * session says. Delta requires µs timestamps in parquet
+    * (normalize_for_delta, kernel/schema/cast/mod.rs:325); INT96 would also
+    * break footer stats. VARIANT columns must land as the PLAIN spec layout
     * struct<value, metadata> — Spark 4's default shredded + logical-type
     * annotated output is the separate variantShredding-preview feature, and
     * under our 3/7 `variantType` protocol it is unreadable by plain-variant
     * readers (pyarrow 16 rejects the footer's unknown LogicalType outright;
-    * CrossLangSpec guards this). These knobs are session-level (no per-write
-    * parquet option exists), so scope the overrides to each write and
-    * restore the user's values after. */
-  private val confScopeLock = new Object
-  private val confScopes =
-    scala.collection.mutable.Map.empty[SparkSession, (Int, Seq[(String, Option[String])])]
-  private val ConfOverrides = Seq(
-    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
-    // pinned for every write (not just variant schemas): shredding-off is
-    // the spec-plain output and a no-op for non-variant data, and a single
-    // constant override set makes the scope safely reference-countable
-    "spark.sql.variant.writeShredding.enabled" -> "false",
-    "spark.sql.variant.inferShreddingSchema" -> "false",
-    "spark.sql.parquet.variant.annotateLogicalType.enabled" -> "false")
+    * CrossLangSpec guards this). `ParquetOptions` and
+    * `ParquetUtils.prepareWrite` read all four keys from the conf this
+    * format hands them, so a copy of the session conf carries them and the
+    * user's session is never touched. */
+  private object DeltaParquetFormat extends parquet.ParquetFileFormat {
+    private val Pinned = Seq(
+      SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key -> "TIMESTAMP_MICROS",
+      SQLConf.VARIANT_WRITE_SHREDDING_ENABLED.key -> "false",
+      SQLConf.VARIANT_INFER_SHREDDING_SCHEMA.key -> "false",
+      SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key -> "false")
 
-  /** Reference-counted per-session conf scope: concurrent writers (e.g.
-    * OPTIMIZE's bounded bin pool, racing DML threads) share one pinned
-    * scope; the user's values are saved by the FIRST entrant and restored
-    * by the LAST exit — a per-write save/restore raced, letting one
-    * writer's restore strip the overrides while another was still
-    * planning its parquet job. */
-  private def withMicrosTimestamps[T](spark: SparkSession)(body: => T): T = {
-    confScopeLock.synchronized {
-      confScopes.get(spark) match {
-        case Some((depth, saved)) => confScopes(spark) = (depth + 1, saved)
-        case None =>
-          val saved = ConfOverrides.map { case (k, _) => k -> spark.conf.getOption(k) }
-          ConfOverrides.foreach { case (k, v) => spark.conf.set(k, v) }
-          confScopes(spark) = (1, saved)
-      }
-    }
-    try body finally confScopeLock.synchronized {
-      val (depth, saved) = confScopes(spark)
-      if (depth > 1) confScopes(spark) = (depth - 1, saved)
-      else {
-        confScopes.remove(spark)
-        // restore only keys STILL holding the pinned override: a user who
-        // set their own value mid-scope (for their own non-graft writes)
-        // must not have it silently clobbered by the first entrant's save
-        val pinned = ConfOverrides.toMap
-        saved.foreach {
-          case (k, old) if spark.conf.getOption(k).contains(pinned(k)) =>
-            old match {
-              case Some(v) => spark.conf.set(k, v)
-              case None => spark.conf.unset(k)
-            }
-          case _ => () // user changed it mid-scope — their value wins
-        }
-      }
+    override def getSqlConf(spark: SparkSession): SQLConf = {
+      val conf = super.getSqlConf(spark).clone()
+      Pinned.foreach { case (k, v) => conf.setConfString(k, v) }
+      conf
     }
   }
 
@@ -348,7 +248,7 @@ object DeltaWriter {
           throw new IllegalArgumentException(
             s"ambiguous source columns ${many.map(_.name).mkString(", ")} " +
               s"all match table column '${f.name}' case-insensitively — " +
-              "rename or drop the duplicates before writing")
+              "alias or drop the duplicates before writing")
       }
     }
     df.select(cols: _*)
@@ -431,4 +331,107 @@ object DeltaWriter {
         s"${a.simpleString} (table) vs ${b.simpleString} (data)")
     }
   }
+}
+
+/**
+ * The one commit protocol of data-file writes (delta-spark's
+ * `DelayedCommitProtocol` shape). A task writes each file at its final path
+ * `root/[relDir/]<partition dir>/<name>`, takes the file's partition values
+ * from the `k=v` segments of that directory, and once its files are closed
+ * collects their stats and status and hands the driver their finished Adds
+ * as its commit message. No file moves after it is written: the log commit
+ * that names an Add is what publishes it. An aborted or killed task attempt
+ * deletes its own files, an aborted job those of the tasks whose commit
+ * messages it had received; both are best effort, and a leftover (such as
+ * the files of a task that commits while its job is failing) is an
+ * uncommitted file for VACUUM.
+ */
+private[table] class AddFileCommitProtocol(
+    root: String,
+    relDir: String,
+    dataSchema: StructType,
+    numIndexedCols: Int,
+    statsCols: Option[Set[String]])
+  extends FileCommitProtocol with Serializable {
+
+  // task side: this attempt's name id and the relative path of each file
+  // it opened
+  @transient private var attemptId: String = _
+  @transient private var opened: ArrayBuffer[String] = _
+  // driver side: the Adds of tasks that committed, for abortJob
+  @transient private lazy val committed = new ConcurrentLinkedQueue[AddFile]()
+
+  /** The Adds of the committed job, in task order. */
+  @transient var adds: Seq[AddFile] = Nil
+
+  private def fileOf(rel: String): Path = new Path(new Path(root), new Path(null, null, rel))
+
+  private def addsOf(msg: TaskCommitMessage): Seq[AddFile] = msg.obj.asInstanceOf[Seq[AddFile]]
+
+  private def deleteQuietly(conf: Configuration, file: Path): Unit =
+    try file.getFileSystem(conf).delete(file, false) catch {
+      case NonFatal(e) => logWarning(s"could not delete uncommitted file $file", e)
+    }
+
+  override def setupJob(job: JobContext): Unit = ()
+
+  override def setupTask(task: TaskAttemptContext): Unit = {
+    // a fresh id per attempt: attempts write at final paths, so a retried or
+    // speculative attempt must not reuse the names of the one it replaces
+    attemptId = UUID.randomUUID().toString
+    opened = ArrayBuffer.empty
+  }
+
+  override def newTaskTempFile(task: TaskAttemptContext, dir: Option[String],
+      spec: FileNameSpec): String = {
+    val split = task.getTaskAttemptID.getTaskID.getId
+    val name = f"${spec.prefix}part-$split%05d-$attemptId${spec.suffix}"
+    val rel = (Seq(relDir) ++ dir :+ name).filter(_.nonEmpty).mkString("/")
+    opened += rel
+    fileOf(rel).toString
+  }
+
+  /** `_change_data/a=1/b=x%2Fy/part-…` → `a -> 1, b -> x/y`: directories
+    * without a `=` are skipped; the hive default partition is null. */
+  private def partitionValues(rel: String): Map[String, String] =
+    rel.split('/').init.filter(_.indexOf('=') > 0).map { seg =>
+      val eq = seg.indexOf('=')
+      val v = DeltaWriter.unescapePathName(seg.substring(eq + 1))
+      DeltaWriter.unescapePathName(seg.substring(0, eq)) ->
+        (if (v == PartitionCodec.HIVE_DEFAULT) null else v)
+    }.toMap
+
+  override def commitTask(task: TaskAttemptContext): TaskCommitMessage = {
+    val conf = task.getConfiguration
+    val adds = opened.toSeq.map { rel =>
+      val file = fileOf(rel)
+      val st = file.getFileSystem(conf).getFileStatus(file)
+      val (_, stats) = ParquetStats.collect(conf, file, dataSchema, numIndexedCols, statsCols)
+      AddFile(
+        // the log records paths as percent-encoded relative URLs
+        path = PathCodec.encode(rel),
+        partitionValues = partitionValues(rel),
+        size = st.getLen,
+        modificationTime = st.getModificationTime,
+        dataChange = true,
+        stats = Some(stats))
+    }
+    // a task killed because its job failed must not commit: the driver no
+    // longer takes its message, so abortJob could not reach its files. The
+    // throw sends it through abortTask instead.
+    if (Option(TaskContext.get()).exists(_.isInterrupted()))
+      throw new TaskKilledException("killed before its commit")
+    new TaskCommitMessage(adds)
+  }
+
+  override def abortTask(task: TaskAttemptContext): Unit =
+    Option(opened).foreach(_.foreach(rel => deleteQuietly(task.getConfiguration, fileOf(rel))))
+
+  override def onTaskCommit(msg: TaskCommitMessage): Unit = committed.addAll(addsOf(msg).asJava)
+
+  override def commitJob(job: JobContext, msgs: Seq[TaskCommitMessage]): Unit =
+    adds = msgs.flatMap(addsOf)
+
+  override def abortJob(job: JobContext): Unit =
+    committed.forEach(a => deleteQuietly(job.getConfiguration, PathCodec.resolve(new Path(root), a.path)))
 }

@@ -103,8 +103,8 @@ class Round16ScaleSpec extends AnyFunSuite {
     val heap0 = usedHeap()
     val tLoad0 = System.nanoTime()
     val t = DeltaTable.forPath(spark, dir)
-    val loadSec = (System.nanoTime() - tLoad0) / 1e9
     val snap = t.snapshot
+    val loadSec = (System.nanoTime() - tLoad0) / 1e9
     assert(snap.version == v)
     assert(snap.lazyIndex.isDefined,
       s"a $n-Add snapshot must take the lazy path (threshold 500k)")

@@ -213,19 +213,6 @@ class Round6Spec extends AnyFunSuite {
     assert(oneSided.getMessage.contains("together"))
   }
 
-  test("failed staged write leaves no .tmp_write_ dir behind") {
-    import spark.implicits._
-    val dir = tmpDir()
-    DeltaTable.write(spark, Seq(1L).toDF("n"), dir,
-      configuration = Map("delta.constraints.pos" -> "n > 0"))
-    intercept[graft.ops.ConstraintViolationException] {
-      DeltaTable.write(spark, Seq(-5L).toDF("n"), dir, mode = "append")
-    }
-    val leftovers = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith(".tmp_write_"))
-    assert(leftovers.isEmpty, s"staging leaked: ${leftovers.mkString(", ")}")
-  }
-
   // ----------------------------------------------- ops-review regressions
 
   test("MERGE with an OR condition must not early-prune either disjunct") {
