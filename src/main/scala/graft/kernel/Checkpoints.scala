@@ -375,7 +375,7 @@ object Checkpoints {
     // exact row count for the hint: footer metadata of the written parts
     // (parts include the control rows, so no adjustment needed on that leg)
     val size = knownFileRows.map(_ + controlRows.size).getOrElse(
-      destFiles.map(p => ParquetStats.collect(store.conf, p, StructType(Nil), 0)._1).sum)
+      destFiles.map(p => ParquetStats.rowCount(store.conf, p)).sum)
     val partsField = if (destFiles.length > 1) s""","parts":${destFiles.length}""" else ""
     writeHint(fs, logPath,
       s"""{"version":${snapshot.version},"size":$size$partsField}""")
@@ -477,15 +477,15 @@ object Checkpoints {
       manifestActions.iterator.map(ActionCodec.toJson))
 
     val size = knownFileRows.getOrElse(
-      sidecars.map(s => ParquetStats.collect(store.conf,
-        new Path(new Path(logPath, "_sidecars"), s.path), StructType(Nil), 0)._1).sum) +
+      sidecars.map(s => ParquetStats.rowCount(store.conf,
+        new Path(new Path(logPath, "_sidecars"), s.path))).sum) +
       (manifestActions.size - sidecars.size)
     writeHint(fs, logPath, s"""{"version":${snapshot.version},"size":$size}""")
   }
 
   /** Footer-only row count of one checkpoint part (KBs of IO). */
   def partRowCount(store: LogStore, part: Path): Long =
-    ParquetStats.collect(store.conf, part, StructType(Nil), 0)._1
+    ParquetStats.rowCount(store.conf, part)
 
   /** Sidecar parquet paths referenced by a V2 manifest — the ONE place that
     * knows manifests come as json lines or parquet (PROTOCOL.md allows

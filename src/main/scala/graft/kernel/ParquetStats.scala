@@ -2,8 +2,10 @@ package graft.kernel
 
 import java.time.{Instant, LocalDate}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -75,19 +77,27 @@ object ParquetStats {
     None
   }
 
-  /** Row count + stats JSON for one parquet data file. `statsCols`, when
-    * set, is the exact (physical-name) column set to collect stats for —
-    * the table's `delta.dataSkippingStatsColumns` list — and takes
-    * precedence over the positional `numIndexedCols` prefix (reference:
-    * crates/core/src/operations/mod.rs:556-592). Columns outside the set
-    * simply have no stats entries; pruning fails open on them. */
+  /** Row count from a parquet footer alone (checkpoint parts, sidecars). */
+  def rowCount(conf: Configuration, file: Path): Long = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum finally reader.close()
+  }
+
+  /** Row count + stats JSON for one parquet data file, opened through the
+    * caller's status of it so the read costs no further status call.
+    * `statsCols`, when set, is the exact (physical-name) column set to
+    * collect stats for — the table's `delta.dataSkippingStatsColumns`
+    * list — and takes precedence over the positional `numIndexedCols`
+    * prefix (reference: crates/core/src/operations/mod.rs:556-592).
+    * Columns outside the set simply have no stats entries; pruning fails
+    * open on them. */
   def collect(
       conf: Configuration,
-      file: Path,
+      file: FileStatus,
       schema: StructType,
       numIndexedCols: Int = 32,
       statsCols: Option[Set[String]] = None): (Long, String) = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
     try {
       val footer = reader.getFooter
       val blocks = footer.getBlocks

@@ -71,11 +71,15 @@ case class Snapshot(
     case _ => allFiles.map(_.size).sum
   }
 
-  /** Approximate row count from per-file stats (python/deltalake/table.py:584-604),
-    * net of deletion-vector cardinalities. Distributed on lazy snapshots. */
-  def approxNumRecords: Option[Long] = lazyIndex match {
+  /** Live row count from per-file stats (python/deltalake/table.py:584-604).
+    * `Some(n)` is exact: every live Add carries `numRecords`, and the rows
+    * its deletion vector deletes (`cardinality`) are subtracted. `None`
+    * means some live Add has no `numRecords`. SQL answers an unfiltered
+    * `count(*)` with it ([[graft.sources.GraftScanInlining]]). Computed once
+    * per snapshot, on lazy snapshots by one pass over the Add index. */
+  lazy val approxNumRecords: Option[Long] = lazyIndex match {
     case Some(idx) if !idx.isMaterialized =>
-      val (nFiles, _, rows, dvCard) = idx.statsSummary()
+      val (_, _, rows, dvCard) = idx.statsSummary()
       rows.map(_ - dvCard)
     case _ =>
       val counts = allFiles.flatMap(_.numRecords)

@@ -3,7 +3,7 @@ package graft.ops
 import scala.collection.mutable
 import scala.collection.parallel.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
@@ -678,7 +678,7 @@ object ConvertToDeltaOp {
     }
     val dataSchema = StructType(fullSchema.filterNot(f => partCols.contains(f.name)))
 
-    val files = mutable.ArrayBuffer[(Path, Seq[(String, String)])]()
+    val files = mutable.ArrayBuffer[(FileStatus, Seq[(String, String)])]()
     def walk(dir: Path, parts: Seq[(String, String)]): Unit = {
       fs.listStatus(dir).foreach { st =>
         val name = st.getPath.getName
@@ -689,7 +689,7 @@ object ConvertToDeltaOp {
               graft.table.DeltaWriter.unescapePathName(name.drop(eq + 1))))
           else walk(st.getPath, parts)
         } else if (st.isFile && name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith("."))
-          files += ((st.getPath, parts))
+          files += ((st, parts))
       }
     }
     walk(tablePath, Nil)
@@ -706,7 +706,11 @@ object ConvertToDeltaOp {
     // never matched its relative listing keys: live data files aged into
     // deletion candidates. Same qualification rule VacuumOp applies.
     val tableUri = fs.makeQualified(tablePath).toUri
-    val fileList = files.toSeq.map { case (p, parts) => (p.toString, parts) }
+    // each file's listing status travels with it: its size and mtime go
+    // into the Add, and the footer read opens it without another status call
+    val fileList = files.toSeq.map { case (st, parts) =>
+      (st.getPath.toString, st.getLen, st.getModificationTime, parts)
+    }
     val adds: Seq[AddFile] =
       if (fileList.isEmpty) Nil
       else spark.sparkContext
@@ -716,10 +720,10 @@ object ConvertToDeltaOp {
           val conf = serConf.value
           val ds = org.apache.spark.sql.types.DataType.fromJson(dataSchemaJson)
             .asInstanceOf[StructType]
-          it.map { case (pStr, parts) =>
+          it.map { case (pStr, len, mtime, parts) =>
             val p = new Path(pStr)
-            val (_, stats) = ParquetStats.collect(conf, p, ds)
-            val st = p.getFileSystem(conf).getFileStatus(p)
+            val st = new FileStatus(len, false, 0, 0L, mtime, p)
+            val (_, stats) = ParquetStats.collect(conf, st, ds)
             val rel = tableUri.relativize(p.toUri).getPath
             require(!rel.startsWith("/"),
               s"convert_to_delta: could not relativize $pStr against " +

@@ -2,9 +2,11 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal, NamedExpression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
 import org.apache.spark.sql.catalyst.planning.ScanOperation
-import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, DeleteFromTable, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.read.{Batch, Scan => V2Scan}
 import org.apache.spark.sql.execution.datasources.{DataSourceUtils, LogicalRelation}
@@ -61,12 +63,23 @@ case class GraftScan(snapshot: Snapshot, requiredSchema: StructType) extends V2S
  * has pushed the filters and pruned the columns of the scan it replaces.
  * That is also after Spark's `PartitionPruning` batch, so the inlined scan
  * gets no dynamic partition pruning filter.
+ *
+ * A global row count over an unfiltered leaf (`count(*)`, `count(1)`,
+ * `Dataset.count()`) is answered from the log instead (delta-rs
+ * `DeltaTable.count()`, `python/deltalake/table.py:584-604`): the aggregate
+ * becomes a one-row `LocalRelation` holding the leaf snapshot's
+ * [[Snapshot.approxNumRecords]], which Spark plans as a `LocalTableScanExec`
+ * that runs no job. It needs every live Add to carry `numRecords`; a filter,
+ * a grouping key, any other aggregate or a file without stats falls through
+ * to the scan.
  */
 object GraftScanInlining extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
     case _: DeleteFromTable => plan // its relation names the target, not a read
     case _ => plan.transformWithSubqueries {
+      case agg @ LogRowCount(n) =>
+        LocalRelation(agg.output, Seq(InternalRow.fromSeq(agg.output.map(_ => n))))
       case op @ ScanOperation(_, _, filters, leaf @ GraftLeaf(snap)) =>
         val read = inline(leaf, snap, filters)
         op.transformUp { case l if l eq leaf => read }
@@ -84,6 +97,24 @@ object GraftScanInlining extends Rule[LogicalPlan] {
         case _ => None
       }
       case _ => None
+    }
+  }
+
+  /** The live row count answering `agg`: every output is a plain `count`
+    * of a non-null literal, with no grouping, over a graft leaf under no
+    * filter, and the leaf's snapshot knows every file's row count. */
+  private object LogRowCount {
+    def unapply(agg: Aggregate): Option[Long] = agg.child match {
+      case ScanOperation(_, Nil, Nil, GraftLeaf(snap))
+          if agg.groupingExpressions.isEmpty && agg.aggregateExpressions.forall(isRowCount) =>
+        snap.approxNumRecords
+      case _ => None
+    }
+
+    private def isRowCount(e: NamedExpression): Boolean = e match {
+      case Alias(AggregateExpression(Count(Seq(l: Literal)), _, false, None, _), _) =>
+        l.value != null
+      case _ => false
     }
   }
 

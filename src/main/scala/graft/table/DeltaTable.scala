@@ -149,7 +149,10 @@ class DeltaTable private[graft] (
   def history(limit: Option[Int] = None): Seq[(Long, Long, Option[CommitInfo])] =
     deltaLog.history(limit)
 
-  /** Stats-only row count (python/deltalake/table.py:584-604). */
+  /** Live row count from the log's per-file stats, without a data scan
+    * (python/deltalake/table.py:584-604). `Some(n)` is exact, net of
+    * deletion vectors; `None` when some live file has no `numRecords`.
+    * SQL `count(*)` over the table uses the same sum. */
   def approxCount: Option[Long] = snapshot.approxNumRecords
 
   /** Per-file row keep-masks for files carrying deletion vectors

@@ -406,7 +406,7 @@ private[table] class AddFileCommitProtocol(
     val adds = opened.toSeq.map { rel =>
       val file = fileOf(rel)
       val st = file.getFileSystem(conf).getFileStatus(file)
-      val (_, stats) = ParquetStats.collect(conf, file, dataSchema, numIndexedCols, statsCols)
+      val (_, stats) = ParquetStats.collect(conf, st, dataSchema, numIndexedCols, statsCols)
       AddFile(
         // the log records paths as percent-encoded relative URLs
         path = PathCodec.encode(rel),

@@ -6,7 +6,7 @@ import java.nio.file.attribute.FileTime
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, RowDataSourceScanExec, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
@@ -185,6 +185,80 @@ class CatalogReadSpec extends AnyFunSuite {
     val plan = executedNodes(df.queryExecution.executedPlan)
     assert(plan.count(_.isInstanceOf[BroadcastHashJoinExec]) == 2, plan.mkString("\n"))
     assert(!plan.exists(_.isInstanceOf[SortMergeJoinExec]), plan.mkString("\n"))
+  }
+
+  /** `q` is answered from the log: `expected` rows, no Spark job, a local
+    * table scan and no file scan. */
+  private def assertLogCount(q: DataFrame, expected: Long): Unit = {
+    val (n, jobs) = SnapshotCacheSpec.jobs(spark)(q.head().getLong(0))
+    val plan = executedNodes(q.queryExecution.executedPlan)
+    assert(n == expected)
+    assert(jobs == 0, plan.mkString("\n"))
+    assert(plan.exists(_.isInstanceOf[LocalTableScanExec]), plan.mkString("\n"))
+    assert(!plan.exists(_.isInstanceOf[FileSourceScanExec]), plan.mkString("\n"))
+  }
+
+  test("an unfiltered count is answered from the log's record counts") {
+    val part = api("part").count()
+    assert(part == 6)
+    assertLogCount(sql("SELECT count(*) FROM rd.s.part"), part)
+    assertLogCount(sql("SELECT count(1) AS n FROM rd.s.part"), part)
+    val twice = sql("SELECT count(*), count(1) FROM rd.s.part").head()
+    assert(twice.getLong(0) == part && twice.getLong(1) == part)
+    val (n, jobs) = SnapshotCacheSpec.jobs(spark)(spark.table("rd.s.part").count())
+    assert(n == part && jobs == 0)
+
+    // deletion vectors: numRecords net of each DV's cardinality
+    assert(api("dv").count() == 34)
+    assertLogCount(sql("SELECT count(*) FROM rd.s.dv"), 34)
+
+    // time travel: the count of the pinned version
+    val tt = DeltaTable.forPath(spark, s"$warehouse/s/tt")
+    assert(tt.asOfVersion(1).count() == 2 && tt.toDF.count() == 3)
+    assertLogCount(sql("SELECT count(*) FROM rd.s.tt VERSION AS OF 1"), 2)
+    assertLogCount(sql("SELECT count(*) FROM rd.s.tt"), 3)
+
+    // format("graft-delta") relations take the same rule
+    val (m, loadJobs) = SnapshotCacheSpec.jobs(spark)(
+      spark.read.format("graft-delta").load(s"$warehouse/s/part").count())
+    assert(m == part && loadJobs == 0)
+
+    sql("CREATE TABLE rd.s.none (id BIGINT)")
+    assert(api("none").count() == 0)
+    assertLogCount(sql("SELECT count(*) FROM rd.s.none"), 0)
+
+    // a count in a subquery, under a scanning outer query
+    assertParity(sql("SELECT id FROM rd.s.part WHERE id > (SELECT count(*) FROM rd.s.tt)"),
+      api("part").where("id > 3").select("id"))
+  }
+
+  test("counts the log cannot answer still scan") {
+    sql("CREATE NAMESPACE IF NOT EXISTS rd.s")
+    sql("CREATE TABLE rd.s.nv (id BIGINT, v STRING, p INT) PARTITIONED BY (p)")
+    sql("INSERT INTO rd.s.nv VALUES (1, 'a', 1), (2, NULL, 1), (3, 'b', 2), (4, 'a', 2)")
+    sql("INSERT INTO rd.s.nv VALUES (5, NULL, 2), (6, 'c', 3)")
+    api("nv").createOrReplaceTempView("lib_nv")
+    Seq(
+      "SELECT count(v) FROM %s",
+      "SELECT count(DISTINCT v) FROM %s",
+      "SELECT count(NULL) FROM %s",
+      "SELECT p, count(*) FROM %s GROUP BY p",
+      "SELECT count(*) FROM %s WHERE p = 2",
+      "SELECT count(*) FROM %s WHERE id > 2",
+      "SELECT count(*) FROM %s WHERE id + rand() / 2 > 2.7", // nondeterministic, yet id > 2
+      "SELECT count(*), max(id) FROM %s"
+    ).foreach(q => withClue(q)(assertParity(sql(q.format("rd.s.nv")), sql(q.format("lib_nv")))))
+
+    // one Add committed again without stats: the log no longer knows the count
+    val t = DeltaTable.forPath(spark, s"$warehouse/s/nv")
+    val txn = t.startTransaction()
+    txn.readWholeTable()
+    txn.commit(Seq(t.snapshot.allFiles.head.copy(stats = None, dataChange = false)),
+      graft.kernel.Operation("STRIP STATS"))
+    assertParity(sql("SELECT count(*) FROM rd.s.nv"), sql("SELECT count(*) FROM lib_nv"))
+    assert(api("nv").count() == 6)
+    t.refresh()
+    assert(t.approxCount.isEmpty)
   }
 
   test("rename into a path that held a cached table serves the moved table") {

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -78,9 +78,9 @@ class DeltaWriterSpec extends AnyFunSuite {
       val file = snap.absolutePath(a.path)
       val fileSchema = spark.read.format("parquet")
         .load(PathCodec.globEscape(file.toString)).schema
-      assert(a.stats.contains(ParquetStats.collect(conf, file, fileSchema, 32, statsCols)._2),
-        a.path)
       val st = file.getFileSystem(conf).getFileStatus(file)
+      assert(a.stats.contains(ParquetStats.collect(conf, st, fileSchema, 32, statsCols)._2),
+        a.path)
       assert(a.size == st.getLen && a.modificationTime == st.getModificationTime, a.path)
     }
   }
@@ -93,8 +93,15 @@ class DeltaWriterSpec extends AnyFunSuite {
       val odd = "a/b=c%d e"
       val rows = Seq((1L, Some("x")), (2L, None), (3L, Some(odd)), (4L, Some(odd)))
       DeltaTable.write(spark, rows.take(2).toDF("id", "p"), dir, partitionBy = Seq("p"))
+      val statusCalls = WriteProbeFileSystem.dataStatusCalls.get
       DeltaTable.write(spark, rows.drop(2).toDF("id", "p"), dir, mode = "append")
       val t = DeltaTable.forPath(spark, dir)
+      // the committer's status of each file also opens it for its stats; the
+      // other call is Spark's task stats tracker
+      val appended = t.deltaLog.readCommit(1L).count(_.isInstanceOf[AddFile])
+      assert(appended > 0)
+      assert(WriteProbeFileSystem.dataStatusCalls.get - statusCalls <= 2 * appended,
+        s"${WriteProbeFileSystem.dataStatusCalls.get - statusCalls} status calls for $appended files")
       assertParity(t)
       val byPart = t.snapshot.allFiles.groupBy(_.partitionValues("p")).view
         .mapValues(_.flatMap(_.numRecords).sum).toMap
@@ -217,10 +224,15 @@ class DeltaWriterSpec extends AnyFunSuite {
   }
 }
 
-/** A [[CountingMountFileSystem]] that counts data-file renames and staging
-  * dirs, and on request fails the create of the second write task's file,
-  * after a wait. */
+/** A [[CountingMountFileSystem]] that counts data-file renames, staging
+  * dirs and data-file status calls, and on request fails the create of the
+  * second write task's file, after a wait. */
 class WriteProbeFileSystem extends CountingMountFileSystem {
+  override def getFileStatus(f: Path): FileStatus = {
+    if (f.getName.startsWith("part-")) WriteProbeFileSystem.dataStatusCalls.incrementAndGet()
+    super.getFileStatus(f)
+  }
+
   override def rename(src: Path, dst: Path): Boolean = {
     if (!src.toString.contains("_delta_log")) WriteProbeFileSystem.dataRenames.incrementAndGet()
     super.rename(src, dst)
@@ -247,7 +259,10 @@ object WriteProbeFileSystem {
   val dataRenames = new AtomicInteger
   val stagingDirs = new AtomicInteger
   val injected = new AtomicInteger
+  val dataStatusCalls = new AtomicInteger
   val failDataCreate = new AtomicBoolean
 
-  def reset(): Unit = { dataRenames.set(0); stagingDirs.set(0); injected.set(0) }
+  def reset(): Unit = {
+    dataRenames.set(0); stagingDirs.set(0); injected.set(0); dataStatusCalls.set(0)
+  }
 }
