@@ -3,7 +3,6 @@ package graft.kernel
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Row, SparkSession}
@@ -540,8 +539,8 @@ object Checkpoints {
     * cannot land in only one path (reference scan_row.rs:225-310). */
   private def statsParsedTypeOf(spark: SparkSession, parts: Seq[Path]): Option[StructType] =
     scala.util.Try {
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(parts.head, spark.sessionState.newHadoopConf()))
+      val conf = spark.sessionState.newHadoopConf()
+      val reader = ParquetStats.open(conf, HadoopInputFile.fromPath(parts.head, conf))
       try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
         .convert(reader.getFooter.getFileMetaData.getSchema)
       finally reader.close()

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -77,9 +78,16 @@ object ParquetStats {
     None
   }
 
+  /** A reader of `file` whose read options come from `conf`.
+    * `ParquetFileReader.open(InputFile)` alone builds them from a fresh
+    * Hadoop `Configuration`, which re-reads the default resources on every
+    * open and costs more than reading the footer itself. */
+  private[graft] def open(conf: Configuration, file: HadoopInputFile): ParquetFileReader =
+    ParquetFileReader.open(file, HadoopReadOptions.builder(conf, file.getPath).build())
+
   /** Row count from a parquet footer alone (checkpoint parts, sidecars). */
   def rowCount(conf: Configuration, file: Path): Long = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val reader = open(conf, HadoopInputFile.fromPath(file, conf))
     try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum finally reader.close()
   }
 
@@ -97,7 +105,7 @@ object ParquetStats {
       schema: StructType,
       numIndexedCols: Int = 32,
       statsCols: Option[Set[String]] = None): (Long, String) = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val reader = open(conf, HadoopInputFile.fromStatus(file, conf))
     try {
       val footer = reader.getFooter
       val blocks = footer.getBlocks

@@ -55,7 +55,9 @@ case class GraftScan(snapshot: Snapshot, requiredSchema: StructType) extends V2S
  * [[graft.table.LogFileIndex]] directly — columnar parquet reads,
  * partition and data-filter pushdown, log file sizes for join selection,
  * one codegen pass — while DV masks and column mapping keep coming from
- * `Scan.readFiles`.
+ * `Scan.readFiles`. The rule leaves the filter constants as literals:
+ * it is the planner strategy [[graft.table.GraftScanPlanning]], not this
+ * rule, that turns them into codegen parameters in the physical plan.
  *
  * Registered once per session (`GraftSqlBridge.registerOptimization`) by
  * `GraftCatalog.initialize` and `GraftDeltaDataSource`'s batch read; it runs

@@ -15,7 +15,10 @@ import graft.kernel.{AddFile, ColumnMapping, DeletionVectors, Metadata, Partitio
  * pushdown, parquet row-group filtering, whole-stage codegen — everything
  * below the file list is stock Catalyst, mirroring how delta-rs layers its
  * `DeltaScan` TableProvider on DataFusion's ParquetSource
- * (`delta_datafusion/table_provider/next/mod.rs:728-768`).
+ * (`delta_datafusion/table_provider/next/mod.rs:728-768`). One exception:
+ * [[GraftScanPlanning]] plans the comparison constants of the filter and
+ * projection over the scan as codegen parameters, so the generated class
+ * is compiled once per query shape, not once per constant.
  *
  * Data files omit partition columns (Delta protocol). The index lists each
  * file under its partition row, typed from the LOG's partitionValues —
@@ -214,9 +217,12 @@ object Scan {
 
     /** `entries` as Spark's parquet relation over a [[LogFileIndex]]:
       * the data columns plus `extraData`, then the partition columns plus
-      * `extraPartition` (which each entry's row carries last). */
+      * `extraPartition` (which each entry's row carries last). Every graft
+      * relation is built here, so this registers [[GraftScanPlanning]]
+      * with the session. */
     def relation(spark: SparkSession, tablePath: String, entries: Seq[LogFileIndex.Entry],
         extraData: Seq[StructField] = Nil, extraPartition: Seq[StructField] = Nil): DataFrame = {
+      org.apache.spark.sql.GraftSqlBridge.registerStrategy(spark, GraftScanPlanning)
       val index = new LogFileIndex(spark, tablePath,
         StructType(partitionFields ++ extraPartition), entries)
       spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,

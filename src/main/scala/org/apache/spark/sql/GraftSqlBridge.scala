@@ -50,4 +50,14 @@ object GraftSqlBridge {
     }
   }
 
+  /** Adds `strategy` to the session's planner unless it is already there;
+    * extra strategies run before Spark's own. Per session, like
+    * [[registerOptimization]]. */
+  def registerStrategy(spark: SparkSession, strategy: execution.SparkStrategy): Unit = {
+    val x = spark.asInstanceOf[classic.SparkSession].experimental
+    x.synchronized {
+      if (!x.extraStrategies.contains(strategy)) x.extraStrategies :+= strategy
+    }
+  }
+
 }
